@@ -190,15 +190,15 @@ def spread_scan(
     if spread is None:
         par = spark.sparkContext.defaultParallelism
         rows, n_splits = _scan_meta(spark, path, mtime)
-        if n_splits * 2 > par:
-            spread = df  # layout already feeds the cluster (100 TB case)
-        else:
+        # the projection applies on EVERY branch, so the schema never
+        # depends on which side of the cost gate fired
+        spread = df.select(*columns) if columns else df
+        # a layout that already feeds the cluster (the 100 TB case), or
+        # too little work to pay an exchange (r17), keeps the raw scan
+        if n_splits * 2 <= par:
             n_target = min(par, rows // max(floor, 1))
-            if n_target <= n_splits or n_target < _SPREAD_MIN_WIDTH:
-                spread = df  # too little work to pay an exchange (r17)
-            else:
-                proj = df.select(*columns) if columns else df
-                spread = proj.repartition(int(n_target))
+            if n_target > n_splits and n_target >= _SPREAD_MIN_WIDTH:
+                spread = spread.repartition(int(n_target))
         cache[key] = spread
     return spread
 

@@ -18,13 +18,18 @@ from cassandra_analytics_spark.local_data import local_df
 # sign-LSH builders in operators/similarity.py (a private copy here once
 # desynchronized the two call sites one refactor at a time)
 from cassandra_analytics_spark.operators.similarity import (
+    _dim_guard,
+    assign_nearest_cells,
     cosine,
+    layout_math,
     lit_vector,
     nearest_cells_for,
-    nearest_centroid_cell,
     sample_centroids,
     sign_lsh_signature_column as _signature_column_expr,
     sign_lsh_signature_of as _signature_of,
+    spec_assignment,
+    vector_math,
+    vector_op,
 )
 
 
@@ -85,23 +90,6 @@ def build_ann_index(
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_spec")
 
 
-def _read_lsh_spec(spark: SparkSession, index_path: str) -> dict | None:
-    """The persisted spec of a sign-LSH layout, or None for pre-spec
-    (legacy) layouts."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = spark.read.parquet(f"{index_path}_spec").collect()
-    except AnalysisException:
-        return None
-    if len(rows) != 1:
-        raise ValueError(
-            f"corrupt LSH index spec at {index_path}_spec: expected exactly "
-            f"one row, found {len(rows)}"
-        )
-    return rows[0].asDict()
-
-
 def append_to_ann_index(
     df: DataFrame,
     index_path: str,
@@ -121,7 +109,7 @@ def append_to_ann_index(
     spec dim would dot against null-padded planes and land in a
     signature that the same vector would never query back."""
     spark = df.sparkSession
-    spec = _read_lsh_spec(spark, index_path)
+    spec = _read_ivf_spec_optional(spark, index_path)
     if spec is None:
         raise ValueError(
             f"{index_path!r} has no persisted spec ({index_path}_spec) — "
@@ -136,19 +124,9 @@ def append_to_ann_index(
             "of appending"
         )
     dim, num_planes, seed = spec["dim"], spec["num_planes"], spec["seed"]
-    sig = _signature_column(vec_col, dim, num_planes, seed)
-    guarded = F.when(
-        F.col(vec_col).isNull() | (F.size(F.col(vec_col)) == dim), sig
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"embedding dimension mismatch: index planes are "
-                    f"{dim}-d but found a vector of length "
-                ),
-                F.size(F.col(vec_col)).cast("string"),
-            )
-        ).cast("int")
+    guarded = _dim_guard(
+        _signature_column(vec_col, dim, num_planes, seed), F.col(vec_col),
+        dim, "index planes",
     )
     tagged = df.select(F.col(id_col), F.col(vec_col), guarded.alias("sig"))
     tagged.write.mode("append").partitionBy("sig").parquet(index_path)
@@ -190,6 +168,58 @@ def _with_layout_codes(tagged: DataFrame, vec_col: str) -> DataFrame:
     )
 
 
+def _sq8_row_stats():
+    """Per-row closed-form stats of the SQ8 codes, computed map-side ONCE
+    per row (never per pair): ``(s, m, Σu, ‖x̂‖, r)`` with u = code + 128,
+    ‖x̂‖² = s²·Σu² + 2sm·Σu + d·m² and the L2 error radius r = s·√d/2."""
+    u = F.transform(F.col(_QCODE), lambda c: c.cast("double") + F.lit(128.0))
+    su = F.aggregate(u, F.lit(0.0), lambda acc, x: acc + x)
+    suu = F.aggregate(u, F.lit(0.0), lambda acc, x: acc + x * x)
+    d = F.size(F.col(_QCODE)).cast("double")
+    s, m = F.col(_QSCALE), F.col(_QMIN)
+    nrm = F.sqrt(s * s * suu + F.lit(2.0) * s * m * su + d * m * m)
+    return s, m, su, nrm, s * F.sqrt(d) / F.lit(2.0)
+
+
+def _sq8_recon_dot(qa, sa, ma, sua, qb, sb, mb, sub, dim: int | None):
+    """x̂·ŷ = sa·sb·Σ(ua·ub) + sa·mb·Σua + sb·ma·Σub + d·ma·mb from two
+    rows' codes and :func:`_sq8_row_stats`. ``dim`` (round 15, from the
+    layout spec) gates Σ(ua·ub) to the Arrow kernel above
+    ``quantize._EXPR_MAX_DIM`` — the zip_with form is d interpreted
+    lambdas PER PAIR (the 512-d A/B measured the SQ8 arm's triggers at
+    571 s vs the kerneled PQ arm's 302 s; Spark HOFs are not
+    codegen'd). None keeps the expression."""
+    from cassandra_analytics_spark.operators.quantize import (
+        _EXPR_MAX_DIM,
+        _sq8_u_dot_udf,
+    )
+
+    if dim is not None and dim > _EXPR_MAX_DIM:
+        uu = _sq8_u_dot_udf()(qa, qb)
+    else:
+        uu = F.aggregate(
+            F.zip_with(
+                qa, qb,
+                lambda x, y: (x.cast("double") + F.lit(128.0))
+                * (y.cast("double") + F.lit(128.0)),
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+    dq = F.size(qa).cast("double")
+    return sa * sb * uu + sa * mb * sua + sb * ma * sub + dq * ma * mb
+
+
+def _sq8_margin(ra, nrma, rb, nrmb):
+    """The proven cosine error bound 2r_a/‖x̂‖ + 2r_b/‖ŷ‖ plus 1e-9 of
+    double-rounding headroom (:func:`_quantized_pairs_from_cells`)."""
+    return (
+        F.try_divide(F.lit(2.0) * ra, nrma)
+        + F.try_divide(F.lit(2.0) * rb, nrmb)
+        + F.lit(1e-9)
+    )
+
+
 def _delete_path(spark: SparkSession, path_str: str) -> None:
     """Recursively delete a filesystem path via the Hadoop FS API (works
     on any Spark-supported store, not just local disk)."""
@@ -198,58 +228,50 @@ def _delete_path(spark: SparkSession, path_str: str) -> None:
     delete_path(spark, path_str)
 
 
-def _dim_guarded(cell, vec_col: str, dim: int):
-    """Wrap a cell expression with the loud mixed-dimension guard (NULL
-    vectors allowed — they assign deterministically)."""
-    return F.when(
-        F.col(vec_col).isNull() | (F.size(F.col(vec_col)) == dim), cell
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"embedding dimension mismatch: index centroids are "
-                    f"{dim}-d but found a vector of length "
-                ),
-                F.size(F.col(vec_col)).cast("string"),
-            )
-        ).cast("int")
-    )
-
-
-def _ivf_cell_for_mode(
-    vec_col: str,
+def _assign_cells(
+    df: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    assignment: str,
-    dot_fn,
-    norm_fn,
-):
-    """The cell expression for one assignment mode — ONE definition shared
-    by build and append so the two can never pick different argmax forms
-    for the same persisted layout."""
-    dim = len(centroids[0][1])
-    if assignment == "vectorized":
+    mode: str,
+    math: str,
+    id_col: str,
+    vec_col: str,
+    passthrough: bool = False,
+    cnorms: dict[int, float] | None = None,
+) -> DataFrame:
+    """Tag ``df`` with each row's ``cell`` under one persisted assignment
+    mode — ONE definition shared by every IVF and IVF-PQ build and
+    append, so the two can never pick different argmax forms (or math)
+    for the same layout. ``mode`` is the spec's assignment: ``"expr"``
+    (float, highest-cid ties, dispatched by work to its bit-identical
+    Arrow kernel — r16 measured 4.3 s to assign 2,000 rows at k=16 ×
+    d=64 in the interpreted expression), ``"vectorized"`` (float, BLAS,
+    lowest-cid ties) or ``"custom"`` (the norm-once lowest-cid
+    assignment of ``math``). Output: ``(id_col, vec_col, cell)``, or
+    every input column plus ``cell`` with ``passthrough=True``."""
+    if mode == "custom":
+        return assign_nearest_cells(
+            df, centroids, id_col, vec_col, math=math, cell_col="cell",
+            passthrough=passthrough, cnorms=cnorms,
+        )
+    vec = F.col(vec_col)
+    if mode == "vectorized":
         from cassandra_analytics_spark.operators.similarity import (
             vectorized_cell_udf,
         )
 
         # the UDF raises on ragged batches itself
-        return vectorized_cell_udf(centroids)(F.col(vec_col))
-    if assignment == "expr":
-        # nearest_cell_auto (r16): above _CELL_EXPR_MAX_WORK multiply-
-        # adds per row the argmax expression's interpreted HOF lambdas
-        # dominate the build (measured 4.3 s to assign 2,000 rows at
-        # k=16 × d=64) and the BIT-IDENTICAL Arrow parity kernel takes
-        # over — same sims, same ties, same layout, pinned by test
-        from cassandra_analytics_spark.operators.similarity import (
-            nearest_cell_auto,
+        cell = vectorized_cell_udf(centroids)(vec)
+    elif mode == "expr":
+        dim = len(centroids[0][1])
+        cell = _dim_guard(
+            vector_op(math, "expr_cell", len(centroids) * dim)(vec, centroids),
+            vec, dim, "index centroids",
         )
-
-        return _dim_guarded(
-            nearest_cell_auto(F.col(vec_col), centroids), vec_col, dim
-        )
-    # "custom" is handled by assign_nearest_cells at the caller (it needs
-    # the whole frame for the norm-once discipline)
-    raise ValueError(f"unknown assignment mode {assignment!r}")
+    else:
+        raise ValueError(f"unknown assignment mode {mode!r}")
+    if passthrough:
+        return df.withColumn("cell", cell)
+    return df.select(F.col(id_col), vec, cell.alias("cell"))
 
 
 def build_ivf_index(
@@ -261,9 +283,7 @@ def build_ivf_index(
     seed: int = 42,
     assignment: str = "expr",
     centroids: list[tuple[int, list[float]]] | None = None,
-    dot_fn=None,
-    norm_fn=None,
-    sim_id: str | None = None,
+    math: str = "float",
     quantize: bool = False,
     train: str = "sample",
     train_sample_size: int = 20_000,
@@ -299,7 +319,7 @@ def build_ivf_index(
     corpora — on those the fit buys nothing (round-4 measurement). The
     centroid list is persisted next to the cells so a query session does
     not need the original corpus, and the index SPEC — assignment mode,
-    custom-sim identifier, dimension — is persisted at
+    scoring math, dimension — is persisted at
     ``{index_path}_spec`` so :func:`append_to_ivf_index` can refuse a
     mismatched extension instead of silently splitting the layout
     (round-9 ADVICE: the modes disagree on exact-tie direction, so the
@@ -315,12 +335,11 @@ def build_ivf_index(
     measured 1.5 MiB task binaries at k=256, PERF.md round 8); ties go
     to the LOWEST cid (the repo convention).
 
-    ``dot_fn``/``norm_fn`` switch assignment to the CUSTOM-math path
-    (norm-once :func:`similarity.assign_nearest_cells`, lowest-cid ties)
-    — e.g. the portable decimal cosine the oracle-exact SemDeDup queries
-    use. Custom math cannot be serialized into the spec, so callers MUST
-    pass ``sim_id``, a stable identifier for the (dot_fn, norm_fn) pair;
-    appends must present the same identifier with the same functions.
+    ``math="decimal12"`` switches assignment to the portable decimal
+    cosine the oracle-exact SemDeDup queries use (norm-once
+    :func:`similarity.assign_nearest_cells`, lowest-cid ties; no
+    vectorized path). The math is pinned in the spec, so appends and
+    reads follow it (:func:`similarity.spec_math`).
     """
     if assignment not in ("expr", "vectorized"):
         raise ValueError(
@@ -340,31 +359,10 @@ def build_ivf_index(
             f"quantize=True reserves the layout columns "
             f"{(_QCODE, _QMIN, _QSCALE)} — rename id_col/vec_col"
         )
-    custom = dot_fn is not None or norm_fn is not None
-    if custom:
-        if assignment == "vectorized":
-            # custom math runs through the EXPRESSION-based norm-once
-            # path — silently downgrading a requested vectorized build
-            # would surprise exactly the large-codebook callers who
-            # asked for it (round-9 hostile read of this round's code)
-            raise ValueError(
-                "custom dot_fn/norm_fn have no vectorized path — drop "
-                "assignment='vectorized' (the custom expression path is "
-                "used) or drop the custom math"
-            )
-        if sim_id is None:
-            raise ValueError(
-                "build_ivf_index with custom dot_fn/norm_fn needs sim_id= — "
-                "a stable identifier for the similarity math; appends must "
-                "present the same identifier (the spec cannot serialize "
-                "Python functions)"
-            )
-        assignment = "custom"
-    elif sim_id is not None:
-        raise ValueError(
-            "sim_id is only meaningful with custom dot_fn/norm_fn — "
-            "the built-in modes are identified by the assignment name"
-        )
+    # decimal12 runs the norm-once path — silently downgrading a
+    # requested vectorized build would surprise exactly the
+    # large-codebook callers who asked for it (round-9 hostile read)
+    mode, sim_id = spec_assignment(math, assignment)
     if centroids is None:
         if train == "kmeans":
             from cassandra_analytics_spark.operators.similarity import (
@@ -411,22 +409,7 @@ def build_ivf_index(
             tagged = _with_layout_codes(tagged, vec_col)
         tagged.write.mode("overwrite").parquet(index_path)
     else:
-        if assignment == "custom":
-            from cassandra_analytics_spark.operators.similarity import (
-                assign_nearest_cells,
-            )
-
-            tagged = assign_nearest_cells(
-                df, centroids, id_col, vec_col, dot_fn, norm_fn,
-                cell_col="cell",
-            )
-        else:
-            cell = _ivf_cell_for_mode(
-                vec_col, centroids, assignment, None, None
-            )
-            tagged = df.select(
-                F.col(id_col), F.col(vec_col), cell.alias("cell")
-            )
+        tagged = _assign_cells(df, centroids, mode, math, id_col, vec_col)
         if quantize:
             tagged = _with_layout_codes(tagged, vec_col)
         tagged.write.mode("overwrite").partitionBy("cell").parquet(index_path)
@@ -438,15 +421,26 @@ def build_ivf_index(
     dim = len(centroids[0][1]) if centroids else None
     local_df(
         spark,
-        [("ivf-v1", assignment, sim_id, dim, len(centroids), seed, quantize)],
+        [("ivf-v1", mode, sim_id, dim, len(centroids), seed, quantize)],
         _IVF_SPEC_SCHEMA,
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_spec")
     return centroids
 
 
+def read_centroids(
+    spark: SparkSession, index_path: str
+) -> list[tuple[int, list[float]]]:
+    """The coarse centroid table persisted beside an IVF / IVF-PQ
+    layout, sorted by cell id (bounded metadata collect)."""
+    return sorted(
+        (int(r.cid), [float(x) for x in r.centroid])
+        for r in spark.read.parquet(f"{index_path}_centroids").collect()
+    )
+
+
 def _read_ivf_spec_optional(spark: SparkSession, index_path: str) -> dict | None:
-    """The persisted IVF spec, or None for pre-spec (legacy) layouts.
-    A PRESENT-but-corrupt spec still raises — a multi-row spec is damage,
+    """The persisted spec of an IVF (or sign-LSH) layout, or None for
+    pre-spec (legacy) layouts. A PRESENT-but-corrupt spec still raises — a multi-row spec is damage,
     not legacy."""
     from pyspark.errors import AnalysisException
 
@@ -456,8 +450,8 @@ def _read_ivf_spec_optional(spark: SparkSession, index_path: str) -> dict | None
         return None
     if len(rows) != 1:
         raise ValueError(
-            f"corrupt IVF spec at {index_path}_spec: expected exactly one "
-            f"row, found {len(rows)}"
+            f"corrupt layout spec at {index_path}_spec: expected exactly "
+            f"one row, found {len(rows)}"
         )
     return rows[0].asDict()
 
@@ -476,82 +470,12 @@ def read_ivf_spec(spark: SparkSession, index_path: str) -> dict:
     return spec
 
 
-def _validate_read_math(
-    spec: dict | None,
-    dot_fn,
-    norm_fn,
-    sim_id: str | None,
-    index_path: str,
-) -> None:
-    """THE MIXED-MATH READ CONTRACT (pinned round 10; the append path's
-    sibling decision at :func:`assign_with_index_spec`).
-
-    Read-time scoring math is a FREE CHOICE: a read never mutates the
-    layout, and cell ROUTING is driver-side float math
-    (:func:`similarity.nearest_cells_for`) regardless of the build's
-    assignment math, so ``dot_fn``/``norm_fn`` affect candidate SCORES
-    only. Querying a custom-math layout with the built-in cosine (or
-    with custom math it cannot verify) is therefore SANCTIONED but LOUD:
-    scores can differ from the build's math in the last ulp — rankings
-    differ only at exact ties — which is invisible until an oracle
-    comparison hash-mismatches, so a warning names the spec's sim_id for
-    callers that need bit-exact runs. When ``sim_id`` IS presented it is
-    validated against the spec and refused on mismatch, exactly as the
-    append path does; presenting it against a built-in-mode layout, a
-    spec-less legacy layout, or without the functions it names is a
-    named error (an unverifiable claim is worse than no claim)."""
-    import warnings
-
-    custom = dot_fn is not None or norm_fn is not None
-    if sim_id is not None and not custom:
-        raise ValueError(
-            "sim_id names a (dot_fn, norm_fn) pair — passing it without "
-            "the functions claims custom math while scoring with the "
-            "built-in cosine; drop sim_id or pass the functions it names"
-        )
-    if spec is None:
-        if sim_id is not None:
-            raise ValueError(
-                f"{index_path!r} has no persisted spec to validate "
-                f"sim_id={sim_id!r} against (pre-spec layout) — rebuild "
-                "with build_ivf_index, or drop sim_id"
-            )
-        return
-    if spec["assignment"] == "custom":
-        if sim_id is not None and sim_id != spec["sim_id"]:
-            raise ValueError(
-                f"sim_id mismatch: index at {index_path!r} was built with "
-                f"{spec['sim_id']!r}, the read presented {sim_id!r} — "
-                "different similarity math scores the same candidates "
-                "differently"
-            )
-        if sim_id is None:
-            warnings.warn(
-                f"reading a custom-math IVF layout "
-                f"(sim_id={spec['sim_id']!r} at {index_path}_spec) with "
-                "unverified scoring math: candidate scores may differ "
-                "from the build's math in the last ulp (rankings differ "
-                "only at exact ties) — pass the layout's dot_fn/norm_fn "
-                f"with sim_id={spec['sim_id']!r} for bit-exact runs",
-                stacklevel=3,
-            )
-    elif sim_id is not None:
-        raise ValueError(
-            f"index at {index_path!r} was built with the "
-            f"{spec['assignment']!r} assignment mode — sim_id is only "
-            "meaningful against a custom-math layout (custom dot_fn/"
-            "norm_fn remain a sanctioned read-time scoring choice)"
-        )
-
-
 def append_to_ivf_index(
     df: DataFrame,
     index_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dot_fn=None,
-    norm_fn=None,
-    sim_id: str | None = None,
+    math: str | None = None,
     quantize: bool | None = None,
 ) -> None:
     """Append new vectors to a persisted IVF layout, assigning them with
@@ -573,13 +497,13 @@ def append_to_ivf_index(
     writer's append-only batch model
     (``bulkwriter/CassandraBulkSourceRelation.java:116-131``).
 
-    Refuses loudly when: the layout has no spec (legacy — rebuild), the
-    layout was built over an EMPTY corpus (unpartitioned, no centroids —
-    rebuild), the spec's assignment mode is ``custom`` but ``sim_id``
-    does not match (or the functions are missing), or a built-in-mode
-    index is appended with custom math. A silent mode mismatch would
-    split the same corpus across different cells depending on which call
-    wrote it — exactly the corruption the spec exists to prevent.
+    ``math`` defaults to the layout's own (the spec's); an explicit
+    different value is refused. Refuses loudly too when the layout has
+    no spec (legacy — rebuild) or was built over an EMPTY corpus
+    (unpartitioned, no centroids — rebuild). A silent math or mode
+    mismatch would split the same corpus across different cells
+    depending on which call wrote it — exactly the corruption the spec
+    exists to prevent.
     """
     if quantize is not None:
         layout_q = _spec_quantized(
@@ -593,9 +517,7 @@ def append_to_ivf_index(
                 "layout; omit the argument to follow the spec, or rebuild "
                 "with build_ivf_index(quantize=...) to switch"
             )
-    tagged = assign_with_index_spec(
-        df, index_path, id_col, vec_col, dot_fn, norm_fn, sim_id
-    )
+    tagged = assign_with_index_spec(df, index_path, id_col, vec_col, math)
     tagged.write.mode("append").partitionBy("cell").parquet(index_path)
 
 
@@ -604,9 +526,7 @@ def assign_with_index_spec(
     index_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dot_fn=None,
-    norm_fn=None,
-    sim_id: str | None = None,
+    math: str | None = None,
     spec: dict | None = None,
     centroids: list[tuple[int, list[float]]] | None = None,
     cnorms: dict[int, float] | None = None,
@@ -616,7 +536,7 @@ def assign_with_index_spec(
     persisted spec — the assignment half of :func:`append_to_ivf_index`
     (which writes the result), shared with the streaming semantic-dedup
     path (which needs the assignment for the batch-vs-corpus join before
-    appending). All spec/mode/sim_id mismatch checks apply.
+    appending). All spec/mode/math mismatch checks apply.
 
     ``spec``/``centroids`` (r16) preload the layout's frozen metadata so
     a caller that already holds them (the streaming trigger's per-stream
@@ -627,11 +547,9 @@ def assign_with_index_spec(
     spark = df.sparkSession
     if spec is None:
         spec = read_ivf_spec(spark, index_path)
+    math = layout_math(math, spec, index_path, append=True)
     if centroids is None:
-        centroids = [
-            (r.cid, list(r.centroid))
-            for r in spark.read.parquet(f"{index_path}_centroids").collect()
-        ]
+        centroids = read_centroids(spark, index_path)
     if not centroids:
         raise ValueError(
             f"{index_path!r} was built over an empty corpus (no centroids, "
@@ -639,41 +557,10 @@ def assign_with_index_spec(
             "union instead of appending"
         )
     centroids = sorted(centroids, key=lambda t: t[0])
-    mode = spec["assignment"]
-    custom = dot_fn is not None or norm_fn is not None
-    if mode == "custom":
-        if not custom or sim_id is None:
-            raise ValueError(
-                f"index at {index_path!r} was built with custom similarity "
-                f"math (sim_id={spec['sim_id']!r}) — append must pass the "
-                "same dot_fn/norm_fn and sim_id"
-            )
-        if sim_id != spec["sim_id"]:
-            raise ValueError(
-                f"sim_id mismatch: index at {index_path!r} was built with "
-                f"{spec['sim_id']!r}, append presented {sim_id!r} — "
-                "different similarity math would assign the same vectors "
-                "to different cells"
-            )
-    elif custom or sim_id is not None:
-        raise ValueError(
-            f"index at {index_path!r} was built with the "
-            f"{mode!r} assignment mode — append must not pass custom "
-            "dot_fn/norm_fn/sim_id (rebuild with build_ivf_index(dot_fn=..., "
-            "norm_fn=..., sim_id=...) to switch)"
-        )
-    if mode == "custom":
-        from cassandra_analytics_spark.operators.similarity import (
-            assign_nearest_cells,
-        )
-
-        tagged = assign_nearest_cells(
-            df, centroids, id_col, vec_col, dot_fn, norm_fn,
-            cell_col="cell", cnorms=cnorms,
-        )
-    else:
-        cell = _ivf_cell_for_mode(vec_col, centroids, mode, None, None)
-        tagged = df.select(F.col(id_col), F.col(vec_col), cell.alias("cell"))
+    tagged = _assign_cells(
+        df, centroids, spec["assignment"], math, id_col, vec_col,
+        cnorms=cnorms,
+    )
     if _spec_quantized(spec):
         # a quantized layout's appends carry codes automatically — the
         # spec IS the quantization config
@@ -689,20 +576,16 @@ def query_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     num_probes: int = 4,
-    dot_fn=None,
-    norm_fn=None,
-    sim_id: str | None = None,
+    math: str | None = None,
 ) -> DataFrame:
     """Top-k over the ``num_probes`` nearest cells only — the ``cell``
     filter is a partition-column predicate, so Spark reads just those
     directories (partition pruning; no corpus scan).
 
-    ``dot_fn``/``norm_fn`` swap in custom scoring math; ``sim_id``
-    validates it against a custom-math layout's spec. The full
-    mixed-math read contract — what is refused, what is sanctioned-but-
-    loud — is pinned at :func:`_validate_read_math`: reads never mutate
-    the layout and routing is driver-side float either way, so scoring
-    math is a read-time choice, validated when named.
+    Candidates score under the layout's own math, or under ``math`` when
+    given (:func:`similarity.layout_math`: reads never mutate the layout
+    and routing is driver-side float either way, so scoring math is a
+    read-time choice).
 
     RECALL ENVELOPE (measured, scripts/measure_ann_recall.py, PERF.md
     round 8): on the driver's near-random isotropic fixture recall
@@ -733,14 +616,10 @@ def query_ivf_index(
     when recall matters more than scan cost."""
     if num_probes < 1:
         raise ValueError(f"num_probes must be >= 1, got {num_probes}")
-    _validate_read_math(
-        _read_ivf_spec_optional(spark, index_path),
-        dot_fn, norm_fn, sim_id, index_path,
+    math = layout_math(
+        math, _read_ivf_spec_optional(spark, index_path), index_path
     )
-    centroids = [
-        (r.cid, list(r.centroid))
-        for r in spark.read.parquet(f"{index_path}_centroids").collect()
-    ]
+    centroids = read_centroids(spark, index_path)
     # a query vector of the wrong dimension would rank cells with
     # silently TRUNCATED driver-side dot products (zip stops at the
     # shorter side) and then score candidates to NULL — empty results
@@ -753,23 +632,9 @@ def query_ivf_index(
     cells = nearest_cells_for(query_vec, centroids, num_probes)
     index = spark.read.parquet(index_path)
     candidates = index.filter(F.col("cell").isin(cells))
-    q = lit_vector(query_vec)
-    if dot_fn is not None or norm_fn is not None:
-        from cassandra_analytics_spark.operators.similarity import (
-            dot as _dot,
-            norm as _norm,
-        )
-
-        dotf = dot_fn or _dot
-        normf = norm_fn or _norm
-        # the query norm runs through the SAME norm_fn expression over
-        # the literal vector, so the float math matches a corpus built
-        # with this sim bit-for-bit
-        score = F.try_divide(
-            dotf(F.col(vec_col), q), normf(F.col(vec_col)) * normf(q)
-        )
-    else:
-        score = cosine(F.col(vec_col), q)
+    # the query norm runs through the SAME norm expression over the
+    # literal vector, so the math matches the corpus side bit-for-bit
+    score = cosine(F.col(vec_col), lit_vector(query_vec), math)
     return (
         candidates.select(F.col(id_col), score.alias("cosine_sim"))
         .filter(F.col("cosine_sim").isNotNull())
@@ -787,9 +652,7 @@ def query_ivf_index_quantized(
     vec_col: str = "embedding",
     num_probes: int = 4,
     rescore_factor: int = 8,
-    dot_fn=None,
-    norm_fn=None,
-    sim_id: str | None = None,
+    math: str | None = None,
     rescore_mode: str = "pushdown",
 ) -> DataFrame:
     """Two-phase top-k over a QUANTIZED IVF layout — the composition of
@@ -807,9 +670,8 @@ def query_ivf_index_quantized(
     rescore window absorbs swaps within ``k * rescore_factor`` —
     empirical, pinned oracle-exact at the gate SFs by the driver query.
     Probe recall is :func:`query_ivf_index`'s envelope (probe-all is
-    exact). ``dot_fn``/``norm_fn``/``sim_id`` follow the mixed-math READ
-    contract (:func:`_validate_read_math`) and apply to the RESCORE
-    phase only. ``rescore_mode`` is ``quantized_topk``'s: ``"pushdown"``
+    exact). ``math`` follows :func:`query_ivf_index`'s read contract and
+    applies to the RESCORE phase only. ``rescore_mode`` is ``quantized_topk``'s: ``"pushdown"``
     collects the bounded survivor ids into a source-pruned ``isin``;
     ``"join"`` keeps them distributed via a broadcast join.
 
@@ -817,6 +679,8 @@ def query_ivf_index_quantized(
     scoring NULL codes would return an empty result with no hint.
     """
     from cassandra_analytics_spark.operators.quantize import (
+        _no_scores,
+        _phase2_exact_topk,
         approx_cosine_from_codes,
     )
 
@@ -839,24 +703,11 @@ def query_ivf_index_quantized(
             "quantized=false or predates quantization) — rebuild with "
             "build_ivf_index(quantize=True), or use query_ivf_index"
         )
-    _validate_read_math(spec, dot_fn, norm_fn, sim_id, index_path)
-    centroids = [
-        (r.cid, list(r.centroid))
-        for r in spark.read.parquet(f"{index_path}_centroids").collect()
-    ]
+    math = layout_math(math, spec, index_path)
+    centroids = read_centroids(spark, index_path)
     index = spark.read.parquet(index_path)
     if not centroids:
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField(id_col, index.schema[id_col].dataType),
-                    StructField("cosine_sim", DoubleType()),
-                ]
-            ),
-        )
+        return _no_scores(index, id_col)
     if len(query_vec) != len(centroids[0][1]):
         raise ValueError(
             f"query vector is {len(query_vec)}-d but the index centroids "
@@ -867,50 +718,12 @@ def query_ivf_index_quantized(
     approx = approx_cosine_from_codes(query_vec, _QCODE, _QMIN, _QSCALE)
     # phase 1 projects ONLY (id, approx): the pruned scan reads codes +
     # metadata, never the float column (the quantized_topk plan audit)
-    survivors = (
-        candidates.select(F.col(id_col), approx.alias("__approx"))
-        .filter(F.col("__approx").isNotNull())
-        .orderBy(F.col("__approx").desc(), F.col(id_col))
-        .limit(k * rescore_factor)
-    )
-    if rescore_mode == "join":
-        rescan = candidates.join(
-            F.broadcast(survivors.select(id_col)), id_col
-        )
-    else:
-        survivor_ids = [r[id_col] for r in survivors.collect()]
-        if not survivor_ids:
-            from pyspark.sql.types import DoubleType, StructField, StructType
-
-            return spark.createDataFrame(
-                [],
-                StructType(
-                    [
-                        StructField(id_col, index.schema[id_col].dataType),
-                        StructField("cosine_sim", DoubleType()),
-                    ]
-                ),
-            )
-        rescan = candidates.filter(F.col(id_col).isin(survivor_ids))
-    q = lit_vector([float(x) for x in query_vec])
-    if dot_fn is not None or norm_fn is not None:
-        from cassandra_analytics_spark.operators.similarity import (
-            dot as _dot,
-            norm as _norm,
-        )
-
-        dotf = dot_fn or _dot
-        normf = norm_fn or _norm
-        score = F.try_divide(
-            dotf(F.col(vec_col), q), normf(F.col(vec_col)) * normf(q)
-        )
-    else:
-        score = cosine(F.col(vec_col), q)
-    return (
-        rescan.select(F.col(id_col), score.alias("cosine_sim"))
-        .filter(F.col("cosine_sim").isNotNull())
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-        .limit(k)
+    scored = candidates.select(
+        F.col(id_col), approx.alias("__approx")
+    ).filter(F.col("__approx").isNotNull())
+    return _phase2_exact_topk(
+        candidates, scored, [float(x) for x in query_vec], k, id_col,
+        vec_col, rescore_factor, rescore_mode, math,
     )
 
 
@@ -942,7 +755,7 @@ def query_ann_index(
     planes on the near-random fixture — same probed-fraction story. For
     exhaustive-accurate search use ``probe_hamming = num_planes`` (all
     buckets) or brute_force_topk."""
-    spec = _read_lsh_spec(spark, index_path)
+    spec = _read_ivf_spec_optional(spark, index_path)
     if spec is not None:
         for name, given, pinned in (
             ("num_planes", num_planes, spec["num_planes"]),
@@ -1018,8 +831,7 @@ def _quantized_pairs_from_cells(
     id_col: str,
     vec_col: str,
     max_cluster: int,
-    dot_fn,
-    norm_fn,
+    math: str,
     skew_observation,
     dim: int | None = None,
 ) -> DataFrame:
@@ -1049,22 +861,8 @@ def _quantized_pairs_from_cells(
     from cassandra_analytics_spark.operators.dedup import (
         _bucket_candidate_pairs,
     )
-    from cassandra_analytics_spark.operators.similarity import (
-        dot as _dot,
-        norm as _norm,
-    )
 
-    dotf = dot_fn or _dot
-    normf = norm_fn or _norm
-    u = F.transform(
-        F.col(_QCODE), lambda c: c.cast("double") + F.lit(128.0)
-    )
-    su = F.aggregate(u, F.lit(0.0), lambda acc, x: acc + x)
-    suu = F.aggregate(u, F.lit(0.0), lambda acc, x: acc + x * x)
-    d = F.size(F.col(_QCODE)).cast("double")
-    s, m = F.col(_QSCALE), F.col(_QMIN)
-    nrm = F.sqrt(s * s * suu + F.lit(2.0) * s * m * su + d * m * m)
-    r = s * F.sqrt(d) / F.lit(2.0)
+    s, m, su, nrm, r = _sq8_row_stats()
     tagged = index.filter(
         F.col(vec_col).isNotNull() & F.col(_QCODE).isNotNull()
     ).select(
@@ -1096,42 +894,12 @@ def _quantized_pairs_from_cells(
             )
         ).cast("boolean")
     )
-    # x̂·ŷ = sa·sb·Σ(ua·ub) + sa·mb·Σua + sb·ma·Σub + d·ma·mb.
-    # ``dim`` (round 15, from the layout spec) gates Σ(ua·ub) to the
-    # Arrow kernel above quantize._EXPR_MAX_DIM — the zip_with form is
-    # d interpreted lambdas PER PAIR (the 512-d A/B measured the SQ8
-    # arm's triggers at 571 s vs the kerneled PQ arm's 302 s; Spark
-    # HOFs are not codegen'd). None keeps the expression.
-    from cassandra_analytics_spark.operators.quantize import (
-        _EXPR_MAX_DIM,
-        _sq8_u_dot_udf,
-    )
-
-    if dim is not None and dim > _EXPR_MAX_DIM:
-        uu = _sq8_u_dot_udf()(pa["q"], pb["q"])
-    else:
-        uu = F.aggregate(
-            F.zip_with(
-                pa["q"], pb["q"],
-                lambda x, y: (x.cast("double") + F.lit(128.0))
-                * (y.cast("double") + F.lit(128.0)),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    dq = F.size(pa["q"]).cast("double")
-    dot_rec = (
-        pa["s"] * pb["s"] * uu
-        + pa["s"] * pb["m"] * pa["su"]
-        + pb["s"] * pa["m"] * pb["su"]
-        + dq * pa["m"] * pb["m"]
+    dot_rec = _sq8_recon_dot(
+        pa["q"], pa["s"], pa["m"], pa["su"],
+        pb["q"], pb["s"], pb["m"], pb["su"], dim,
     )
     approx = F.when(dim_guard, F.try_divide(dot_rec, pa["nrm"] * pb["nrm"]))
-    margin = (
-        F.try_divide(F.lit(2.0) * pa["r"], pa["nrm"])
-        + F.try_divide(F.lit(2.0) * pb["r"], pb["nrm"])
-        + F.lit(1e-9)
-    )
+    margin = _sq8_margin(pa["r"], pa["nrm"], pb["r"], pb["nrm"])
     survivors = (
         pairs.select(
             "a",
@@ -1149,15 +917,10 @@ def _quantized_pairs_from_cells(
     # exact confirm from the float column — survivor-proportional joins
     va = index.select(F.col(id_col).alias("a"), F.col(vec_col).alias("__va"))
     vb = index.select(F.col(id_col).alias("b"), F.col(vec_col).alias("__vb"))
-    # marked scaled-decimal math confirms in the bit-identical Arrow
-    # kernels (r16): the expression pays 3d interpreted decimal lambdas
-    # per surviving pair (dot + both norms per PAIR)
-    from cassandra_analytics_spark.operators.similarity import (
-        pair_dot_auto,
-        row_norm_auto,
-    )
-
-    _pd, _rn = pair_dot_auto(dotf), row_norm_auto(normf)
+    # the confirm takes the math's Arrow kernels where it has them (r16:
+    # the decimal expression pays 3d interpreted lambdas per surviving
+    # pair — dot + both norms per PAIR)
+    _pd, _rn = vector_op(math, "dot"), vector_op(math, "norm")
     exact = F.try_divide(
         _pd(F.col("__va"), F.col("__vb")),
         _rn(F.col("__va")) * _rn(F.col("__vb")),
@@ -1177,8 +940,7 @@ def semantic_dedup_on_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster: int = 10_000,
-    dot_fn=None,
-    norm_fn=None,
+    math: str | None = None,
     skew_observation=None,
     use_codes: bool = False,
 ) -> DataFrame:
@@ -1202,7 +964,8 @@ def semantic_dedup_on_index(
     exchange shuffles 3.4x fewer bytes (measured at 100x, PERF.md) —
     with a PROVEN-sound margin prefilter and an exact float confirm, so the verdicts are identical
     to the float stage (see :func:`_quantized_pairs_from_cells` for the
-    bound)."""
+    bound). Pairs score under the layout's own math unless ``math``
+    overrides it (:func:`query_ivf_index`'s read contract)."""
     from cassandra_analytics_spark.operators.similarity import (
         removal_verdicts,
         semantic_pairs_from_cells,
@@ -1214,8 +977,9 @@ def semantic_dedup_on_index(
             f"{index_path!r} is not an IVF layout (no 'cell' column) — "
             "build it with build_ivf_index first"
         )
+    spec = _read_ivf_spec_optional(spark, index_path)
+    math = layout_math(math, spec, index_path)
     if use_codes:
-        spec = _read_ivf_spec_optional(spark, index_path)
         if not _spec_quantized(spec):
             raise ValueError(
                 f"use_codes=True needs a quantized layout, but the index "
@@ -1226,7 +990,7 @@ def semantic_dedup_on_index(
         return removal_verdicts(
             _quantized_pairs_from_cells(
                 index, threshold, id_col, vec_col, max_cluster,
-                dot_fn, norm_fn, skew_observation,
+                math, skew_observation,
                 dim=(spec or {}).get("dim"),
             )
         )
@@ -1237,8 +1001,7 @@ def semantic_dedup_on_index(
         vec_col,
         cell_col="cell",
         max_cluster=max_cluster,
-        dot_fn=dot_fn,
-        norm_fn=norm_fn,
+        math=math,
         skew_observation=skew_observation,
     )
     return removal_verdicts(pairs)
@@ -1252,9 +1015,7 @@ def ivf_knn_join(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     num_probes: int = 4,
-    dot_fn=None,
-    norm_fn=None,
-    sim_id: str | None = None,
+    math: str | None = None,
     use_codes: bool = False,
     use_pq: bool = False,
     rescore_factor: int = 8,
@@ -1318,12 +1079,11 @@ def ivf_knn_join(
     pins by test). Rows with NULL query vectors produce no output;
     unscorable corpus rows (NULL cosine) never rank.
 
-    ``dot_fn``/``norm_fn`` swap in custom similarity math (e.g. the
-    portable decimal cosine for oracle-exact runs); query norms are
-    computed with the SAME ``norm_fn`` expression in one small job so
-    the float math matches the corpus side bit-for-bit. ``sim_id``
-    validates the math against a custom-math layout's spec — the full
-    mixed-math read contract is pinned at :func:`_validate_read_math`.
+    Scoring follows :func:`query_ivf_index`'s read contract (the
+    layout's math, or ``math`` — e.g. the portable ``"decimal12"``
+    cosine for oracle-exact runs); query norms are computed with the
+    SAME norm expression in one small job so the math matches the
+    corpus side bit-for-bit.
 
     Query ids must be NON-NULL and UNIQUE: two query rows sharing an id
     would silently BLEND into one top-k (the per-query window partitions
@@ -1348,11 +1108,6 @@ def ivf_knn_join(
         StructType,
     )
 
-    from cassandra_analytics_spark.operators.similarity import (
-        dot as _dot,
-        norm as _norm,
-    )
-
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if num_probes < 1:
@@ -1365,8 +1120,6 @@ def ivf_knn_join(
         raise ValueError(
             f"query_batch_size must be >= 1, got {query_batch_size}"
         )
-    dotf = dot_fn or _dot
-    normf = norm_fn or _norm
     spark = queries.sparkSession
     if use_codes and use_pq:
         raise ValueError(
@@ -1383,11 +1136,8 @@ def ivf_knn_join(
 
         pq_spec = read_ivf_pq_spec(spark, index_path)
         # the spec is normalized with assignment/sim_id keys, so the
-        # pinned mixed-math READ contract applies verbatim: read-time
-        # rescore math is a free choice, a presented sim_id is
-        # validated, a custom-assignment layout read without naming
-        # its sim_id warns
-        _validate_read_math(pq_spec, dot_fn, norm_fn, sim_id, index_path)
+        # IVF read contract applies verbatim
+        math = layout_math(math, pq_spec, index_path)
         if not pq_spec["keep_vec"]:
             raise ValueError(
                 f"{index_path!r} was saved with keep_vec=False (codes-only "
@@ -1404,17 +1154,14 @@ def ivf_knn_join(
     else:
         pq_residual = False
         spec = _read_ivf_spec_optional(spark, index_path)
-        _validate_read_math(spec, dot_fn, norm_fn, sim_id, index_path)
+        math = layout_math(math, spec, index_path)
         if use_codes and not _spec_quantized(spec):
             raise ValueError(
                 f"use_codes=True needs a quantized layout, but the index at "
                 f"{index_path!r} has no code columns (spec quantized=false "
                 "or missing) — rebuild with build_ivf_index(quantize=True)"
             )
-    centroids = [
-        (r.cid, list(r.centroid))
-        for r in spark.read.parquet(f"{index_path}_centroids").collect()
-    ]
+    centroids = read_centroids(spark, index_path)
     index = spark.read.parquet(index_path)
     # id types derive from the INPUTS so the empty-result schema agrees
     # with the non-empty path and non-long ids survive createDataFrame
@@ -1429,15 +1176,16 @@ def ivf_knn_join(
     if not centroids:
         return spark.createDataFrame([], out_schema)
     dim = len(centroids[0][1])
+    vm = vector_math(math)
 
-    # query norms via the same norm_fn expression as the corpus side
+    # query norms via the same norm expression as the corpus side
     # (one small job over the query set — bit-identical float math)
     qrows = (
         queries.filter(F.col(vec_col).isNotNull())
         .select(
             F.col(query_id),
             F.col(vec_col),
-            normf(F.col(vec_col)).alias("__qn"),
+            vm.norm(F.col(vec_col)).alias("__qn"),
         )
         .collect()
     )
@@ -1547,8 +1295,8 @@ def ivf_knn_join(
         touched = sorted({t[1] for t in routing})
         candidates = index.filter(F.col("cell").isin(touched))
         cos = F.try_divide(
-            dotf(F.col(vec_col), F.col("__qv")),
-            normf(F.col(vec_col)) * F.col("__qn"),
+            vm.dot(F.col(vec_col), F.col("__qv")),
+            vm.norm(F.col(vec_col)) * F.col("__qn"),
         )
         w = Window.partitionBy(query_id).orderBy(
             F.col("cosine_sim").desc(), F.col(id_col)

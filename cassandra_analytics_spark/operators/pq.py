@@ -36,7 +36,7 @@ measured on planted clusters at scale.
 
 from __future__ import annotations
 
-import math
+import math as _math
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -697,8 +697,7 @@ def pq_pairs_from_cells(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster: int = 10_000,
-    dot_fn=None,
-    norm_fn=None,
+    math: str = "float",
     skew_observation=None,
     encoding: str = "raw",
 ) -> DataFrame:
@@ -723,9 +722,9 @@ def pq_pairs_from_cells(
     stage. ``x̂·ŷ`` is the symmetric (code-vs-code) ADC — m·dsub = dim
     multiplies per pair against the flat codebook literal, pure
     codegen, the same arithmetic as a float dot over ~1/12 the
-    shuffled payload. Custom ``dot_fn``/``norm_fn`` enter ONLY the
-    exact confirm (the bound is stated for standard float math; the
-    1e-9 headroom covers ulp drift). Requires unique ids (the confirm
+    shuffled payload. ``math`` enters ONLY the exact confirm (the bound
+    is stated for standard float math; the 1e-9 headroom covers ulp
+    drift). Requires unique ids (the confirm
     joins by id); NULL-code/NULL-vector rows never pair.
 
     ``encoding`` (round 16) must match the frame's pinned code
@@ -737,17 +736,16 @@ def pq_pairs_from_cells(
     from cassandra_analytics_spark.operators.dedup import (
         _bucket_candidate_pairs,
     )
-    from cassandra_analytics_spark.operators.similarity import (
-        dot as _dot,
-        norm as _norm,
-    )
+    from cassandra_analytics_spark.operators.similarity import vector_op
 
     if encoding not in ("raw", "residual"):
         raise ValueError(
             f"encoding must be 'raw' or 'residual', got {encoding!r}"
         )
-    dotf = dot_fn or _dot
-    normf = norm_fn or _norm
+    # the confirm takes the math's Arrow kernels where it has them (r16:
+    # the decimal expression pays 3d interpreted lambdas per surviving
+    # pair — dot + both norms per PAIR)
+    _pd, _rn = vector_op(math, "dot"), vector_op(math, "norm")
     m_ = codebook.m
     residual_enc = encoding == "residual"
     struct_fields = [
@@ -832,15 +830,6 @@ def pq_pairs_from_cells(
     vb = assigned.select(
         F.col(id_col).alias("b"), F.col(vec_col).alias("__vb")
     )
-    # marked scaled-decimal math confirms in the bit-identical Arrow
-    # kernels (r16): the expression pays 3d interpreted decimal lambdas
-    # per surviving pair (dot + both norms per PAIR)
-    from cassandra_analytics_spark.operators.similarity import (
-        pair_dot_auto,
-        row_norm_auto,
-    )
-
-    _pd, _rn = pair_dot_auto(dotf), row_norm_auto(normf)
     exact = F.try_divide(
         _pd(F.col("__va"), F.col("__vb")),
         _rn(F.col("__va")) * _rn(F.col("__vb")),
@@ -863,8 +852,7 @@ def pq_adc_topk(
     norm_col: str = "pq_norm",
     vec_col: str | None = None,
     rescore_factor: int = 8,
-    dot_fn=None,
-    norm_fn=None,
+    math: str = "float",
     rescore_mode: str = "pushdown",
     extra_dot=None,
 ) -> DataFrame:
@@ -874,7 +862,7 @@ def pq_adc_topk(
     row's score is m indexed lookups summed (``transform`` with index +
     ``element_at`` — pure codegen, the scan reads m bytes + one double
     per row); phase 2 rescores the top ``k * rescore_factor`` survivors
-    with exact float cosine (same machinery and ``rescore_mode``
+    with the exact ``math`` cosine (same machinery and ``rescore_mode``
     contract as ``quantized_topk`` — the two share phase 2).
 
     APPROXIMATION CONTRACT: PQ reconstruction error has no closed
@@ -891,6 +879,9 @@ def pq_adc_topk(
     the caller derives from the row's partition column. The stored
     ``norm_col`` already describes the full reconstruction, so only
     the dot needs the correction."""
+    from cassandra_analytics_spark.operators.similarity import vector_math
+
+    vector_math(math)
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if rescore_factor < 1:
@@ -900,7 +891,7 @@ def pq_adc_topk(
             f"rescore_mode must be 'pushdown' or 'join', got {rescore_mode!r}"
         )
     qv = [float(x) for x in query_vec]
-    if not qv or not all(math.isfinite(x) for x in qv):
+    if not qv or not all(_math.isfinite(x) for x in qv):
         raise ValueError(
             "pq_adc_topk: query vector must be non-empty and finite"
         )
@@ -909,7 +900,7 @@ def pq_adc_topk(
             f"pq_adc_topk: codebook is {codebook.dim}-d but the query "
             f"vector is {len(qv)}-d"
         )
-    qnorm = math.sqrt(sum(x * x for x in qv))
+    qnorm = _math.sqrt(sum(x * x for x in qv))
     m, ks, dsub = codebook.m, codebook.ks, codebook.dsub
     # the ADC lookup table: lut[i*ks + j] = q_i · centroids[i][j]
     lut = [
@@ -964,7 +955,7 @@ def pq_adc_topk(
 
     return _phase2_exact_topk(
         qdf, scored, qv, k, id_col, vec_col, rescore_factor,
-        rescore_mode, dot_fn, norm_fn,
+        rescore_mode, math,
     )
 
 
@@ -1049,26 +1040,9 @@ def read_pq_spec(spark, index_path: str) -> dict:
 def load_pq_codebook(spark, index_path: str) -> PQCodebook:
     """Rehydrate the trained codebook of a persisted layout (bounded
     collect — m x ks rows of metadata, the centroid-table convention)."""
-    spec = read_pq_spec(spark, index_path)
-    rows = spark.read.parquet(f"{index_path}_codebook").collect()
-    want = spec["m"] * spec["ks"]
-    if len(rows) != want:
-        raise ValueError(
-            f"corrupt PQ codebook at {index_path}_codebook: spec says "
-            f"m={spec['m']} x ks={spec['ks']} = {want} centroids, found "
-            f"{len(rows)}"
-        )
-    books: dict[int, dict[int, tuple]] = {}
-    for r in rows:
-        books.setdefault(r["sub"], {})[r["code"]] = tuple(
-            float(v) for v in r["centroid"]
-        )
-    cents = tuple(
-        tuple(books[i][j] for j in range(spec["ks"]))
-        for i in range(spec["m"])
-    )
-    return PQCodebook(
-        dim=spec["dim"], m=spec["m"], ks=spec["ks"], centroids=cents
+    return _resolve_ivf_pq_codebook(
+        spark, index_path, read_pq_spec(spark, index_path), None,
+        caller="load_pq_codebook",
     )
 
 
@@ -1081,8 +1055,7 @@ def query_pq_index(
     vec_col: str = "embedding",
     rescore: bool = True,
     rescore_factor: int = 8,
-    dot_fn=None,
-    norm_fn=None,
+    math: str = "float",
     rescore_mode: str = "pushdown",
     codebook: PQCodebook | None = None,
 ) -> DataFrame:
@@ -1099,17 +1072,9 @@ def query_pq_index(
     per-query overhead); it must MATCH the layout's spec geometry —
     a mismatched preload is refused, not silently mis-decoded."""
     spec = read_pq_spec(spark, index_path)
-    if codebook is None:
-        codebook = load_pq_codebook(spark, index_path)
-    elif (codebook.dim, codebook.m, codebook.ks) != (
-        spec["dim"], spec["m"], spec["ks"]
-    ):
-        raise ValueError(
-            f"query_pq_index: preloaded codebook geometry "
-            f"(dim={codebook.dim}, m={codebook.m}, ks={codebook.ks}) does "
-            f"not match the layout spec (dim={spec['dim']}, m={spec['m']}, "
-            f"ks={spec['ks']}) at {index_path!r}"
-        )
+    codebook = _resolve_ivf_pq_codebook(
+        spark, index_path, spec, codebook, caller="query_pq_index"
+    )
     if rescore and not spec["keep_vec"]:
         raise ValueError(
             f"{index_path!r} was saved with keep_vec=False (codes-only "
@@ -1121,7 +1086,7 @@ def query_pq_index(
     return pq_adc_topk(
         qdf, codebook, query_vec, k=k, id_col=id_col,
         vec_col=vec_col if rescore else None,
-        rescore_factor=rescore_factor, dot_fn=dot_fn, norm_fn=norm_fn,
+        rescore_factor=rescore_factor, math=math,
         rescore_mode=rescore_mode,
     )
 
@@ -1153,18 +1118,9 @@ def append_to_pq_index(
     encode batch (``pq_encode``'s guard)."""
     spark = df.sparkSession
     spec = read_pq_spec(spark, index_path)
-    if codebook is None:
-        codebook = load_pq_codebook(spark, index_path)
-    elif (codebook.dim, codebook.m, codebook.ks) != (
-        spec["dim"], spec["m"], spec["ks"]
-    ):
-        raise ValueError(
-            f"append_to_pq_index: preloaded codebook geometry "
-            f"(dim={codebook.dim}, m={codebook.m}, ks={codebook.ks}) does "
-            f"not match the layout spec (dim={spec['dim']}, m={spec['m']}, "
-            f"ks={spec['ks']}) at {index_path!r} — codes from a different "
-            "codebook would silently mis-decode"
-        )
+    codebook = _resolve_ivf_pq_codebook(
+        spark, index_path, spec, codebook, caller="append_to_pq_index"
+    )
     pq_encode(
         df, codebook, id_col=id_col, vec_col=vec_col,
         keep_vec=spec["keep_vec"],
@@ -1206,9 +1162,7 @@ def save_ivf_pq_index(
     iterations: int = 15,
     seed: int = 42,
     assignment: str = "expr",
-    dot_fn=None,
-    norm_fn=None,
-    sim_id: str | None = None,
+    math: str = "float",
     residuals: bool = False,
     encoding: str = "raw",
     train: str = "sample",
@@ -1239,14 +1193,13 @@ def save_ivf_pq_index(
     codebook sizes corpus-scale SemDeDup needs (the expression form
     measured 1.5 MiB task binaries at k=256, PERF.md round 8), ties
     to the LOWEST cid. The mode is pinned in the spec; appends follow
-    it via the shared ``_ivf_cell_for_mode`` so build and append can
-    never pick different argmax forms for one layout.
+    it via the shared ``ann_index._assign_cells`` so build and append
+    can never pick different argmax forms for one layout.
 
-    ``dot_fn``/``norm_fn`` switch CELL ASSIGNMENT to custom math
-    (norm-once ``assign_nearest_cells``, lowest-cid ties — e.g. the
-    portable decimal cosine of the oracle-exact SemDeDup queries);
-    ``sim_id`` is then REQUIRED and pinned in the spec so appends can
-    refuse mismatched math — exactly ``build_ivf_index``'s contract.
+    ``math="decimal12"`` switches CELL ASSIGNMENT to the portable
+    decimal cosine of the oracle-exact SemDeDup queries (norm-once
+    ``assign_nearest_cells``, lowest-cid ties), pinned in the spec so
+    appends follow it — exactly ``build_ivf_index``'s contract.
 
     ``residuals=True`` stores ``pq_tnorm``/``pq_err`` next to the
     codes (``pq_encode(with_residual=True)``), turning the layout's
@@ -1270,9 +1223,10 @@ def save_ivf_pq_index(
     encoding="raw" for stream-maintained layouts). The mode is pinned
     in the spec; appends follow it automatically."""
     from cassandra_analytics_spark.fs import delete_path
+    from cassandra_analytics_spark.operators.ann_index import _assign_cells
     from cassandra_analytics_spark.operators.similarity import (
-        assign_nearest_cells,
         sample_centroids,
+        spec_assignment,
     )
 
     spark = df.sparkSession
@@ -1284,27 +1238,7 @@ def save_ivf_pq_index(
         raise ValueError(
             f"encoding must be 'raw' or 'residual', got {encoding!r}"
         )
-    custom = dot_fn is not None or norm_fn is not None
-    if custom:
-        if assignment == "vectorized":
-            raise ValueError(
-                "custom dot_fn/norm_fn have no vectorized path — drop "
-                "assignment='vectorized' (the custom expression path is "
-                "used) or drop the custom math"
-            )
-        if sim_id is None:
-            raise ValueError(
-                "save_ivf_pq_index with custom dot_fn/norm_fn needs "
-                "sim_id= — a stable identifier for the similarity math; "
-                "appends must present the same identifier (the spec "
-                "cannot serialize Python functions)"
-            )
-        assignment = "custom"
-    elif sim_id is not None:
-        raise ValueError(
-            "sim_id is only meaningful with custom dot_fn/norm_fn — "
-            "the built-in modes are identified by the assignment name"
-        )
+    mode, sim_id = spec_assignment(math, assignment)
     if train not in ("sample", "kmeans"):
         raise ValueError(
             f"train must be 'sample' or 'kmeans', got {train!r}"
@@ -1336,20 +1270,9 @@ def save_ivf_pq_index(
     centroids = sorted((int(c), [float(x) for x in v]) for c, v in centroids)
     # cell from the FLOAT vector FIRST (same routing math as reads) —
     # residual encoding needs the assigned centroid as its anchor
-    if custom:
-        tagged = assign_nearest_cells(
-            df, centroids, id_col, vec_col, dot_fn, norm_fn,
-            cell_col="cell", passthrough=True,
-        )
-    else:
-        from cassandra_analytics_spark.operators.ann_index import (
-            _ivf_cell_for_mode,
-        )
-
-        tagged = df.withColumn(
-            "cell", _ivf_cell_for_mode(vec_col, centroids, assignment,
-                                       None, None),
-        )
+    tagged = _assign_cells(
+        df, centroids, mode, math, id_col, vec_col, passthrough=True
+    )
     anchor = None
     if encoding == "residual":
         anchor = "__anchor"
@@ -1396,7 +1319,7 @@ def save_ivf_pq_index(
     local_df(
         spark,
         [("ivf-pq-v1", codebook.dim, codebook.m, codebook.ks,
-          len(centroids), keep_vec, assignment, sim_id, residuals,
+          len(centroids), keep_vec, mode, sim_id, residuals,
           encoding)],
         _IVF_PQ_SPEC_SCHEMA,
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_spec")
@@ -1449,10 +1372,11 @@ def _resolve_ivf_pq_codebook(
     codebook: PQCodebook | None,
     caller: str,
 ) -> PQCodebook:
-    """Rehydrate an IVF-PQ layout's trained codebook (bounded m·ks
+    """Rehydrate a PQ / IVF-PQ layout's trained codebook (bounded m·ks
     metadata collect), or validate a caller-preloaded one against the
-    spec geometry — shared by the query and append paths so both
-    refuse a mismatched preload identically."""
+    spec geometry — shared by every query and append path so all
+    refuse a mismatched preload identically (codes from a different
+    codebook would silently mis-decode)."""
     if codebook is not None:
         if (codebook.dim, codebook.m, codebook.ks) != (
             spec["dim"], spec["m"], spec["ks"]
@@ -1490,9 +1414,7 @@ def assign_with_ivf_pq_spec(
     index_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dot_fn=None,
-    norm_fn=None,
-    sim_id: str | None = None,
+    math: str | None = None,
     codebook: PQCodebook | None = None,
     spec: dict | None = None,
     centroids: list[tuple[int, list[float]]] | None = None,
@@ -1504,9 +1426,8 @@ def assign_with_ivf_pq_spec(
     (which writes the result), shared with the streaming SemDeDup PQ
     path (which needs the assignment for the batch-vs-corpus join
     before appending). Mirrors ``ann_index.assign_with_index_spec``'s
-    mode contract: a ``custom``-assignment layout REQUIRES the same
-    dot_fn/norm_fn/sim_id it was built with; an ``expr`` layout refuses
-    custom math (a silent mode mismatch would split the same corpus
+    math contract: the layout's own math, an explicit different
+    ``math`` refused (a silent mismatch would split the same corpus
     across different cells depending on which call wrote it). The
     residual columns follow the spec. The float vector column is
     always present in the output (callers drop it per ``keep_vec``).
@@ -1517,21 +1438,21 @@ def assign_with_ivf_pq_spec(
     per-call metadata reads; both are immutable once the layout exists
     (appends never rewrite sidecars, compaction stashes them aside
     byte-identical), the same contract as ``codebook=``."""
-    from cassandra_analytics_spark.operators.similarity import (
-        assign_nearest_cells,
+    from cassandra_analytics_spark.operators.ann_index import (
+        _assign_cells,
+        read_centroids,
     )
+    from cassandra_analytics_spark.operators.similarity import layout_math
 
     spark = df.sparkSession
     if spec is None:
         spec = read_ivf_pq_spec(spark, index_path)
+    math = layout_math(math, spec, index_path, append=True)
     codebook = _resolve_ivf_pq_codebook(
         spark, index_path, spec, codebook, caller="assign_with_ivf_pq_spec"
     )
     if centroids is None:
-        centroids = [
-            (int(r.cid), [float(x) for x in r.centroid])
-            for r in spark.read.parquet(f"{index_path}_centroids").collect()
-        ]
+        centroids = read_centroids(spark, index_path)
     centroids = sorted(centroids, key=lambda t: t[0])
     if not centroids:
         raise ValueError(
@@ -1539,44 +1460,12 @@ def assign_with_ivf_pq_spec(
             f"{index_path}_centroids — corrupt layout; rebuild with "
             "save_ivf_pq_index"
         )
-    mode = spec["assignment"]
-    custom = dot_fn is not None or norm_fn is not None
-    if mode == "custom":
-        if not custom or sim_id is None:
-            raise ValueError(
-                f"IVF-PQ layout at {index_path!r} was built with custom "
-                f"similarity math (sim_id={spec['sim_id']!r}) — the "
-                "append/assign must pass the same dot_fn/norm_fn and sim_id"
-            )
-        if sim_id != spec["sim_id"]:
-            raise ValueError(
-                f"sim_id mismatch: IVF-PQ layout at {index_path!r} was "
-                f"built with {spec['sim_id']!r}, presented {sim_id!r} — "
-                "different similarity math would assign the same vectors "
-                "to different cells"
-            )
-    elif custom or sim_id is not None:
-        raise ValueError(
-            f"IVF-PQ layout at {index_path!r} was built with the "
-            f"built-in {mode!r} assignment — must not pass custom "
-            "dot_fn/norm_fn/sim_id (rebuild with save_ivf_pq_index("
-            "dot_fn=..., norm_fn=..., sim_id=...) to switch)"
-        )
-    if mode == "custom":
-        tagged = assign_nearest_cells(
-            df, centroids, id_col, vec_col, dot_fn, norm_fn,
-            cell_col="cell", passthrough=True, cnorms=cnorms,
-        )
-    else:
-        from cassandra_analytics_spark.operators.ann_index import (
-            _ivf_cell_for_mode,
-        )
-
-        # the SPEC's pinned mode (expr or vectorized) through the shared
-        # expression builder — build and append can never disagree
-        tagged = df.withColumn(
-            "cell", _ivf_cell_for_mode(vec_col, centroids, mode, None, None)
-        )
+    # the SPEC's pinned mode through the shared builder — build and
+    # append can never disagree
+    tagged = _assign_cells(
+        df, centroids, spec["assignment"], math, id_col, vec_col,
+        passthrough=True, cnorms=cnorms,
+    )
     anchor = None
     if spec["encoding"] == "residual":
         # the spec's pinned encoding: residual layouts code x − centroid
@@ -1596,9 +1485,7 @@ def append_to_ivf_pq_index(
     index_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dot_fn=None,
-    norm_fn=None,
-    sim_id: str | None = None,
+    math: str | None = None,
     codebook: PQCodebook | None = None,
 ) -> None:
     """Append new vectors to a persisted IVF-PQ layout: cell-assign
@@ -1614,13 +1501,14 @@ def append_to_ivf_pq_index(
     ``keep_vec`` and ``residuals`` follow the spec (a mixed layout
     would silently break the rescore/prefilter contracts); a preloaded
     ``codebook=`` must match the spec geometry exactly (shared refusal
-    with :func:`query_ivf_pq_index`); custom-math layouts demand their
-    pinned sim_id (see :func:`assign_with_ivf_pq_spec`)."""
+    with :func:`query_ivf_pq_index`); the layout's math is followed and
+    a different explicit ``math`` refused (see
+    :func:`assign_with_ivf_pq_spec`)."""
     spark = df.sparkSession
     spec = read_ivf_pq_spec(spark, index_path)
     tagged = assign_with_ivf_pq_spec(
         df, index_path, id_col=id_col, vec_col=vec_col,
-        dot_fn=dot_fn, norm_fn=norm_fn, sim_id=sim_id, codebook=codebook,
+        math=math, codebook=codebook, spec=spec,
     )
     if not spec["keep_vec"]:
         tagged = tagged.drop(vec_col)
@@ -1637,9 +1525,7 @@ def query_ivf_pq_index(
     vec_col: str = "embedding",
     rescore: bool = True,
     rescore_factor: int = 8,
-    dot_fn=None,
-    norm_fn=None,
-    sim_id: str | None = None,
+    math: str | None = None,
     rescore_mode: str = "pushdown",
     codebook: PQCodebook | None = None,
 ) -> DataFrame:
@@ -1654,22 +1540,18 @@ def query_ivf_pq_index(
     preloaded ``codebook=`` must match the spec geometry — both the
     flat-PQ contracts.
 
-    ``dot_fn``/``norm_fn``/``sim_id`` follow the pinned mixed-math READ
-    contract (``ann_index._validate_read_math``): read-time rescore
-    math is a sanctioned free choice, but reading a custom-assignment
-    layout without naming its sim_id warns (last-ulp score drift), and
-    a presented sim_id is validated against the spec."""
-    from cassandra_analytics_spark.operators.ann_index import (
-        _validate_read_math,
-    )
+    The rescore follows the IVF read contract
+    (``similarity.layout_math``): the layout's own math, or ``math``."""
+    from cassandra_analytics_spark.operators.ann_index import read_centroids
     from cassandra_analytics_spark.operators.similarity import (
+        layout_math,
         nearest_cells_for,
     )
 
     if num_probes < 1:
         raise ValueError(f"num_probes must be >= 1, got {num_probes}")
     spec = read_ivf_pq_spec(spark, index_path)
-    _validate_read_math(spec, dot_fn, norm_fn, sim_id, index_path)
+    math = layout_math(math, spec, index_path)
     if rescore and not spec["keep_vec"]:
         raise ValueError(
             f"{index_path!r} was saved with keep_vec=False (codes-only "
@@ -1679,10 +1561,7 @@ def query_ivf_pq_index(
     codebook = _resolve_ivf_pq_codebook(
         spark, index_path, spec, codebook, caller="query_ivf_pq_index"
     )
-    centroids = [
-        (r.cid, list(r.centroid))
-        for r in spark.read.parquet(f"{index_path}_centroids").collect()
-    ]
+    centroids = read_centroids(spark, index_path)
     qv = [float(x) for x in query_vec]
     cells = nearest_cells_for(qv, centroids, num_probes)
     qdf = spark.read.parquet(index_path).filter(F.col("cell").isin(cells))
@@ -1709,6 +1588,6 @@ def query_ivf_pq_index(
     return pq_adc_topk(
         qdf, codebook, query_vec, k=k, id_col=id_col,
         vec_col=vec_col if rescore else None,
-        rescore_factor=rescore_factor, dot_fn=dot_fn, norm_fn=norm_fn,
+        rescore_factor=rescore_factor, math=math,
         rescore_mode=rescore_mode, extra_dot=extra,
     )

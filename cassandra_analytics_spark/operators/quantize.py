@@ -31,7 +31,7 @@ are refused for the same reason as non-finites.
 
 from __future__ import annotations
 
-import math
+import math as _math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -227,12 +227,12 @@ def approx_cosine_from_codes(
     from cassandra_analytics_spark.operators.similarity import lit_vector
 
     qv = [float(x) for x in query_vec]
-    if not qv or not all(math.isfinite(x) for x in qv):
+    if not qv or not all(_math.isfinite(x) for x in qv):
         raise ValueError(
             "approx_cosine_from_codes: query vector must be non-empty "
             "and finite"
         )
-    qnorm = math.sqrt(sum(x * x for x in qv))
+    qnorm = _math.sqrt(sum(x * x for x in qv))
     qsum = sum(qv)
     if len(qv) > _EXPR_MAX_DIM:
         # high dim: the three HOF reductions are d interpreted lambdas
@@ -457,8 +457,7 @@ def quantized_topk(
     scale_col: str = "embedding_scale",
     vec_col: str | None = None,
     rescore_factor: int = 8,
-    dot_fn=None,
-    norm_fn=None,
+    math: str = "float",
     rescore_mode: str = "pushdown",
 ) -> DataFrame:
     """Two-phase cosine top-k over a QUANTIZED corpus: phase 1 ranks by
@@ -486,10 +485,10 @@ def quantized_topk(
     returned as ``cosine_sim`` directly (top k, no rescore).
 
     NULL/unscorable rows (NULL codes, zero reconstructed norm) never
-    rank, matching ``brute_force_topk``. ``dot_fn``/``norm_fn`` swap in
-    custom math for the RESCORE phase only (e.g. the portable decimal
-    cosine for oracle-exact runs — the repo's standard read-math hook);
-    phase 1 always uses the closed-form code arithmetic above.
+    rank, matching ``brute_force_topk``. ``math`` picks the RESCORE
+    phase's cosine only (e.g. the portable ``"decimal12"`` cosine for
+    oracle-exact runs); phase 1 always uses the closed-form code
+    arithmetic above.
 
     ``rescore_mode`` picks how survivors reach phase 2:
 
@@ -505,11 +504,9 @@ def quantized_topk(
       instead of a source-pruned scan. Same result either way
       (plan-asserted + oracle-shared by test).
     """
-    from cassandra_analytics_spark.operators.similarity import (
-        cosine,
-        lit_vector,
-    )
+    from cassandra_analytics_spark.operators.similarity import vector_math
 
+    vector_math(math)
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if rescore_factor < 1:
@@ -521,7 +518,7 @@ def quantized_topk(
             f"rescore_mode must be 'pushdown' or 'join', got {rescore_mode!r}"
         )
     qv = [float(x) for x in query_vec]
-    if not qv or not all(math.isfinite(x) for x in qv):
+    if not qv or not all(_math.isfinite(x) for x in qv):
         # a NaN/Inf query scores every row to NULL → silent empty result
         raise ValueError(
             "quantized_topk: query vector must be non-empty and finite"
@@ -544,7 +541,23 @@ def quantized_topk(
     )
     return _phase2_exact_topk(
         qdf, scored, qv, k, id_col, vec_col, rescore_factor,
-        rescore_mode, dot_fn, norm_fn,
+        rescore_mode, math,
+    )
+
+
+def _no_scores(qdf: DataFrame, id_col: str) -> DataFrame:
+    """The empty ``(id_col, cosine_sim)`` top-k, its id typed like
+    ``qdf``'s (so the empty and non-empty paths share one schema)."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    return qdf.sparkSession.createDataFrame(
+        [],
+        StructType(
+            [
+                StructField(id_col, qdf.schema[id_col].dataType),
+                StructField("cosine_sim", DoubleType()),
+            ]
+        ),
     )
 
 
@@ -557,14 +570,14 @@ def _phase2_exact_topk(
     vec_col: str | None,
     rescore_factor: int,
     rescore_mode: str,
-    dot_fn,
-    norm_fn,
+    math: str,
 ) -> DataFrame:
-    """The shared phase 2 of two-phase top-k (SQ8 ``quantized_topk`` and
-    PQ ``pq_adc_topk``): take the top ``k * rescore_factor`` of
-    ``scored`` (columns ``id_col``, ``__approx``), rescore them with
-    exact float cosine against the float column, return the top k.
-    Without ``vec_col`` the approximate scores are final."""
+    """The shared phase 2 of two-phase top-k (SQ8 ``quantized_topk`` /
+    ``ann_index.query_ivf_index_quantized`` and PQ ``pq_adc_topk``):
+    take the top ``k * rescore_factor`` of ``scored`` (columns
+    ``id_col``, ``__approx``), rescore them with the exact ``math``
+    cosine against the float column, return the top k. Without
+    ``vec_col`` the approximate scores are final."""
     from cassandra_analytics_spark.operators.similarity import (
         cosine,
         lit_vector,
@@ -577,19 +590,7 @@ def _phase2_exact_topk(
             .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
             .limit(k)
         )
-    if dot_fn is not None or norm_fn is not None:
-        from cassandra_analytics_spark.operators.similarity import (
-            dot as _dot,
-            norm as _norm,
-        )
-
-        dotf = dot_fn or _dot
-        normf = norm_fn or _norm
-        exact = F.try_divide(
-            dotf(F.col(vec_col), qlit), normf(F.col(vec_col)) * normf(qlit)
-        )
-    else:
-        exact = cosine(F.col(vec_col), qlit)
+    exact = cosine(F.col(vec_col), qlit, math)
 
     survivors = scored.orderBy(
         F.col("__approx").desc(), F.col(id_col)
@@ -603,17 +604,7 @@ def _phase2_exact_topk(
     else:
         survivor_ids = [r[id_col] for r in survivors.collect()]
         if not survivor_ids:
-            from pyspark.sql.types import DoubleType, StructField, StructType
-
-            return qdf.sparkSession.createDataFrame(
-                [],
-                StructType(
-                    [
-                        StructField(id_col, qdf.schema[id_col].dataType),
-                        StructField("cosine_sim", DoubleType()),
-                    ]
-                ),
-            )
+            return _no_scores(qdf, id_col)
         rescan = qdf.filter(F.col(id_col).isin(survivor_ids))
     return (
         rescan.select(F.col(id_col), exact.alias("cosine_sim"))

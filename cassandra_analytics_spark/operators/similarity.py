@@ -10,7 +10,10 @@ only matching cells).
 
 from __future__ import annotations
 
+import functools
 import math
+from collections.abc import Callable, Mapping, Sequence
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -49,7 +52,10 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
+def cosine(a: Column, b: Column, math: str = "float") -> Column:
+    """``dot(a, b) / (norm(a) * norm(b))`` under one of the closed
+    :data:`MATHS` (the float default is the built-in JVM cosine)."""
+    m = vector_math(math)
     # try_divide, not '/': under Spark 4's default ANSI mode a division
     # by zero THROWS, so one zero-norm vector anywhere in a 100 TB corpus
     # (or a zero query vector) would kill every similarity job. NULL
@@ -60,7 +66,274 @@ def cosine(a: Column, b: Column) -> Column:
     # unscorable like zero-norm vectors, while the dedup/assignment
     # paths raise instead — a silent NULL there would change VERDICTS,
     # not just omit a score (round-8 continuation probe).
-    return F.try_divide(dot(a, b), norm(a) * norm(b))
+    return F.try_divide(m.dot(a, b), m.norm(a) * m.norm(b))
+
+
+# --------------------------------------------------------------------------
+# The closed vector-math table
+# --------------------------------------------------------------------------
+
+#: exact decimal type of the portable ``decimal12`` math: every product is
+#: cast to it HALF_UP, and the fold sums exact multiples of 10^-12
+DECIMAL12 = "decimal(28,12)"
+
+
+def _pdot(a: Column, b: Column) -> Column:
+    """Portable dot product: double products → decimal sum → double."""
+    return F.aggregate(
+        F.zip_with(
+            a, b,
+            lambda x, y: (x.cast("double") * y.cast("double")).cast(DECIMAL12),
+        ),
+        F.lit(0).cast(DECIMAL12),
+        lambda acc, v: (acc + v).cast(DECIMAL12),
+    ).cast("double")
+
+
+def _psq_norm(a: Column) -> Column:
+    """Portable L2 norm: double squares → decimal sum → double → sqrt
+    (bit-identical across engines; same shape as the cosine_topk oracle)."""
+    return F.sqrt(
+        F.aggregate(
+            F.transform(
+                a, lambda x: (x.cast("double") * x.cast("double")).cast(DECIMAL12)
+            ),
+            F.lit(0).cast(DECIMAL12),
+            lambda acc, v: (acc + v).cast(DECIMAL12),
+        ).cast("double")
+    )
+
+
+def _py_norm(vec) -> float:
+    """Driver-side scalar twin of :func:`norm`: the same index-order
+    left fold of double squares (Python floats ARE IEEE doubles), then
+    the IEEE sqrt."""
+    acc = 0.0
+    for x in vec:
+        acc += float(x) * float(x)
+    return math.sqrt(acc)
+
+
+def _py_psq_norm(vec) -> float:
+    """Driver-side scalar twin of :func:`_psq_norm`: double squares ->
+    decimal(.,12) HALF_UP sum -> double -> sqrt. Python's Decimal(x) is
+    the EXACT binary expansion while Spark casts through the shortest-
+    repr BigDecimal; the two can only diverge when a square sits within
+    ~1e-17 relative of a .5e-12 rounding boundary — equality on the
+    fixture is pinned by the oracle hash matches of every query using
+    this helper (and cosine_topk_embeddings' identical inline math)."""
+    import decimal
+
+    return math.sqrt(
+        float(
+            sum(
+                decimal.Decimal(x * x).quantize(
+                    decimal.Decimal("1E-12"), rounding=decimal.ROUND_HALF_UP
+                )
+                for x in vec
+            )
+        )
+    )
+
+
+@dataclass(frozen=True)
+class VectorMath:
+    """One closed scoring math: its expression forms, its driver-side
+    scalar norm, its bit-identical Arrow kernels and its on-disk spec
+    identifier. Ops and their builder signatures (an op's kernel takes
+    the same arguments as its expression):
+
+    * ``"dot"`` — ``(a, b) -> Column``, the pair dot product;
+    * ``"norm"`` — ``(a) -> Column``, the row L2 norm;
+    * ``"expr_cell"`` — ``(vec, centroids) -> Column``, the
+      ``assignment="expr"`` argmax (HIGHEST cid on ties; float only);
+    * ``"norm_once_cell"`` — ``(vec, nrm, centroids, cnorms) -> Column``,
+      the norm-once argmax of :func:`assign_nearest_cells` (LOWEST cid
+      on ties) over a precomputed row-norm column and centroid norms.
+
+    Parity of every kernel with its expression is pinned by
+    tests/test_cell_parity_kernel.py, parametrized over this table."""
+
+    name: str
+    sim_id: str | None
+    scalar_norm: Callable[[Sequence[float]], float]
+    exprs: Mapping[str, Callable[..., Column]]
+    kernels: Mapping[str, Callable[..., Column]]
+
+    @property
+    def dot(self) -> Callable[[Column, Column], Column]:
+        return self.exprs["dot"]
+
+    @property
+    def norm(self) -> Callable[[Column], Column]:
+        return self.exprs["norm"]
+
+
+def _norm_once_cell(dot_expr, vec, nrm, centroids, cnorms) -> Column:
+    """The norm-once argmax expression: ``dot(vec, c) / (nrm · ‖c‖)`` per
+    centroid, lowest cid on ties, non-finite sims pinned to -2, and the
+    loud mixed-dimension guard (NULL vectors pass — they pin to the
+    lowest cell; a ragged vector would otherwise silently take it,
+    round-8 probe)."""
+    cell = _argmax_cell(
+        [
+            (
+                cid,
+                F.try_divide(
+                    dot_expr(vec, lit_vector(cvec)),
+                    nrm * F.lit(float(cnorms[cid])),
+                ),
+            )
+            for cid, cvec in centroids
+        ]
+    )
+    return _dim_guard(cell, vec, len(centroids[0][1]), "centroids")
+
+
+def _dim_guard(cell: Column, vec: Column, dim: int, what: str) -> Column:
+    """``cell`` where ``vec`` is NULL or ``dim`` long; a named error on
+    any other length (mixed dimensions are data corruption)."""
+    return F.when(vec.isNull() | (F.size(vec) == dim), cell).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit(
+                    f"embedding dimension mismatch: {what} are {dim}-d "
+                    "but found a vector of length "
+                ),
+                F.size(vec).cast("string"),
+            )
+        ).cast("int")
+    )
+
+
+_MATH: dict[str, VectorMath] = {
+    "float": VectorMath(
+        name="float",
+        sim_id=None,
+        scalar_norm=_py_norm,
+        exprs={
+            "dot": dot,
+            "norm": norm,
+            "expr_cell": lambda vec, cents: nearest_centroid_cell(vec, cents),
+            "norm_once_cell": functools.partial(_norm_once_cell, dot),
+        },
+        kernels={
+            "expr_cell": lambda vec, cents: _expr_parity_cell_udf(cents)(vec),
+        },
+    ),
+    "decimal12": VectorMath(
+        name="decimal12",
+        sim_id="portable-decimal-cosine-v1",
+        scalar_norm=_py_psq_norm,
+        exprs={
+            "dot": _pdot,
+            "norm": _psq_norm,
+            "norm_once_cell": functools.partial(_norm_once_cell, _pdot),
+        },
+        kernels={
+            "dot": lambda a, b: _scaled_decimal_pair_dot_udf(12)(a, b),
+            "norm": lambda a: _scaled_decimal_norm_udf(12)(a),
+            "norm_once_cell": lambda vec, nrm, cents, cnorms: (
+                _scaled_decimal_cell_udf(cents, cnorms, 12)(vec)
+            ),
+        },
+    ),
+}
+
+#: the closed set of scoring maths — every ``math=`` argument is one of these
+MATHS = tuple(_MATH)
+
+
+def vector_math(math: str) -> VectorMath:
+    """The table entry for ``math``; a named error for anything else."""
+    try:
+        return _MATH[math]
+    except (KeyError, TypeError):
+        raise ValueError(
+            f"math must be one of {' or '.join(map(repr, MATHS))}, "
+            f"got {math!r}"
+        ) from None
+
+
+def vector_op(math: str, op: str, work: int | None = None) -> Callable[..., Column]:
+    """THE expression-vs-kernel dispatcher: the builder for ``op`` under
+    ``math`` (signatures on :class:`VectorMath`). The expression runs at
+    or below ``_CELL_EXPR_MAX_WORK`` multiply-adds per row — codegen-
+    free, but zero Python and zero Arrow boundary; above it, or when the
+    per-row work is not known at plan time (``work=None``: a pair stage
+    scores a data-dependent number of pairs per row), the op's
+    bit-identical Arrow kernel takes over if the math has one. The
+    choice is a pure function of (math, op, work), so a layout built
+    and extended with the same codebook always picks the same form."""
+    m = vector_math(math)
+    kernel = m.kernels.get(op)
+    if kernel is not None and (work is None or work > _CELL_EXPR_MAX_WORK):
+        return kernel
+    try:
+        return m.exprs[op]
+    except KeyError:
+        raise ValueError(f"math={math!r} has no {op!r} form") from None
+
+
+def spec_math(spec: dict | None, index_path: str) -> str:
+    """The math a persisted IVF / IVF-PQ layout was built with — THE one
+    translation of the on-disk spec format: a ``decimal12`` layout is
+    written as ``assignment="custom"`` with its math's ``sim_id``, a
+    float layout (and a pre-spec legacy layout) carries a NULL
+    ``sim_id``. An unrecognised ``sim_id`` is refused by name: this
+    engine cannot reproduce that math, so it can neither append nor
+    score bit-exactly."""
+    sim_id = (spec or {}).get("sim_id")
+    if sim_id is None and (spec or {}).get("assignment") != "custom":
+        return "float"
+    for m in _MATH.values():
+        if m.sim_id is not None and m.sim_id == sim_id:
+            return m.name
+    known = sorted(m.sim_id for m in _MATH.values() if m.sim_id)
+    raise ValueError(
+        f"layout at {index_path!r} was built with unrecognised scoring "
+        f"math sim_id={sim_id!r} (known: {known}) — rebuild it with "
+        "math='float' or math='decimal12'"
+    )
+
+
+def spec_assignment(math: str, assignment: str) -> tuple[str, str | None]:
+    """``(assignment, sim_id)`` as a build writes them into the spec —
+    the inverse of :func:`spec_math`. ``decimal12`` runs the norm-once
+    assignment (``"custom"`` on disk) and has no vectorized path."""
+    m = vector_math(math)
+    if m.sim_id is None:
+        return assignment, None
+    if assignment == "vectorized":
+        raise ValueError(
+            f"math={math!r} has no vectorized path — drop "
+            "assignment='vectorized' (its norm-once expression/kernel "
+            "path is used) or build with math='float'"
+        )
+    return "custom", m.sim_id
+
+
+def layout_math(
+    math: str | None, spec: dict | None, index_path: str, append: bool = False
+) -> str:
+    """The math to use against a persisted layout: the layout's own
+    (:func:`spec_math`) when ``math`` is None. A READ accepts either
+    override — it never mutates the layout and cell routing is
+    driver-side float either way, so the override changes scores only.
+    An APPEND refuses a different math: the same vectors would land in
+    different cells depending on which call wrote them."""
+    if math is not None:
+        vector_math(math)
+    layout = spec_math(spec, index_path)
+    if math is None:
+        return layout
+    if append and math != layout:
+        raise ValueError(
+            f"math mismatch: layout at {index_path!r} was built with "
+            f"math={layout!r}, the append presented math={math!r} — omit "
+            "math to follow the layout, or rebuild to switch"
+        )
+    return math
 
 
 def brute_force_topk(
@@ -432,14 +705,8 @@ def _expr_parity_cell_udf(centroids: list[tuple[int, list[float]]]):
     cvecs = [np.asarray(c, dtype="float64") for _, c in ordered]
     dim = len(cvecs[0])
     k = len(cvecs)
-    # centroid norms with the expression's exact fold order (Python
-    # floats ARE IEEE doubles; math.sqrt is the IEEE sqrt)
-    cnorms = []
-    for c in cvecs:
-        acc = 0.0
-        for x in c:
-            acc += float(x) * float(x)
-        cnorms.append(math.sqrt(acc))
+    # centroid norms with the expression's exact fold order
+    cnorms = [_py_norm(c) for c in cvecs]
     fallback_cid = int(cids[-1])  # all-(-2) rows tie to the highest cid
 
     @pandas_udf("int")
@@ -475,23 +742,6 @@ def _expr_parity_cell_udf(centroids: list[tuple[int, list[float]]]):
         return pd.Series(out)
 
     return _cell
-
-
-def nearest_cell_auto(
-    vec: Column, centroids: list[tuple[int, list[float]]]
-) -> Column:
-    """:func:`nearest_centroid_cell`, dispatched by per-row work (r16):
-    at or below ``_CELL_EXPR_MAX_WORK`` multiply-adds the codegen-free
-    expression wins; above it the bit-identical Arrow parity kernel
-    (:func:`_expr_parity_cell_udf`) takes over. Build and append share
-    this dispatch through ``_ivf_cell_for_mode``, and the dispatch is a
-    pure function of (k, dim), so a layout can never be built in one
-    form and extended in the other with different math."""
-    k = len(centroids)
-    dim = len(centroids[0][1]) if centroids else 0
-    if k * dim <= _CELL_EXPR_MAX_WORK:
-        return nearest_centroid_cell(vec, centroids)
-    return _expr_parity_cell_udf(centroids)(vec)
 
 
 def nearest_cells_for(
@@ -542,7 +792,10 @@ def ivf_topk(
         # dispatched form (r16): bit-identical to nearest_centroid_cell,
         # Arrow-kerneled when centroids × dim exceeds the expression's
         # interpreted-lambda budget
-        "__cell", nearest_cell_auto(F.col(vec_col), centroids)
+        "__cell",
+        vector_op("float", "expr_cell", len(centroids) * len(query_vec))(
+            F.col(vec_col), centroids
+        ),
     )
     probed = assigned.filter(
         F.col("__cell").isin(nearest_cells_for(query_vec, centroids, num_probes))
@@ -598,41 +851,25 @@ def _argmax_cell(sims: list[tuple[int, Column]]) -> Column:
 def nearest_cell_expr(
     vec: Column,
     centroids: list[tuple[int, list[float]]],
-    sim_fn=None,
 ) -> Column:
     """Cell id of the max-cosine centroid for ``vec``, lowest cid on ties.
 
-    Accepts a custom similarity builder ``sim_fn(vec, centroid_lit) ->
-    Column``. NOT a drop-in for :func:`nearest_centroid_cell`: that
-    helper resolves exact similarity ties toward the HIGHEST cid and is
-    kept as-is deliberately — persisted IVF/ANN indexes were built with
-    its assignments, and changing the tie direction would silently
+    NOT a drop-in for :func:`nearest_centroid_cell`: that helper
+    resolves exact similarity ties toward the HIGHEST cid and is kept
+    as-is deliberately — persisted IVF/ANN indexes were built with its
+    assignments, and changing the tie direction would silently
     invalidate them. New callers should prefer this function's
     lowest-cid convention (the repo-wide min-representative tiebreak).
     """
     validate_codebook(centroids)
-    simf = sim_fn or (lambda v, c: cosine(v, c))
     cell = _argmax_cell(
-        [(cid, simf(vec, lit_vector(cvec))) for cid, cvec in centroids]
+        [(cid, cosine(vec, lit_vector(cvec))) for cid, cvec in centroids]
     )
     # a vector whose length differs from the centroids' would get every
     # sim NULL'd by zip_with's null-padding and silently land in the
     # LOWEST cell (round-8 continuation probe) — mixed dims are data
     # corruption; fail loudly at the offending row instead
-    dim = len(centroids[0][1])
-    return F.when(
-        vec.isNull() | (F.size(vec) == dim), cell
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"embedding dimension mismatch: centroids are {dim}-d "
-                    "but found a vector of length "
-                ),
-                F.size(vec).cast("string"),
-            )
-        ).cast("int")
-    )
+    return _dim_guard(cell, vec, len(centroids[0][1]), "centroids")
 
 
 def validate_codebook(centroids: list[tuple[int, list[float]]]) -> None:
@@ -658,15 +895,15 @@ def validate_codebook(centroids: list[tuple[int, list[float]]]) -> None:
 def centroid_norms(
     spark: SparkSession,
     centroids: list[tuple[int, list[float]]],
-    norm_fn=None,
+    math: str = "float",
 ) -> dict[int, float]:
-    """Each centroid's norm evaluated with the SAME ``norm_fn``
-    expression as the row side (bit-identical float math) — one k-row
-    JVM job. The result is FROZEN for a frozen codebook, so streaming
-    callers cache it per layout alongside the spec/centroid cache
-    (r17: re-running this k-row job every trigger was pure metadata
-    overhead, ~0.13 s per trigger)."""
-    normf = norm_fn or norm
+    """Each centroid's norm evaluated with ``math``'s norm EXPRESSION —
+    the row side's exact float math — in one k-row JVM job. The result
+    is FROZEN for a frozen codebook, so streaming callers cache it per
+    layout alongside the spec/centroid cache (r17: re-running this
+    k-row job every trigger was pure metadata overhead, ~0.13 s per
+    trigger)."""
+    norm_expr = vector_math(math).norm
     from cassandra_analytics_spark.local_data import local_df
 
     cdf = local_df(
@@ -676,7 +913,7 @@ def centroid_norms(
     )
     return {
         r["cid"]: r["n"]
-        for r in cdf.select("cid", normf(F.col("v")).alias("n")).collect()
+        for r in cdf.select("cid", norm_expr(F.col("v")).alias("n")).collect()
     }
 
 
@@ -685,26 +922,31 @@ def assign_nearest_cells(
     centroids: list[tuple[int, list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dot_fn=None,
-    norm_fn=None,
+    math: str = "float",
     cell_col: str = "cell",
     keep_norm_as: str | None = None,
     passthrough: bool = False,
     cnorms: dict[int, float] | None = None,
 ) -> DataFrame:
     """Tag every row with its nearest-centroid cell — the norm-once
-    assignment shared by :func:`semantic_dedup_pairs` and the custom-math
+    assignment shared by :func:`semantic_dedup_pairs` and the decimal12
     IVF builders (``ann_index.build_ivf_index``/``append_to_ivf_index``).
 
     Norm discipline (HOFs are interpreted in Spark 4 — they must never
     be recomputed per centroid): each ROW's norm is computed ONCE as a
     carried column; each CENTROID's norm is computed once up front in a
-    k-row Spark job with the same ``norm_fn`` expression (so the float
-    math is bit-identical to the row side) and embedded as a literal.
-    Re-deriving ``norm_fn(vec)`` inside a per-centroid ``sim_fn`` costs
-    k redundant interpreted HOF evaluations per row — the exact
+    k-row Spark job with the same norm expression (so the float math is
+    bit-identical to the row side) and embedded as a literal.
+    Re-deriving the row norm inside a per-centroid similarity costs k
+    redundant interpreted HOF evaluations per row — the exact
     anti-pattern this helper exists to prevent (round-9 ADVICE found it
     in the on-index SemDeDup layout build).
+
+    Above ``_CELL_EXPR_MAX_WORK`` multiply-adds per row (centroids ×
+    dim) :func:`vector_op` runs the row norm and the argmax in the
+    math's BIT-IDENTICAL Arrow kernels where it has them (decimal12:
+    interpreted decimal HOFs measured 16-20 s for 2,000 rows at k=32 ×
+    d=64; the kernel is ~100 ms). Same cells, same ties, same guards.
 
     Ties go to the LOWEST cid (the repo's min-representative
     convention); non-finite sims pin to -2 (:func:`_finite_or`), so
@@ -715,98 +957,27 @@ def assign_nearest_cells(
     builder tags an already-encoded frame whose code/norm columns must
     survive the assignment).
     """
+    vector_math(math)
     validate_codebook(centroids)
-    dotf = dot_fn or dot
-    normf = norm_fn or norm
-    spark = df.sparkSession
     if cnorms is None:
         # ``cnorms=`` lets a caller that already holds the frozen
         # codebook's norms (the streaming trigger's per-stream cache)
         # skip this per-call k-row job (r17)
-        cnorms = centroid_norms(spark, centroids, norm_fn)
+        cnorms = centroid_norms(df.sparkSession, centroids, math)
+    work = len(centroids) * len(centroids[0][1])
     nrm_name = keep_norm_as or "__anc_nrm"
-    # row-side norms route marked scaled-decimal math to the Arrow
-    # kernel (r16) — per-ROW d interpreted decimal lambdas otherwise;
-    # the k-row centroid-norm job above stays an expression (tiny)
-    row_normf = row_norm_auto(normf)
-    dim = len(centroids[0][1])
-    # r16 dispatch: the portable-decimal (dot_fn, norm_fn) pair marks
-    # itself with __scaled_decimal__; above the expression-lambda work
-    # budget its assignment runs in the BIT-IDENTICAL Arrow kernel
-    # (interpreted decimal HOFs measured 16-20 s for 2,000 rows at
-    # k=32 × d=64; the kernel is ~100 ms). Same cells, same ties, same
-    # guards — pinned by tests/test_cell_parity_kernel.py.
-    _sd = getattr(dot_fn, "__scaled_decimal__", None)
-    if (
-        _sd is not None
-        and getattr(norm_fn, "__scaled_decimal__", None) == _sd
-        and len(centroids) * dim > _CELL_EXPR_MAX_WORK
-    ):
-        kcell = _scaled_decimal_cell_udf(centroids, cnorms, _sd)(
-            F.col(vec_col)
-        )
-        need_norm = passthrough or keep_norm_as is not None
-        if passthrough:
-            base = df.withColumn(nrm_name, row_normf(F.col(vec_col)))
-        elif need_norm:
-            base = df.select(
-                F.col(id_col), F.col(vec_col),
-                row_normf(F.col(vec_col)).alias(nrm_name),
-            )
-        else:
-            base = (
-                df if passthrough
-                else df.select(F.col(id_col), F.col(vec_col))
-            )
-        out = base.withColumn(cell_col, kcell)
-        if need_norm and keep_norm_as is None:
-            out = out.drop(nrm_name)
-        return out
-    # expression branch (work <= _CELL_EXPR_MAX_WORK): keep the plan
-    # pure-JVM — at this size the per-row decimal norm is cheap and a
-    # Python boundary would be the only cost (dispatch-by-work rule)
+    vec = F.col(vec_col)
+    row_norm = vector_op(math, "norm", work)(vec)
     base = (
-        df.withColumn(nrm_name, normf(F.col(vec_col)))
+        df.withColumn(nrm_name, row_norm)
         if passthrough
-        else df.select(
-            F.col(id_col), F.col(vec_col),
-            normf(F.col(vec_col)).alias(nrm_name),
-        )
+        else df.select(F.col(id_col), vec, row_norm.alias(nrm_name))
     )
-    cell = _argmax_cell(
-        [
-            (
-                cid,
-                F.try_divide(
-                    dotf(F.col(vec_col), lit_vector(cvec)),
-                    F.col(nrm_name) * F.lit(float(cnorms[cid])),
-                ),
-            )
-            for cid, cvec in centroids
-        ]
-    )
-    # loud dim guard (NULL vectors allowed — they pin to the lowest
-    # cell): a ragged vector would otherwise silently take the lowest
-    # cell, and if it never lands in a pair the corruption stays
-    # invisible (round-8 probe)
-    dim = len(centroids[0][1])
-    cell = F.when(
-        F.col(vec_col).isNull() | (F.size(F.col(vec_col)) == dim), cell
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"embedding dimension mismatch: centroids are {dim}-d "
-                    "but found a vector of length "
-                ),
-                F.size(F.col(vec_col)).cast("string"),
-            )
-        ).cast("int")
+    cell = vector_op(math, "norm_once_cell", work)(
+        vec, F.col(nrm_name), centroids, cnorms
     )
     out = base.withColumn(cell_col, cell)
-    if keep_norm_as is None:
-        out = out.drop(nrm_name)
-    return out
+    return out if keep_norm_as is not None else out.drop(nrm_name)
 
 
 def _half_up_scaled(prod, scale: int):
@@ -956,7 +1127,7 @@ def _scaled_decimal_pair_dot_udf(scale: int, int_digits: int = 16):
     not codegen'd).
 
     Semantics reproduce the expression exactly (probed under ANSI mode,
-    pinned by tests/test_pair_parity_kernel.py):
+    pinned by tests/test_cell_parity_kernel.py):
 
     * either side NULL → NULL; RAGGED pairs → NULL (zip_with pads the
       shorter side with NULLs, a NULL product poisons the fold);
@@ -1045,30 +1216,6 @@ def _scaled_decimal_norm_udf(scale: int, int_digits: int = 16):
     return _row_norm
 
 
-def pair_dot_auto(dot_fn):
-    """``dot_fn`` routed by the ``__scaled_decimal__`` marker: the
-    portable-decimal pair marks itself integer-exact at scale 10^-s, so
-    per-pair scoring dispatches to the bit-identical Arrow kernel
-    (interpreted decimal HOFs cost d lambdas PER PAIR — measured r16:
-    the streaming trigger's candidate scoring dominated the trigger
-    wall); unmarked math returns unchanged. The dispatch mirrors
-    ``assign_nearest_cells``'s cell-kernel rule, applied to pairs."""
-    sd = getattr(dot_fn, "__scaled_decimal__", None)
-    if sd is None:
-        return dot_fn
-    kernel = _scaled_decimal_pair_dot_udf(sd)
-    return lambda a, b: kernel(a, b)
-
-
-def row_norm_auto(norm_fn):
-    """:func:`pair_dot_auto`'s sibling for per-row norms."""
-    sd = getattr(norm_fn, "__scaled_decimal__", None)
-    if sd is None:
-        return norm_fn
-    kernel = _scaled_decimal_norm_udf(sd)
-    return lambda a: kernel(a)
-
-
 def _scaled_decimal_cell_udf(
     centroids: list[tuple[int, list[float]]],
     cnorms: dict[int, float],
@@ -1076,9 +1223,9 @@ def _scaled_decimal_cell_udf(
     int_digits: int = 16,
 ):
     """Arrow-batched twin of the PORTABLE-DECIMAL assignment
-    (``assign_nearest_cells`` with the ``_pdot``/``_psq_norm`` pair) —
-    the r16 follow-up to :func:`_expr_parity_cell_udf` for the custom
-    math that dominated the streaming bootstrap (measured: 16-20 s of
+    (``assign_nearest_cells`` under ``math="decimal12"``) — the r16
+    follow-up to :func:`_expr_parity_cell_udf` for the decimal math
+    that dominated the streaming bootstrap (measured: 16-20 s of
     interpreted per-element DECIMAL lambdas to assign 2,000 rows at
     k=32 × d=64).
 
@@ -1226,8 +1373,7 @@ def semantic_pairs_from_cells(
     vec_col: str = "embedding",
     cell_col: str = "cell",
     max_cluster: int = 10_000,
-    dot_fn=None,
-    norm_fn=None,
+    math: str = "float",
     norm_col: str | None = None,
     skew_observation=None,
 ) -> DataFrame:
@@ -1236,20 +1382,22 @@ def semantic_pairs_from_cells(
     layout of ``ann_index.build_ivf_index``). The pair stage of
     :func:`semantic_dedup_pairs`, reusable when assignment was
     precomputed at a codebook size the expression path can't carry.
-    ``norm_col`` names a precomputed row-norm column to carry instead of
-    re-deriving it with ``norm_fn``."""
+    ``norm_col`` names a precomputed row-norm column (``math``'s norm)
+    to carry instead of re-deriving it."""
     if not 0.0 <= threshold <= 1.0:
         raise ValueError(f"threshold must be in [0, 1], got {threshold}")
     if max_cluster < 2:
         raise ValueError(f"max_cluster must be >= 2, got {max_cluster}")
     from cassandra_analytics_spark.operators.dedup import _bucket_candidate_pairs
 
-    # marked scaled-decimal math scores pairs in the bit-identical Arrow
-    # kernel (r16): the expression form pays d interpreted decimal
-    # lambdas PER PAIR — the dominant cost of decimal-math pair stages
-    dotf = pair_dot_auto(dot_fn or dot)
-    normf = row_norm_auto(norm_fn or norm)
-    nrm = F.col(norm_col) if norm_col else normf(F.col(vec_col))
+    # a pair stage's per-row work is data-dependent, so vector_op hands
+    # it the math's Arrow kernels where it has them (r16: the decimal
+    # expression pays d interpreted lambdas PER PAIR — the dominant cost
+    # of decimal-math pair stages)
+    pair_dot = vector_op(math, "dot")
+    nrm = (
+        F.col(norm_col) if norm_col else vector_op(math, "norm")(F.col(vec_col))
+    )
     # mixed-dimension vectors would get their pair cosine NULL'd by
     # zip_with's null-padding and silently drop every pair they touch
     # (round-8 continuation probe): fail loudly at the offending pair
@@ -1280,7 +1428,7 @@ def semantic_pairs_from_cells(
     cos = F.when(
         dim_guard,
         F.try_divide(
-            dotf(F.col("pa")["v"], F.col("pb")["v"]),
+            pair_dot(F.col("pa")["v"], F.col("pb")["v"]),
             F.col("pa")["nrm"] * F.col("pb")["nrm"],
         ),
     )
@@ -1309,8 +1457,7 @@ def semantic_dedup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster: int = 10_000,
-    dot_fn=None,
-    norm_fn=None,
+    math: str = "float",
     skew_observation=None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) candidate stage:
@@ -1331,11 +1478,11 @@ def semantic_dedup_pairs(
     Norm discipline (HOFs are interpreted in Spark 4 — they must not be
     recomputed per pair or per centroid): each row's norm is computed
     ONCE and carried through the bucket payload; each CENTROID's norm is
-    computed once up front in a k-row job with the same ``norm_fn``
+    computed once up front in a k-row job with the same norm
     expression and embedded as a literal. Similarity is always
-    ``dot_fn(a, b) / (norm_a * norm_b)`` — pass the portable decimal-sum
-    ``dot_fn``/``norm_fn`` pair for oracle-exact math, or keep the fast
-    JVM defaults.
+    ``dot(a, b) / (norm_a * norm_b)`` under ``math`` — ``"decimal12"``
+    (the portable decimal sum) for oracle-exact math, or the fast JVM
+    ``"float"`` default.
 
     NULL vectors are excluded up front (they have no meaningful cell and
     their NULL cosine could never clear the threshold).
@@ -1346,8 +1493,6 @@ def semantic_dedup_pairs(
         raise ValueError(f"max_cluster must be >= 2, got {max_cluster}")
     if not centroids:
         raise ValueError("semantic_dedup_pairs needs at least one centroid")
-    dotf = dot_fn or dot
-    normf = norm_fn or norm
     # NULL vectors are excluded up front (they have no meaningful cell
     # and their NULL cosine could never clear the threshold); the shared
     # assignment helper carries the row norm so the pair stage reuses it
@@ -1356,8 +1501,7 @@ def semantic_dedup_pairs(
         centroids,
         id_col,
         vec_col,
-        dot_fn=dotf,
-        norm_fn=normf,
+        math=math,
         cell_col="__acell",
         keep_norm_as="__nrm",
     )
@@ -1368,8 +1512,7 @@ def semantic_dedup_pairs(
         vec_col,
         cell_col="__acell",
         max_cluster=max_cluster,
-        dot_fn=dotf,
-        norm_fn=normf,
+        math=math,
         norm_col="__nrm",
         skew_observation=skew_observation,
     )
@@ -1382,8 +1525,7 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster: int = 10_000,
-    dot_fn=None,
-    norm_fn=None,
+    math: str = "float",
     skew_observation=None,
 ) -> DataFrame:
     """SemDeDup removal verdicts: ``(removed, cell, kept_rep)`` — one row
@@ -1404,7 +1546,7 @@ def semantic_dedup(
     ``kept_rep`` chains.
     """
     pairs = semantic_dedup_pairs(
-        df, centroids, threshold, id_col, vec_col, max_cluster, dot_fn, norm_fn,
+        df, centroids, threshold, id_col, vec_col, max_cluster, math,
         skew_observation=skew_observation,
     )
     return removal_verdicts(pairs)

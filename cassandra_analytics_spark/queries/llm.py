@@ -10,7 +10,7 @@ in the oracle SQL.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_analytics_spark.catalog import load_table, spread_scan
@@ -23,6 +23,7 @@ from cassandra_analytics_spark.operators.dedup import (
 from cassandra_analytics_spark.operators.similarity import (
     embedding_near_dup_pairs,
     lit_vector,
+    vector_math,
 )
 from cassandra_analytics_spark.operators.text import quality_features, token_count
 from cassandra_analytics_spark.queries import REGISTRY, query
@@ -50,42 +51,20 @@ DECV_SQL = "DECIMAL(28,12)"
 PQ_RESCORE_FACTOR = 40
 
 
-def _py_psq_norm(vec: list[float]) -> float:
-    """Driver-side scalar twin of :func:`_psq_norm`: double squares ->
-    decimal(.,12) HALF_UP sum -> double -> sqrt. Python's Decimal(x) is
-    the EXACT binary expansion while Spark casts through the shortest-
-    repr BigDecimal; the two can only diverge when a square sits within
-    ~1e-17 relative of a .5e-12 rounding boundary — equality on the
-    fixture is pinned by the oracle hash matches of every query using
-    this helper (and cosine_topk_embeddings' identical inline math)."""
-    import decimal
-    import math
+# the portable decimal cosine every oracle-exact query scores with: double
+# products -> decimal(28,12) HALF_UP -> exact decimal sum -> double (the
+# closed ``"decimal12"`` math of operators/similarity.py)
+_D12 = vector_math("decimal12")
 
-    return math.sqrt(
-        float(
-            sum(
-                decimal.Decimal(x * x).quantize(
-                    decimal.Decimal("1E-12"), rounding=decimal.ROUND_HALF_UP
-                )
-                for x in vec
-            )
-        )
+
+def _portable_query_cosine(vec, qvec: list[float]):
+    """Oracle-exact cosine of ``vec`` against a literal query: decimal12
+    dot over the row norm times the query's norm, computed driver-side
+    the same portable way as the oracle (double squares → decimal(·,12)
+    sum → double → sqrt)."""
+    return _D12.dot(vec, lit_vector(qvec)) / (
+        _D12.norm(vec) * F.lit(_D12.scalar_norm(qvec))
     )
-
-
-def _pdot(a: Column, b: Column) -> Column:
-    """Portable dot product: double products → decimal sum → double."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x.cast("double") * y.cast("double")).cast(DECV)),
-        F.lit(0).cast(DECV),
-        lambda acc, v: (acc + v).cast(DECV),
-    ).cast("double")
-
-
-# the portable pair is integer-exact at scale 10^-12 — the marker lets
-# assign_nearest_cells dispatch big assignments to the bit-identical
-# Arrow kernel (operators/similarity._scaled_decimal_cell_udf, r16)
-_pdot.__scaled_decimal__ = 12
 
 
 # --------------------------------------------------------------------------
@@ -1205,18 +1184,9 @@ def cosine_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not qrows:  # no query vector → no neighbors (ADVICE r6 bug class)
         return spark.createDataFrame([], "vec_id BIGINT, cosine_sim DOUBLE")
     qvec = [float(x) for x in qrows[0]["embedding"]]
-    q = lit_vector(qvec)
-
-    # query norm computed the same portable way as the oracle: double
-    # squares → decimal(·,12) sum → double → sqrt
-    qnorm = _py_psq_norm(qvec)
-
     scored = e.filter(F.col("vec_id") != 0).select(
         "vec_id",
-        (
-            _pdot(F.col("embedding"), q)
-            / (_psq_norm(F.col("embedding")) * F.lit(qnorm))
-        ).alias("cosine_sim"),
+        _portable_query_cosine(F.col("embedding"), qvec).alias("cosine_sim"),
     )
     return scored.orderBy(F.col("cosine_sim").desc(), F.col("vec_id")).limit(10)
 
@@ -1251,7 +1221,7 @@ def quantized_topk_rescored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the oracle bit-for-bit (same contract as cosine_topk_embeddings)
     return quantized_topk(
         corpus, qvec, k=10, vec_col="embedding", rescore_factor=8,
-        dot_fn=_pdot, norm_fn=_psq_norm,
+        math="decimal12",
     )
 
 
@@ -1322,7 +1292,7 @@ def _ann_pq_topk_split(spark: SparkSession, sf_dir: str):
         # quantized_topk_rescored)
         return pq_adc_topk(
             corpus, codebook, qvec, k=10, vec_col="embedding",
-            rescore_factor=8, dot_fn=_pdot, norm_fn=_psq_norm,
+            rescore_factor=8, math="decimal12",
         )
 
     def cleanup() -> None:
@@ -1368,7 +1338,7 @@ def ann_pq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # swaps unabsorbed at sf0.001 — same widening as the append twin
     return query_pq_index(
         spark, path, qvec, k=10, rescore_factor=PQ_RESCORE_FACTOR,
-        dot_fn=_pdot, norm_fn=_psq_norm,
+        math="decimal12",
     )
 
 
@@ -1408,7 +1378,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ann_pq_index_topk / the append twins
     return query_ivf_pq_index(
         spark, path, qvec, k=10, num_probes=8, rescore_factor=PQ_RESCORE_FACTOR,
-        dot_fn=_pdot, norm_fn=_psq_norm,
+        math="decimal12",
     )
 
 
@@ -1460,7 +1430,7 @@ def ann_pq_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # boundary-rank swaps at k*8)
         return query_pq_index(
             spark, path, qvec, k=10, rescore_factor=PQ_RESCORE_FACTOR,
-            dot_fn=_pdot, norm_fn=_psq_norm,
+            math="decimal12",
         ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(path, ignore_errors=True)
@@ -1508,7 +1478,7 @@ def ann_ivf_pq_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # as ann_pq_append_topk
         return query_ivf_pq_index(
             spark, path, qvec, k=10, num_probes=8, rescore_factor=PQ_RESCORE_FACTOR,
-            dot_fn=_pdot, norm_fn=_psq_norm,
+            math="decimal12",
         ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(path, ignore_errors=True)
@@ -1553,7 +1523,7 @@ def ann_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return query_ivf_pq_index(
             spark, path, qvec, k=10, num_probes=8, rescore_factor=PQ_RESCORE_FACTOR,
-            dot_fn=_pdot, norm_fn=_psq_norm,
+            math="decimal12",
         ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(path, ignore_errors=True)
@@ -1611,7 +1581,7 @@ def ann_pq_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # as ann_pq_append_topk
         return query_pq_index(
             spark, path, qvec, k=10, rescore_factor=PQ_RESCORE_FACTOR,
-            dot_fn=_pdot, norm_fn=_psq_norm,
+            math="decimal12",
         ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(path, ignore_errors=True)
@@ -1664,7 +1634,7 @@ def ann_ivf_pq_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return query_ivf_pq_index(
             spark, path, qvec, k=10, num_probes=8, rescore_factor=PQ_RESCORE_FACTOR,
-            dot_fn=_pdot, norm_fn=_psq_norm,
+            math="decimal12",
         ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(path, ignore_errors=True)
@@ -1712,7 +1682,7 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             query_ivf_index(
                 spark, path, qvec, k=10, num_probes=n_cells,
-                dot_fn=_pdot, norm_fn=_psq_norm,
+                math="decimal12",
             )
             .localCheckpoint(eager=True)
         )
@@ -1772,7 +1742,7 @@ def ann_ivf_pq_residual_append_compact_topk(
             )
         return query_ivf_pq_index(
             spark, path, qvec, k=10, num_probes=8, rescore_factor=PQ_RESCORE_FACTOR,
-            dot_fn=_pdot, norm_fn=_psq_norm,
+            math="decimal12",
         ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(path, ignore_errors=True)
@@ -1804,7 +1774,7 @@ def quantized_topk_join_rescored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return quantized_topk(
         corpus, qvec, k=10, vec_col="embedding", rescore_factor=8,
-        dot_fn=_pdot, norm_fn=_psq_norm, rescore_mode="join",
+        math="decimal12", rescore_mode="join",
     )
 
 
@@ -1866,7 +1836,7 @@ def _ann_ivf_quantized_topk_split(spark: SparkSession, sf_dir: str):
         return (
             query_ivf_index_quantized(
                 spark, path, qvec, k=10, num_probes=n_cells,
-                rescore_factor=8, dot_fn=_pdot, norm_fn=_psq_norm,
+                rescore_factor=8, math="decimal12",
             )
             .localCheckpoint(eager=True)
         )
@@ -1951,19 +1921,6 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_near_dup_pairs(corpus, threshold=0.9, num_planes=6)
 
 
-def _psq_norm(a: Column) -> Column:
-    """Portable L2 norm: double squares → decimal sum → double → sqrt
-    (bit-identical across engines; same shape as the cosine_topk oracle)."""
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: (x.cast("double") * x.cast("double")).cast(DECV)),
-            F.lit(0).cast(DECV),
-            lambda acc, v: (acc + v).cast(DECV),
-        ).cast("double")
-    )
-
-
-_psq_norm.__scaled_decimal__ = 12  # see _pdot's marker
 
 
 EMBEDDING_CONFIRMED_ORACLE = f"""
@@ -2098,14 +2055,14 @@ def embedding_near_dup_confirmed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = corpus.select(
         "vec_id",
         F.struct(
-            F.col("embedding").alias("emb"), _psq_norm(F.col("embedding")).alias("nrm")
+            F.col("embedding").alias("emb"), _D12.norm(F.col("embedding")).alias("nrm")
         ).alias("__payload"),
         F.posexplode(sigs).alias("__table", "__sig"),
     )
     pairs = _bucket_candidate_pairs(
         tagged, ["__table", "__sig"], "vec_id", "__payload", 10000
     )
-    pcos = _pdot(F.col("pa")["emb"], F.col("pb")["emb"]) / (
+    pcos = _D12.dot(F.col("pa")["emb"], F.col("pb")["emb"]) / (
         F.col("pa")["nrm"] * F.col("pb")["nrm"]
     )
     return (
@@ -2663,10 +2620,6 @@ def _semantic_centroids(e: DataFrame) -> list[tuple[int, list[float]]]:
     ]
 
 
-#: spec identifier for the portable decimal cosine (_pdot / _psq_norm) —
-#: pinned into every oracle-exact IVF layout so appends with different
-#: math are refused (ann_index spec discipline)
-_PORTABLE_SIM_ID = "portable-decimal-cosine-v1"
 
 
 @query(
@@ -2701,7 +2654,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # by tests/test_confirmed_dedup.py::test_semantic_dedup_cap_premise
     return semantic_dedup(
         corpus, centroids, threshold=0.9, id_col="vec_id", vec_col="embedding",
-        max_cluster=10_000, dot_fn=_pdot, norm_fn=_psq_norm,
+        max_cluster=10_000, math="decimal12",
     ).orderBy("removed")
 
 
@@ -2888,10 +2841,9 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "doc_id BIGINT, rrf_fp BIGINT, n_lists BIGINT"
         )
     qvec = [float(x) for x in qrows[0]["embedding"]]
-    q = lit_vector(qvec)
     cos = e.filter(F.col("vec_id") != 0).select(
         F.col("vec_id").alias("doc_id"),
-        (_pdot(F.col("embedding"), q) / (_psq_norm(F.col("embedding")) * F.lit(_py_psq_norm(qvec)))).alias("cs"),
+        _portable_query_cosine(F.col("embedding"), qvec).alias("cs"),
     )
     cos_top = cos.orderBy(F.desc("cs"), "doc_id").limit(50)
     cos_rank = cos_top.select(
@@ -2987,11 +2939,11 @@ def dedup_semantic_on_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per-(row x centroid) sim_fn re-evaluated both norms k times)
         build_ivf_index(
             corpus, path, centroids=centroids,
-            dot_fn=_pdot, norm_fn=_psq_norm, sim_id=_PORTABLE_SIM_ID,
+            math="decimal12",
         )
         return semantic_dedup_on_index(
             spark, path, threshold=0.9, max_cluster=10_000,
-            dot_fn=_pdot, norm_fn=_psq_norm,
+            math="decimal12",
         ).orderBy("removed").localCheckpoint(eager=True)
     finally:
         shutil.rmtree(path, ignore_errors=True)
@@ -3032,12 +2984,12 @@ def dedup_semantic_on_index_quantized(
     try:
         build_ivf_index(
             corpus, path, centroids=centroids,
-            dot_fn=_pdot, norm_fn=_psq_norm, sim_id=_PORTABLE_SIM_ID,
+            math="decimal12",
             quantize=True,
         )
         return semantic_dedup_on_index(
             spark, path, threshold=0.9, max_cluster=10_000,
-            dot_fn=_pdot, norm_fn=_psq_norm, use_codes=True,
+            math="decimal12", use_codes=True,
         ).orderBy("removed").localCheckpoint(eager=True)
     finally:
         shutil.rmtree(path, ignore_errors=True)
@@ -3049,7 +3001,7 @@ def dedup_semantic_on_index_quantized(
     doc="The GROWING-corpus SemDeDup path, ORACLE-EXACT end to end: the "
     "IVF layout is built over HALF the corpus, the other half arrives "
     "later via ann_index.append_to_ivf_index — which assigns the new "
-    "vectors with the PINNED codebook, assignment mode and sim_id from "
+    "vectors with the PINNED codebook, assignment mode and math from "
     "the persisted spec (refusing any mismatch) — and the within-cell "
     "dedup runs off the extended layout. Same fixed vec_id<32 centroids, "
     "portable decimal cosine, and oracle as dedup_semantic/_on_index, so "
@@ -3086,15 +3038,15 @@ def dedup_semantic_append_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         build_ivf_index(
             first, path, centroids=centroids,
-            dot_fn=_pdot, norm_fn=_psq_norm, sim_id=_PORTABLE_SIM_ID,
+            math="decimal12",
         )
         append_to_ivf_index(
             second, path,
-            dot_fn=_pdot, norm_fn=_psq_norm, sim_id=_PORTABLE_SIM_ID,
+            math="decimal12",
         )
         return semantic_dedup_on_index(
             spark, path, threshold=0.9, max_cluster=10_000,
-            dot_fn=_pdot, norm_fn=_psq_norm,
+            math="decimal12",
         ).orderBy("removed").localCheckpoint(eager=True)
     finally:
         shutil.rmtree(path, ignore_errors=True)
@@ -3129,8 +3081,6 @@ def ann_lsh_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not qrows:
         return spark.createDataFrame([], "vec_id BIGINT, cosine_sim DOUBLE")
     qvec = [float(x) for x in qrows[0]["embedding"]]
-    q = lit_vector(qvec)
-    qnorm = _py_psq_norm(qvec)
 
     first = e.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 0)
     second = e.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 1)
@@ -3141,10 +3091,9 @@ def ann_lsh_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         layout = spark.read.parquet(path)
         scored = layout.filter(F.col("vec_id") != 0).select(
             "vec_id",
-            (
-                _pdot(F.col("embedding"), q)
-                / (_psq_norm(F.col("embedding")) * F.lit(qnorm))
-            ).alias("cosine_sim"),
+            _portable_query_cosine(F.col("embedding"), qvec).alias(
+                "cosine_sim"
+            ),
         )
         return (
             scored.orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
@@ -3227,9 +3176,7 @@ def _streaming_semantic_dedup_split(spark: SparkSession, sf_dir: str):
             centroids=centroids,
             threshold=0.9,
             checkpoint_dir=os.path.join(tmp, "ckpt"),
-            dot_fn=_pdot,
-            norm_fn=_psq_norm,
-            sim_id=_PORTABLE_SIM_ID,
+            math="decimal12",
         )
         state["q"] = q
         try:
@@ -3329,9 +3276,7 @@ def streaming_semantic_dedup_quantized(
             centroids=centroids,
             threshold=0.9,
             checkpoint_dir=os.path.join(tmp, "ckpt"),
-            dot_fn=_pdot,
-            norm_fn=_psq_norm,
-            sim_id=_PORTABLE_SIM_ID,
+            math="decimal12",
             quantize=True,
         )
         try:
@@ -3490,9 +3435,7 @@ def _streaming_semantic_dedup_pq_run(
             centroids=centroids,
             threshold=0.9,
             checkpoint_dir=os.path.join(tmp, "ckpt"),
-            dot_fn=_pdot,
-            norm_fn=_psq_norm,
-            sim_id=_PORTABLE_SIM_ID,
+            math="decimal12",
             pq=pq_opts,
         )
         try:
@@ -3589,7 +3532,7 @@ def ann_ivf_knn_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             ivf_knn_join(
                 queries_df, path, k=5, num_probes=n_cells,
-                dot_fn=_pdot, norm_fn=_psq_norm,
+                math="decimal12",
             )
             .orderBy("qid", "vec_id")
             .localCheckpoint(eager=True)
@@ -3676,7 +3619,7 @@ def ann_ivf_knn_join_string_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             ivf_knn_join(
                 queries_df, path, k=5, num_probes=n_cells, id_col="doc_id",
-                dot_fn=_pdot, norm_fn=_psq_norm,
+                math="decimal12",
             )
             .orderBy("qid", "doc_id")
             .localCheckpoint(eager=True)
@@ -3724,7 +3667,7 @@ def ann_ivf_quantized_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             ivf_knn_join(
                 queries_df, path, k=5, num_probes=n_cells,
-                dot_fn=_pdot, norm_fn=_psq_norm,
+                math="decimal12",
                 use_codes=True, rescore_factor=8,
             )
             .orderBy("qid", "vec_id")
@@ -3779,7 +3722,7 @@ def ann_ivf_pq_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             ivf_knn_join(
                 queries_df, path, k=5, num_probes=n_cells,
-                dot_fn=_pdot, norm_fn=_psq_norm,
+                math="decimal12",
                 use_pq=True, rescore_factor=PQ_RESCORE_FACTOR,
             )
             .orderBy("qid", "vec_id")

@@ -4,7 +4,7 @@ growing embedding corpus — the embedding twin of
 layout instead of the bucketed shingle index.
 
 Per micro-batch: assign the batch's vectors to cells with the layout's
-PINNED codebook/mode/sim (``ann_index.assign_with_index_spec``), find
+PINNED codebook/mode/math (``ann_index.assign_with_index_spec``), find
 near-dup pairs where at least one side is in the batch — an equi-join
 on the cell key against only the layout partitions the batch touches
 (partition pruning), plus the within-batch pair expansion — publish the
@@ -56,13 +56,12 @@ from pyspark.sql.streaming import StreamingQuery
 from cassandra_analytics_spark.operators.ann_index import (
     assign_with_index_spec,
     build_ivf_index,
+    read_centroids,
 )
 from cassandra_analytics_spark.operators.similarity import (
-    dot as _fast_dot,
-    norm as _fast_norm,
-    pair_dot_auto,
-    row_norm_auto,
     semantic_pairs_from_cells,
+    vector_math,
+    vector_op,
 )
 
 
@@ -103,9 +102,7 @@ def run_semantic_dedup_stream(
     checkpoint_dir: str | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dot_fn=None,
-    norm_fn=None,
-    sim_id: str | None = None,
+    math: str = "float",
     max_cell: int = 10_000,
     assignment: str = "expr",
     quantize: bool = False,
@@ -178,9 +175,9 @@ def run_semantic_dedup_stream(
     the corpus, k ∝ expected N). The first non-empty batch builds the
     IVF layout at ``index_path`` with it (idempotent overwrite on
     replay); every later batch assigns with the layout's pinned spec and
-    refuses codebook/math mismatches. ``dot_fn``/``norm_fn``/``sim_id``
-    follow :func:`~cassandra_analytics_spark.operators.ann_index.
-    build_ivf_index`'s custom-math contract.
+    refuses codebook/math mismatches. ``math`` follows
+    :func:`~cassandra_analytics_spark.operators.ann_index.
+    build_ivf_index`'s contract.
 
     Published rows: ``(a, b, cell, cosine_sim, batch_id)`` with a < b,
     one row per near-dup pair the batch completed (both-in-batch pairs
@@ -204,6 +201,7 @@ def run_semantic_dedup_stream(
     """
     import tempfile
 
+    vector_math(math)
     if not 0.0 <= threshold <= 1.0:
         raise ValueError(f"threshold must be in [0, 1], got {threshold}")
     if not centroids:
@@ -227,8 +225,7 @@ def run_semantic_dedup_stream(
             batch_df, batch_id,
             index_path=index_path, pairs_out=pairs_out,
             centroids=centroids, threshold=threshold,
-            id_col=id_col, vec_col=vec_col,
-            dot_fn=dot_fn, norm_fn=norm_fn, sim_id=sim_id,
+            id_col=id_col, vec_col=vec_col, math=math,
             max_cell=max_cell, assignment=assignment, quantize=quantize,
             pq=pq, codebook_cache=codebook_cache,
         )
@@ -250,9 +247,7 @@ def process_semantic_batch(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dot_fn=None,
-    norm_fn=None,
-    sim_id: str | None = None,
+    math: str = "float",
     max_cell: int = 10_000,
     assignment: str = "expr",
     quantize: bool = False,
@@ -286,8 +281,7 @@ def process_semantic_batch(
     same directory with the same rows, and the append finally lands
     (round-10 executed probe; the bulk writer's crash-at-commit tests
     are the pattern)."""
-    dotf = dot_fn or _fast_dot
-    normf = norm_fn or _fast_norm
+    vector_math(math)
     spark = batch_df.sparkSession
     # in-batch duplicate ids collapse to a deterministic winner
     # (greatest vector wins) so replays republish identical pairs
@@ -354,16 +348,11 @@ def process_semantic_batch(
             # residuals ALWAYS on: the cross-pair prefilter's per-row
             # proven bound is what keeps PQ verdicts float-identical.
             # ``assignment`` passes through like the SQ8 bootstrap —
-            # "vectorized" is required at k ∝ N codebook sizes (it is
-            # ignored under custom math, which save refuses to combine
-            # with the vectorized path, same as build_ivf_index)
+            # "vectorized" is required at k ∝ N codebook sizes
             _, boot_cb = save_ivf_pq_index(
                 batch, index_path, centroids=centroids,
                 id_col=id_col, vec_col=vec_col, keep_vec=True,
-                dot_fn=dot_fn, norm_fn=norm_fn, sim_id=sim_id,
-                residuals=True,
-                **({} if dot_fn is not None or norm_fn is not None
-                   else {"assignment": assignment}),
+                math=math, assignment=assignment, residuals=True,
                 **{
                     k: pq[k]
                     for k in sorted(_PQ_OPTION_KEYS)
@@ -378,13 +367,13 @@ def process_semantic_batch(
         else:
             build_ivf_index(
                 batch, index_path, id_col=id_col, vec_col=vec_col,
-                centroids=centroids, dot_fn=dot_fn, norm_fn=norm_fn,
-                sim_id=sim_id, assignment=assignment, quantize=quantize,
+                centroids=centroids, math=math, assignment=assignment,
+                quantize=quantize,
             )
         pairs = semantic_pairs_from_cells(
             spark.read.parquet(index_path),
             threshold, id_col, vec_col, cell_col="cell",
-            max_cluster=max_cell, dot_fn=dot_fn, norm_fn=norm_fn,
+            max_cluster=max_cell, math=math,
         )
         pairs.withColumn("batch_id", F.lit(batch_id)).write.mode(
             "overwrite"
@@ -404,19 +393,14 @@ def process_semantic_batch(
             "is an IVF-PQ layout — drop quantize to follow the spec"
         )
 
-    def _load_centroids():
-        return sorted(
-            (int(r.cid), [float(x) for x in r.centroid])
-            for r in spark.read.parquet(
-                f"{index_path}_centroids"
-            ).collect()
-        )
-
-    cents = _cached_meta("ivf_centroids", _load_centroids)
+    cents = _cached_meta(
+        "ivf_centroids", lambda: read_centroids(spark, index_path)
+    )
     # the codebook's norms are as frozen as the codebook: computed with
     # the layout's own norm expression ONCE per stream instead of a
-    # k-row job per trigger (r17; only the custom-math mode consumes
-    # them — built-in modes fold norms into the assignment expression)
+    # k-row job per trigger (r17; only the norm-once "custom" mode
+    # consumes them — built-in modes fold norms into the assignment
+    # expression)
     cnorms = None
     if raw_spec.get("assignment") == "custom":
         from cassandra_analytics_spark.operators.similarity import (
@@ -425,7 +409,7 @@ def process_semantic_batch(
 
         cnorms = _cached_meta(
             "ivf_cnorms",
-            lambda: centroid_norms(spark, cents, norm_fn),
+            lambda: centroid_norms(spark, cents, math),
         )
     pq_cb = None
     if is_pq_layout:
@@ -450,16 +434,18 @@ def process_semantic_batch(
             if codebook_cache is not None:
                 codebook_cache[cache_key] = pq_cb
         assigned = assign_with_ivf_pq_spec(
-            batch, index_path, id_col=id_col, vec_col=vec_col,
-            dot_fn=dot_fn, norm_fn=norm_fn, sim_id=sim_id,
+            batch, index_path, id_col=id_col, vec_col=vec_col, math=math,
             codebook=pq_cb, spec=pq_spec, centroids=cents,
             cnorms=cnorms,
-        ).withColumn("__nrm", row_norm_auto(normf)(F.col(vec_col)))
+        )
     else:
         assigned = assign_with_index_spec(
-            batch, index_path, id_col, vec_col, dot_fn, norm_fn, sim_id,
+            batch, index_path, id_col, vec_col, math,
             spec=raw_spec, centroids=cents, cnorms=cnorms,
-        ).withColumn("__nrm", row_norm_auto(normf)(F.col(vec_col)))
+        )
+    assigned = assigned.withColumn(
+        "__nrm", vector_op(math, "norm")(F.col(vec_col))
+    )
     # the batch plan feeds FOUR actions (touched-cells collect, within-
     # batch pairs, batch-vs-corpus join, layout append) — unpersisted,
     # each re-reads the micro-batch source AND re-runs the assignment
@@ -471,7 +457,7 @@ def process_semantic_batch(
     try:
         _publish_and_append(
             spark, assigned, batch_id, index_path, out_dir,
-            threshold, id_col, vec_col, dot_fn, norm_fn, dotf, normf,
+            threshold, id_col, vec_col, math,
             max_cell, on_published, pq_codebook=pq_cb,
             raw_spec=raw_spec,
         )
@@ -481,7 +467,7 @@ def process_semantic_batch(
 
 def _publish_and_append(
     spark, assigned, batch_id, index_path, out_dir,
-    threshold, id_col, vec_col, dot_fn, norm_fn, dotf, normf,
+    threshold, id_col, vec_col, math,
     max_cell, on_published, pq_codebook=None, raw_spec=None,
 ) -> None:
     # On a QUANTIZED layout, BOTH pair stages carry the int8 codes
@@ -541,19 +527,19 @@ def _publish_and_append(
         # float-identical under either pinned encoding
         in_pairs = pq_pairs_from_cells(
             assigned, pq_codebook, threshold, id_col, vec_col,
-            max_cluster=max_cell, dot_fn=dot_fn, norm_fn=norm_fn,
+            max_cluster=max_cell, math=math,
             encoding=raw_spec.get("encoding") or "raw",
         )
     elif quantized:
         in_pairs = _quantized_pairs_from_cells(
             assigned, threshold, id_col, vec_col, max_cell,
-            dot_fn, norm_fn, None,
+            math, None,
             dim=(raw_spec or {}).get("dim"),
         )
     else:
         in_pairs = semantic_pairs_from_cells(
             assigned, threshold, id_col, vec_col, cell_col="cell",
-            max_cluster=max_cell, dot_fn=dot_fn, norm_fn=norm_fn,
+            max_cluster=max_cell, math=math,
             norm_col="__nrm",
         )
 
@@ -567,19 +553,19 @@ def _publish_and_append(
     if is_pq:
         cross = _cross_pairs_pq(
             spark, assigned, index_path, touched, threshold,
-            id_col, vec_col, dotf, normf, max_cell, raw_spec,
+            id_col, vec_col, math, max_cell, raw_spec,
             pq_codebook,
         )
     elif quantized:
         cross = _cross_pairs_quantized(
             spark, assigned, index_path, touched, threshold,
-            id_col, vec_col, dotf, normf, max_cell,
+            id_col, vec_col, math, max_cell,
             dim=(raw_spec or {}).get("dim"),
         )
     else:
         cross = _cross_pairs_float(
             spark, assigned, index_path, touched, threshold,
-            id_col, vec_col, dotf, normf, max_cell,
+            id_col, vec_col, math, max_cell,
         )
     pairs = in_pairs.unionByName(cross).dropDuplicates(["a", "b"])
     pairs.withColumn("batch_id", F.lit(batch_id)).write.mode(
@@ -597,7 +583,7 @@ def _publish_and_append(
 
 def _cross_pairs_float(
     spark, assigned, index_path, touched, threshold,
-    id_col, vec_col, dotf, normf, max_cell,
+    id_col, vec_col, math, max_cell,
 ):
     """Batch-vs-corpus near-dup pairs over a FLOAT layout: the corpus
     side of the cell join carries the float vectors directly."""
@@ -607,11 +593,9 @@ def _cross_pairs_float(
     occupancy = corpus.groupBy("cell").agg(
         F.count(F.lit(1)).alias("__occ")
     )
-    # marked scaled-decimal math runs in the bit-identical Arrow
-    # kernels (r16): the expression forms cost d interpreted decimal
-    # lambdas per corpus ROW (norm) and per candidate PAIR (dot) — the
-    # dominant cost of the float path's trigger
-    pair_dotf = pair_dot_auto(dotf)
+    # the math's Arrow kernels where it has them (r16: the decimal
+    # expression forms cost d interpreted lambdas per corpus ROW (norm)
+    # and per candidate PAIR (dot) — the dominant cost of this trigger)
     b = assigned.select(
         F.col(id_col).alias("__bid_"),
         F.col(vec_col).alias("__bvec"),
@@ -627,12 +611,12 @@ def _cross_pairs_float(
         .select(
             F.col(id_col).alias("__cid_"),
             F.col(vec_col).alias("__cvec"),
-            row_norm_auto(normf)(F.col(vec_col)).alias("__cnrm"),
+            vector_op(math, "norm")(F.col(vec_col)).alias("__cnrm"),
             "cell",
         )
     )
     cos = F.try_divide(
-        pair_dotf(F.col("__bvec"), F.col("__cvec")),
+        vector_op(math, "dot")(F.col("__bvec"), F.col("__cvec")),
         F.col("__bnrm") * F.col("__cnrm"),
     )
     return (
@@ -650,7 +634,7 @@ def _cross_pairs_float(
 
 def _cross_pairs_quantized(
     spark, assigned, index_path, touched, threshold,
-    id_col, vec_col, dotf, normf, max_cell, dim=None,
+    id_col, vec_col, math, max_cell, dim=None,
 ):
     """Batch-vs-corpus pairs over a QUANTIZED layout: BOTH sides of the
     batch x occupancy expansion carry int8 CODES (+ four doubles)
@@ -667,9 +651,8 @@ def _cross_pairs_quantized(
     threshold - that margin - 1e-9 (double-rounding headroom): no true
     pair can be dropped, false survivors die in the exact confirm, and
     the published verdicts are IDENTICAL to the float path (pinned by
-    the shared driver oracle and the boundary test). Custom
-    dot_fn/norm_fn enter ONLY the exact confirm — the bound is stated
-    for true cosine.
+    the shared driver oracle and the boundary test). ``math`` enters
+    ONLY the exact confirm — the bound is stated for true cosine.
 
     WHY symmetric (round 15): the r13 one-sided form kept the batch
     side exact float, which carried the batch's FLOAT vector through
@@ -689,12 +672,9 @@ def _cross_pairs_quantized(
     unchanged."""
     from cassandra_analytics_spark.operators.ann_index import (
         _QCODE,
-        _QMIN,
-        _QSCALE,
-    )
-    from cassandra_analytics_spark.operators.quantize import (
-        _EXPR_MAX_DIM,
-        _sq8_u_dot_udf,
+        _sq8_margin,
+        _sq8_recon_dot,
+        _sq8_row_stats,
     )
 
     corpus = spark.read.parquet(index_path).filter(
@@ -704,17 +684,8 @@ def _cross_pairs_quantized(
         F.count(F.lit(1)).alias("__occ")
     )
 
-    # per-row code stats (map-side, once per ROW, never per pair):
-    # u = code + 128, reconstructed norm from the closed form, r
-    u = F.transform(
-        F.col(_QCODE), lambda cc: cc.cast("double") + F.lit(128.0)
-    )
-    su = F.aggregate(u, F.lit(0.0), lambda acc, x: acc + x)
-    suu = F.aggregate(u, F.lit(0.0), lambda acc, x: acc + x * x)
-    d = F.size(F.col(_QCODE)).cast("double")
-    s, m = F.col(_QSCALE), F.col(_QMIN)
-    nrm = F.sqrt(s * s * suu + F.lit(2.0) * s * m * su + d * m * m)
-    r = s * F.sqrt(d) / F.lit(2.0)
+    # per-row code stats (map-side, once per ROW, never per pair)
+    s, m, su, nrm, r = _sq8_row_stats()
 
     c = (
         corpus.filter(F.col(_QCODE).isNotNull())
@@ -744,32 +715,15 @@ def _cross_pairs_quantized(
         nrm.alias("__brec"),
         r.alias("__br"),
     )
-    # x_hat . y_hat = sb*sc*Sum(ub*uc) + sb*mc*Sum(ub) + sc*mb*Sum(uc)
-    #                 + d*mb*mc  (the _quantized_pairs_from_cells form)
-    if dim is not None and dim > _EXPR_MAX_DIM:
-        uu = _sq8_u_dot_udf()(F.col("__bq"), F.col("__cq"))
-    else:
-        uu = F.aggregate(
-            F.zip_with(
-                F.col("__bq"), F.col("__cq"),
-                lambda x, y: (x.cast("double") + F.lit(128.0))
-                * (y.cast("double") + F.lit(128.0)),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    dq = F.size(F.col("__bq")).cast("double")
-    dot_rec = (
-        F.col("__bs") * F.col("__cs") * uu
-        + F.col("__bs") * F.col("__cm") * F.col("__bsu")
-        + F.col("__cs") * F.col("__bm") * F.col("__csu")
-        + dq * F.col("__bm") * F.col("__cm")
+    # the _quantized_pairs_from_cells reconstruction dot and margin
+    dot_rec = _sq8_recon_dot(
+        *map(F.col, ("__bq", "__bs", "__bm", "__bsu")),
+        *map(F.col, ("__cq", "__cs", "__cm", "__csu")),
+        dim,
     )
     approx = F.try_divide(dot_rec, F.col("__brec") * F.col("__cnrm"))
-    margin = (
-        F.try_divide(F.lit(2.0) * F.col("__br"), F.col("__brec"))
-        + F.try_divide(F.lit(2.0) * F.col("__cr"), F.col("__cnrm"))
-        + F.lit(1e-9)
+    margin = _sq8_margin(
+        F.col("__br"), F.col("__brec"), F.col("__cr"), F.col("__cnrm")
     )
     survivors = (
         b.join(c, "cell")
@@ -797,8 +751,8 @@ def _cross_pairs_quantized(
         F.col("__nrm").alias("__bnrm"),
     )
     cos = F.try_divide(
-        pair_dot_auto(dotf)(F.col("__bvec"), F.col("__cvec")),
-        F.col("__bnrm") * row_norm_auto(normf)(F.col("__cvec")),
+        vector_op(math, "dot")(F.col("__bvec"), F.col("__cvec")),
+        F.col("__bnrm") * vector_op(math, "norm")(F.col("__cvec")),
     )
     return (
         survivors.join(floats, ["cell", "__cid_"])
@@ -816,7 +770,7 @@ def _cross_pairs_quantized(
 
 def _cross_pairs_pq(
     spark, assigned, index_path, touched, threshold,
-    id_col, vec_col, dotf, normf, max_cell, spec, codebook=None,
+    id_col, vec_col, math, max_cell, spec, codebook=None,
 ):
     """Batch-vs-corpus pairs over an IVF-PQ layout: the corpus side of
     the batch x occupancy expansion carries m-byte PQ CODES plus three
@@ -840,9 +794,9 @@ def _cross_pairs_pq(
     a pair survives to confirmation iff its SDC cosine is ≥ threshold
     − that margin − 1e-9 (double-rounding headroom): no true pair can
     be dropped, false survivors die in the exact float confirm, and
-    the published verdicts are IDENTICAL to the float path. Custom
-    dot_fn/norm_fn enter ONLY the exact confirm (the bound is stated
-    for standard float math) — the SQ8 twin's split.
+    the published verdicts are IDENTICAL to the float path. ``math``
+    enters ONLY the exact confirm (the bound is stated for standard
+    float math) — the SQ8 twin's split.
 
     WHY symmetric (round 15): the round-14 asymmetric form
     (``pq_adc_dot_expr`` of batch float vs corpus codes) carried the
@@ -986,8 +940,8 @@ def _cross_pairs_pq(
         F.col("__nrm").alias("__bnrm"),
     )
     cos = F.try_divide(
-        pair_dot_auto(dotf)(F.col("__bvec"), F.col("__cvec")),
-        F.col("__bnrm") * row_norm_auto(normf)(F.col("__cvec")),
+        vector_op(math, "dot")(F.col("__bvec"), F.col("__cvec")),
+        F.col("__bnrm") * vector_op(math, "norm")(F.col("__cvec")),
     )
     return (
         survivors.join(floats, ["cell", "__cid_"])

@@ -86,7 +86,6 @@ def main() -> None:
         pq_encode,
         train_pq_codebook,
     )
-    from cassandra_analytics_spark.queries.llm import _pdot, _psq_norm
 
     sc.setJobDescription("profile: pq train")
     cb = step(
@@ -101,7 +100,7 @@ def main() -> None:
         enc = pq_encode(corpus, cb, keep_vec=True)
         return pq_adc_topk(
             enc, cb, qvec, k=10, vec_col="embedding", rescore_factor=8,
-            dot_fn=_pdot, norm_fn=_psq_norm,
+            math="decimal12",
         ).write.mode("overwrite").format("noop").save()
 
     step("pq: encode+adc+rescore probe", pq_probe)
@@ -112,7 +111,7 @@ def main() -> None:
     enc = pq_encode(corpus, cb, keep_vec=True)
     df = pq_adc_topk(
         enc, cb, qvec, k=10, vec_col="embedding", rescore_factor=8,
-        dot_fn=_pdot, norm_fn=_psq_norm,
+        math="decimal12",
     )
     print(f"{time.time() - t0:7.2f}s  pq: plan construction only", flush=True)
 

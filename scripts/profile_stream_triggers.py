@@ -28,10 +28,7 @@ def main() -> None:
     n_triggers = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from cassandra_analytics_spark.queries.llm import (
-        _PORTABLE_SIM_ID,
-        _pdot,
         _planted_corpus,
-        _psq_norm,
         _semantic_centroids,
     )
     from cassandra_analytics_spark.operators.similarity import removal_verdicts
@@ -67,9 +64,7 @@ def main() -> None:
             centroids=centroids,
             threshold=0.9,
             checkpoint_dir=os.path.join(tmp, "ckpt"),
-            dot_fn=_pdot,
-            norm_fn=_psq_norm,
-            sim_id=_PORTABLE_SIM_ID,
+            math="decimal12",
         )
         t0 = time.time()
         q.processAllAvailable()

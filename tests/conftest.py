@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from cassandra_analytics_spark.session import get_session
@@ -80,9 +82,31 @@ _SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    matched, files = set(), set()
     for item in items:
-        nodeid = item.nodeid
-        if nodeid.startswith("tests/"):
-            nodeid = nodeid[len("tests/"):]
+        nodeid = item.nodeid.removeprefix("tests/")
+        files.add(nodeid.split("::")[0])
         if nodeid in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+            matched.add(nodeid)
+    # drift guard: an entry whose file was collected WHOLE but which
+    # matched no item names a renamed or deleted test — it would
+    # silently fall out of the slow lane (or into the default run).
+    # Files selected by node id (``file.py::test``) are only partly
+    # collected, so they are exempt.
+    partial = {
+        os.path.basename(arg.split("::")[0])
+        for arg in config.args
+        if "::" in arg
+    }
+    stale = sorted(
+        entry
+        for entry in _SLOW_TESTS - matched
+        if entry.split("::")[0] in files - partial
+    )
+    if stale:
+        raise pytest.UsageError(
+            "tests/conftest.py _SLOW_TESTS names tests that were not "
+            f"collected from their (collected) files: {stale} — update "
+            "the list for renamed or deleted tests"
+        )

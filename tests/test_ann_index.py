@@ -328,33 +328,29 @@ def test_append_equals_rebuild(spark, tmp_path, mode):
 
 
 def test_append_custom_math_and_spec_mismatches(spark, tmp_path):
-    """Spec pinning: a custom-math index demands the same sim_id (and
-    functions) on append; built-in-mode indexes refuse custom math;
-    legacy layouts without a spec refuse appends; empty layouts refuse
-    appends; ragged appended vectors die loudly."""
+    """Spec pinning: a decimal12 index appends with its own math (build +
+    append == build-once) and refuses an append presenting the other
+    math, as does a float index; legacy layouts without a spec refuse
+    appends; empty layouts refuse appends; ragged appended vectors die
+    loudly."""
     from cassandra_analytics_spark.operators.ann_index import (
         append_to_ivf_index,
         build_ivf_index,
         read_ivf_spec,
         semantic_dedup_on_index,
     )
-    from cassandra_analytics_spark.operators.similarity import dot as sdot
-    from cassandra_analytics_spark.operators.similarity import norm as snorm
 
     both = _tiny_corpus(spark, range(30))
     a = both.filter(F.col("vec_id") < 15)
     b = both.filter(F.col("vec_id") >= 15)
 
-    # custom math roundtrip: build+append == build-once
+    # decimal12 roundtrip: build+append == build-once (the append
+    # follows the spec's math without being told)
     cpath = str(tmp_path / "custom")
-    cents = build_ivf_index(
-        a, cpath, num_centroids=4, dot_fn=sdot, norm_fn=snorm, sim_id="jvm-v1"
-    )
-    append_to_ivf_index(b, cpath, dot_fn=sdot, norm_fn=snorm, sim_id="jvm-v1")
+    cents = build_ivf_index(a, cpath, num_centroids=4, math="decimal12")
+    append_to_ivf_index(b, cpath)
     fpath = str(tmp_path / "custom_full")
-    build_ivf_index(
-        both, fpath, centroids=cents, dot_fn=sdot, norm_fn=snorm, sim_id="jvm-v1"
-    )
+    build_ivf_index(both, fpath, centroids=cents, math="decimal12")
     inc = {
         (r.vec_id, r.cell)
         for r in spark.read.parquet(cpath).select("vec_id", "cell").collect()
@@ -364,21 +360,20 @@ def test_append_custom_math_and_spec_mismatches(spark, tmp_path):
         for r in spark.read.parquet(fpath).select("vec_id", "cell").collect()
     }
     assert inc == full and len(inc) == 30
-    assert read_ivf_spec(spark, cpath)["sim_id"] == "jvm-v1"
+    # the on-disk spec format is unchanged: decimal12 is "custom" + its id
+    spec = read_ivf_spec(spark, cpath)
+    assert (spec["assignment"], spec["sim_id"]) == (
+        "custom", "portable-decimal-cosine-v1",
+    )
 
-    # mismatches are named errors
-    with pytest.raises(ValueError, match="sim_id mismatch"):
-        append_to_ivf_index(b, cpath, dot_fn=sdot, norm_fn=snorm, sim_id="other")
-    with pytest.raises(ValueError, match="custom similarity"):
-        append_to_ivf_index(b, cpath)
+    # an append presenting the other math is a named error, both ways
+    with pytest.raises(ValueError, match="math mismatch"):
+        append_to_ivf_index(b, cpath, math="float")
     epath = str(tmp_path / "exprmode")
     build_ivf_index(a, epath, num_centroids=4)
-    with pytest.raises(ValueError, match="must not pass custom"):
-        append_to_ivf_index(b, epath, dot_fn=sdot, norm_fn=snorm, sim_id="x")
-    with pytest.raises(ValueError, match="sim_id"):
-        build_ivf_index(a, str(tmp_path / "nope"), dot_fn=sdot, norm_fn=snorm)
-    with pytest.raises(ValueError, match="only meaningful"):
-        build_ivf_index(a, str(tmp_path / "nope2"), sim_id="x")
+    assert read_ivf_spec(spark, epath)["sim_id"] is None
+    with pytest.raises(ValueError, match="math mismatch"):
+        append_to_ivf_index(b, epath, math="decimal12")
 
     # legacy layout (no spec file) refuses append with steering
     legacy = str(tmp_path / "legacy")
@@ -513,17 +508,16 @@ def test_torn_rebuild_is_loud_not_silently_stale(spark, tmp_path):
 
 
 def test_custom_math_refuses_vectorized_mode(spark, tmp_path):
-    """Custom dot_fn/norm_fn run through the expression path; silently
-    downgrading an explicit assignment='vectorized' request would
-    surprise exactly the large-codebook callers who asked for it."""
+    """decimal12 runs the norm-once path; silently downgrading an
+    explicit assignment='vectorized' request would surprise exactly the
+    large-codebook callers who asked for it."""
     from cassandra_analytics_spark.operators.ann_index import build_ivf_index
-    from cassandra_analytics_spark.operators.similarity import dot as sdot
 
     df = _tiny_corpus(spark, range(4))
     with pytest.raises(ValueError, match="no vectorized path"):
         build_ivf_index(
             df, str(tmp_path / "x"), assignment="vectorized",
-            dot_fn=sdot, sim_id="j",
+            math="decimal12",
         )
 
 
@@ -671,12 +665,10 @@ def test_ivf_knn_join_qid_uniqueness_and_probe_bounds(spark, tmp_path):
 
 
 def test_mixed_math_read_contract(spark, tmp_path):
-    """The pinned round-10 decision (_validate_read_math): read-time
-    scoring math is a free choice; sim_id is VALIDATED when presented
-    (refused on mismatch, like the append path); reading a custom-math
-    layout without it is sanctioned but LOUD; incoherent claims (sim_id
-    without its functions, sim_id against a built-in layout or a
-    spec-less legacy layout) are named errors."""
+    """Read-time scoring math is a free choice: a read takes the
+    layout's math from its spec by default (silently — no warning), and
+    an explicit override of either math is accepted on either layout
+    (routing is driver-side float, so the override moves scores only)."""
     import warnings as w
 
     from cassandra_analytics_spark.operators.ann_index import (
@@ -684,17 +676,10 @@ def test_mixed_math_read_contract(spark, tmp_path):
         ivf_knn_join,
         query_ivf_index,
     )
-    from cassandra_analytics_spark.operators.similarity import (
-        dot as sdot,
-        norm as snorm,
-    )
 
     corpus = _tiny_corpus(spark, range(50, 90))
     custom = str(tmp_path / "custom")
-    build_ivf_index(
-        corpus, custom, num_centroids=4,
-        dot_fn=sdot, norm_fn=snorm, sim_id="twin-v1",
-    )
+    build_ivf_index(corpus, custom, num_centroids=4, math="decimal12")
     builtin = str(tmp_path / "builtin")
     build_ivf_index(corpus, builtin, num_centroids=4)
     qv = [0.1] * 8
@@ -702,46 +687,27 @@ def test_mixed_math_read_contract(spark, tmp_path):
         F.col("vec_id").alias("qid"), "embedding"
     )
 
-    # matching sim_id on a custom layout: accepted, silent
+    def top(path, math=None):
+        return [
+            (r.vec_id, r.cosine_sim)
+            for r in query_ivf_index(
+                spark, path, qv, k=3, num_probes=4, math=math
+            ).collect()
+        ]
+
     with w.catch_warnings():
         w.simplefilter("error")
-        assert query_ivf_index(
-            spark, custom, qv, k=3, num_probes=4,
-            dot_fn=sdot, norm_fn=snorm, sim_id="twin-v1",
-        ).count() == 3
+        # probe-all over the same corpus: the result depends on the
+        # scoring math only, never on which math built the layout
+        assert top(custom) == top(custom, "decimal12") == top(
+            builtin, "decimal12"
+        )
+        assert top(custom, "float") == top(builtin) == top(builtin, "float")
+        assert len(top(custom)) == 3
+        assert ivf_knn_join(q, custom, k=3, num_probes=4).count() == 6
         assert ivf_knn_join(
-            q, custom, k=3, num_probes=4,
-            dot_fn=sdot, norm_fn=snorm, sim_id="twin-v1",
+            q, custom, k=3, num_probes=4, math="float"
         ).count() == 6
-        # custom scoring on a BUILT-IN layout: sanctioned, silent
-        assert query_ivf_index(
-            spark, builtin, qv, k=3, num_probes=4,
-            dot_fn=sdot, norm_fn=snorm,
-        ).count() == 3
-
-    # wrong sim_id refused on both read paths
-    with pytest.raises(ValueError, match="sim_id mismatch"):
-        query_ivf_index(
-            spark, custom, qv, k=3, dot_fn=sdot, norm_fn=snorm, sim_id="other"
-        )
-    with pytest.raises(ValueError, match="sim_id mismatch"):
-        ivf_knn_join(
-            q, custom, k=3, dot_fn=sdot, norm_fn=snorm, sim_id="other"
-        )
-
-    # custom layout read without sim_id: sanctioned but loud
-    with pytest.warns(UserWarning, match="unverified scoring math"):
-        query_ivf_index(spark, custom, qv, k=3).count()
-    with pytest.warns(UserWarning, match="unverified scoring math"):
-        ivf_knn_join(q, custom, k=3).count()
-
-    # incoherent claims are named errors
-    with pytest.raises(ValueError, match="without the functions"):
-        query_ivf_index(spark, custom, qv, k=3, sim_id="twin-v1")
-    with pytest.raises(ValueError, match="only meaningful"):
-        query_ivf_index(
-            spark, builtin, qv, k=3, dot_fn=sdot, norm_fn=snorm, sim_id="x"
-        )
 
 
 def test_legacy_warning_names_only_the_missing_argument(spark, tmp_path):
@@ -828,7 +794,7 @@ def test_ivf_knn_join_use_pq_exact_plan_and_refusals(spark, tmp_path):
     {float, SQ8, PQ} x {single-query, kNN-join} matrix): at probe-all
     the PQ-ranked + exact-rescored join equals brute force per query;
     the phase-1 scan reads codes, never the float column; layout-type,
-    keep_vec, sim_id, and use_codes+use_pq misuses are named errors."""
+    keep_vec, and use_codes+use_pq misuses are named errors."""
     from cassandra_analytics_spark.operators.ann_index import (
         build_ivf_index,
         ivf_knn_join,
@@ -872,15 +838,6 @@ def test_ivf_knn_join_use_pq_exact_plan_and_refusals(spark, tmp_path):
     # refusals
     with pytest.raises(ValueError, match="mutually exclusive"):
         ivf_knn_join(queries, path, use_codes=True, use_pq=True)
-    # the pinned mixed-math read contract applies to IVF-PQ layouts
-    # too: sim_id against a built-in-assignment layout is refused
-    with pytest.raises(ValueError, match="only meaningful against"):
-        from cassandra_analytics_spark.operators.similarity import (
-            dot as _d, norm as _n,
-        )
-
-        ivf_knn_join(queries, path, use_pq=True, dot_fn=_d, norm_fn=_n,
-                     sim_id="x")
     lean = str(tmp_path / "knn_ivfpq_lean")
     save_ivf_pq_index(corpus, lean, num_centroids=4, m=4, ks=32,
                       keep_vec=False, seed=3)
@@ -930,3 +887,74 @@ def test_knn_join_use_pq_duplicate_id_parity(spark, tmp_path):
                                  **kw).collect()}
     q1_dup = [s for q, i, s in got if q == 1 and i == 900]
     assert q1_dup == [pytest.approx(0.6)]  # copy A's score, never B's
+
+
+PARENT_DECIMAL12_LAYOUT = os.path.join(
+    os.path.dirname(__file__), "data", "decimal12_ivf_layout"
+)
+
+
+def test_pre_math_decimal12_layout_reads_and_appends(spark, tmp_path):
+    """A quantized decimal12 IVF layout written before the closed
+    ``math=`` setting existed (tests/data/decimal12_ivf_layout: the old
+    ``assignment="custom"`` + ``sim_id="portable-decimal-cosine-v1"``
+    spec, 24 8-d vectors over 4 centroids) still reads and appends:
+    today's build over its vectors reproduces its cells and codes, an
+    append follows its spec, and build + append equals build-once."""
+    import random
+    import shutil
+
+    from cassandra_analytics_spark.operators.ann_index import (
+        append_to_ivf_index,
+        build_ivf_index,
+        query_ivf_index,
+        query_ivf_index_quantized,
+        read_ivf_spec,
+    )
+    from cassandra_analytics_spark.operators.similarity import spec_math
+
+    path = str(tmp_path / "ivf")
+    for part in ("ivf", "ivf_centroids", "ivf_spec"):
+        shutil.copytree(
+            os.path.join(PARENT_DECIMAL12_LAYOUT, part), str(tmp_path / part)
+        )
+    assert spec_math(read_ivf_spec(spark, path), path) == "decimal12"
+    cents = sorted(
+        (r.cid, list(r.centroid))
+        for r in spark.read.parquet(path + "_centroids").collect()
+    )
+    cols = ["vec_id", "cell", "qvec", "qmin", "qscale"]
+
+    def rows(p, where=F.lit(True)):
+        return sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in spark.read.parquet(p).filter(where).select(*cols).collect()
+        )
+
+    old = spark.read.parquet(path).select("vec_id", "embedding")
+    again = str(tmp_path / "again")
+    build_ivf_index(old, again, centroids=cents, math="decimal12", quantize=True)
+    assert rows(again) == rows(path) and len(rows(path)) == 24
+
+    rng = random.Random(5)
+    new = spark.createDataFrame(
+        [(100 + i, [rng.gauss(0.0, 1.0) for _ in range(8)]) for i in range(16)],
+        "vec_id long, embedding array<double>",
+    )
+    append_to_ivf_index(new, path)
+    once = str(tmp_path / "once")
+    build_ivf_index(
+        old.unionByName(new), once, centroids=cents, math="decimal12",
+        quantize=True,
+    )
+    assert rows(path) == rows(once) and len(rows(once)) == 40
+
+    qv = [0.2] * 8
+    got = query_ivf_index(spark, path, qv, k=5, num_probes=4).collect()
+    want = query_ivf_index(
+        spark, once, qv, k=5, num_probes=4, math="decimal12"
+    ).collect()
+    assert got == want and len(got) == 5
+    assert query_ivf_index_quantized(
+        spark, path, qv, k=5, num_probes=4
+    ).collect() == want

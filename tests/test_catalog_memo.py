@@ -89,3 +89,21 @@ def test_spread_scan_memoized(spark, sf_dir):
     c = spread_scan(spark, sf_dir, "documents", min_rows_per_task=1)
     d = spread_scan(spark, sf_dir, "documents", min_rows_per_task=1)
     assert c is d
+
+
+def test_spread_scan_schema_is_independent_of_the_gate(spark, sf_dir):
+    """The same ``columns`` request yields the same schema whether the
+    cost gate spreads (floor 1 row per task) or keeps the raw scan (a
+    floor no corpus clears): the projection is not a side effect of the
+    exchange."""
+    cols = ("doc_id", "text")
+    spread = spread_scan(
+        spark, sf_dir, "documents", columns=cols, min_rows_per_task=1
+    )
+    raw = spread_scan(
+        spark, sf_dir, "documents", columns=cols, min_rows_per_task=10**12
+    )
+    assert "Repartition" in spread._jdf.queryExecution().analyzed().toString()
+    assert "Repartition" not in raw._jdf.queryExecution().analyzed().toString()
+    assert spread.schema == raw.schema
+    assert spread.columns == list(cols)

@@ -98,7 +98,7 @@ def test_embedding_confirmed_equals_brute_force(spark, sf_dir):
     planted corpus — asserted against a brute-force (all-pairs, no LSH)
     computation of the same portable cosine."""
     from cassandra_analytics_spark.queries import REGISTRY, _ensure_loaded
-    from cassandra_analytics_spark.queries.llm import _pdot, _psq_norm
+    from cassandra_analytics_spark.operators.similarity import vector_math
 
     _ensure_loaded()
     confirmed = {
@@ -137,8 +137,9 @@ def test_embedding_confirmed_equals_brute_force(spark, sf_dir):
     ).unionByName(planted)
     left = corpus.select(F.col("vec_id").alias("a"), F.col("embedding").alias("pa"))
     right = corpus.select(F.col("vec_id").alias("b"), F.col("embedding").alias("pb"))
-    pcos = _pdot(F.col("pa"), F.col("pb")) / (
-        _psq_norm(F.col("pa")) * _psq_norm(F.col("pb"))
+    d12 = vector_math("decimal12")
+    pcos = d12.dot(F.col("pa"), F.col("pb")) / (
+        d12.norm(F.col("pa")) * d12.norm(F.col("pb"))
     )
     brute = {
         (r.a, r.b)

@@ -1,228 +1,23 @@
-"""Round-16 optimization: the Arrow kernels behind ``pair_dot_auto`` /
-``row_norm_auto`` must be BIT-IDENTICAL to the portable scaled-decimal
-expression forms (``_pdot``/``_psq_norm``: double products →
-``CAST(decimal(28,12))`` HALF_UP → exact decimal left-fold → double) —
-including the ANSI edge semantics probed on the expression itself:
-NaN/Inf products NULL the fold, decimal overflow (per element OR prefix
-sum) raises, ragged pairs NULL (zip_with null-pad), empty arrays fold
-to 0.0. The streaming trigger's pair scoring rides this dispatch, so a
-divergence here changes published VERDICTS, not just scores.
-"""
+"""The decimal12 pair-dot kernel against its expression on the named
+case groups of the vector-math parity table (the cases and the check
+live in test_cell_parity_kernel.py): random and adversarial pairs,
+decimal overflow raising in both forms, and a NaN product before an
+overflow NULLing the fold in both forms."""
 
 from __future__ import annotations
 
-import decimal
-import math
-import random
-
-import pyspark.sql.functions as F
-import pytest
-
-from cassandra_analytics_spark.operators.similarity import (
-    _scaled_decimal_norm_udf,
-    _scaled_decimal_pair_dot_udf,
-    pair_dot_auto,
-    row_norm_auto,
-)
-
-DECV = "decimal(28,12)"
-
-
-def _pdot_expr(a, b):
-    """The portable pair dot exactly as queries/llm.py builds it."""
-    return F.aggregate(
-        F.zip_with(
-            a, b, lambda x, y: (x.cast("double") * y.cast("double")).cast(DECV)
-        ),
-        F.lit(0).cast(DECV),
-        lambda acc, v: (acc + v).cast(DECV),
-    ).cast("double")
-
-
-def _psq_norm_expr(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(
-                a, lambda x: (x.cast("double") * x.cast("double")).cast(DECV)
-            ),
-            F.lit(0).cast(DECV),
-            lambda acc, v: (acc + v).cast(DECV),
-        ).cast("double")
-    )
-
-
-def _pairs_df(spark, rows):
-    return spark.createDataFrame(
-        rows, "pid long, a array<double>, b array<double>"
-    )
-
-
-def _collect_bits(df, col):
-    """Exact float identity: compare IEEE bit patterns, not repr."""
-    import struct
-
-    out = {}
-    for r in df.select("pid", col.alias("v")).collect():
-        out[r.pid] = (
-            None if r.v is None else struct.pack("<d", r.v)
-        )
-    return out
+from test_cell_parity_kernel import check_named
 
 
 def test_pair_dot_parity_random_and_adversarial(spark):
-    rng = random.Random(16)
-    rows = []
-    pid = 0
-    for dim in (3, 8, 64):
-        for _ in range(40):
-            a = [rng.gauss(0, 1) * 10 ** rng.randint(-6, 4) for _ in range(dim)]
-            b = [rng.gauss(0, 1) * 10 ** rng.randint(-6, 4) for _ in range(dim)]
-            rows.append((pid, a, b))
-            pid += 1
-    nan = float("nan")
-    rows += [
-        (900, None, [1.0]),               # NULL side -> NULL
-        (901, [1.0], None),
-        (902, [1.0, 2.0], [3.0]),         # ragged -> NULL (zip_with pad)
-        (903, [], []),                    # empty -> 0.0
-        (904, [nan, 1.0], [1.0, 1.0]),    # NaN product -> NULL fold
-        (905, [float("inf")], [1.0]),     # Inf product -> NULL fold
-        (906, [1e300], [1e-300]),         # product 1.0 after extremes
-        # products landing exactly ON .5e-12 HALF_UP boundaries
-        (907, [1.5e-12, 2.5e-12, -3.5e-12], [1.0, 1.0, 1.0]),
-        (908, [0.49999999999999994e-11], [0.1]),
-        # tiny magnitudes that quantize to 0
-        (909, [1e-20, -1e-20], [1.0, 1.0]),
-    ]
-    df = _pairs_df(spark, rows)
-    expr = _collect_bits(df, _pdot_expr(F.col("a"), F.col("b")))
-    kern = _collect_bits(
-        df, _scaled_decimal_pair_dot_udf(12)(F.col("a"), F.col("b"))
-    )
-    assert expr == kern
-    assert expr[903] is not None and expr[902] is None  # sanity on shape
+    check_named(spark, "test_pair_dot_parity_random_and_adversarial")
 
 
 def test_pair_dot_overflow_raises_both(spark):
-    # element overflow (product 1e20 cannot be decimal(28,12)) and
-    # prefix-sum overflow (two 9e15 products) raise in BOTH forms
-    for rows in (
-        [(0, [1e10], [1e10])],
-        [(0, [9e15, 9e15], [1.0, 1.0])],
-        # prefix overflow BEFORE a NaN still raises (products are
-        # materialized before the fold)
-        [(0, [9e15, 9e15, float("nan")], [1.0, 1.0, 1.0])],
-    ):
-        df = _pairs_df(spark, rows)
-        with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
-            df.select(_pdot_expr(F.col("a"), F.col("b"))).collect()
-        with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
-            df.select(
-                _scaled_decimal_pair_dot_udf(12)(F.col("a"), F.col("b"))
-            ).collect()
+    check_named(spark, "test_pair_dot_overflow_raises_both")
 
 
 def test_pair_dot_nan_after_overflowing_prefix_is_null_both(spark):
-    # a NaN product BEFORE any overflow poisons the fold to NULL and no
-    # later PREFIX overflow can fire (acc is NULL) — but a later
-    # ELEMENT overflow still raises; both engines must agree on both
-    rows = [(0, [float("nan"), 9e15, 9e15], [1.0, 1.0, 1.0])]
-    df = _pairs_df(spark, rows)
-    e = df.select(_pdot_expr(F.col("a"), F.col("b")).alias("v")).collect()
-    k = df.select(
-        _scaled_decimal_pair_dot_udf(12)(F.col("a"), F.col("b")).alias("v")
-    ).collect()
-    assert e[0].v is None and k[0].v is None
-    rows = [(0, [float("nan"), 1e10], [1.0, 1e10])]
-    df = _pairs_df(spark, rows)
-    with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
-        df.select(_pdot_expr(F.col("a"), F.col("b"))).collect()
-    with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
-        df.select(
-            _scaled_decimal_pair_dot_udf(12)(F.col("a"), F.col("b"))
-        ).collect()
-
-
-def test_row_norm_parity(spark):
-    rng = random.Random(17)
-    rows = [(i, [rng.gauss(0, 1) * 10 ** rng.randint(-6, 3) for _ in range(16)])
-            for i in range(60)]
-    rows += [
-        (900, None),
-        (901, []),                        # sqrt(0) = 0.0
-        (902, [float("nan"), 1.0]),       # NULL fold -> NULL norm
-        (903, [1e-20]),                   # quantizes to 0 -> norm 0.0
-        (904, [0.7071067811865476] * 8),
-    ]
-    df = spark.createDataFrame(rows, "pid long, a array<double>")
-    expr = _collect_bits(df, _psq_norm_expr(F.col("a")))
-    kern = _collect_bits(df, _scaled_decimal_norm_udf(12)(F.col("a")))
-    assert expr == kern
-    assert expr[901] is not None and expr[902] is None
-
-
-def test_dispatch_by_marker():
-    from cassandra_analytics_spark.operators.similarity import dot, norm
-
-    # unmarked math passes through untouched
-    assert pair_dot_auto(dot) is dot
-    assert row_norm_auto(norm) is norm
-
-    def marked(a, b):  # pragma: no cover - never called
-        raise AssertionError
-
-    marked.__scaled_decimal__ = 12
-    assert pair_dot_auto(marked) is not marked
-
-    def mnorm(a):  # pragma: no cover - never called
-        raise AssertionError
-
-    mnorm.__scaled_decimal__ = 12
-    assert row_norm_auto(mnorm) is not mnorm
-
-
-def test_semantic_pairs_identical_under_dispatch(spark):
-    """End to end: semantic_pairs_from_cells with the MARKED decimal
-    pair (kernel path) returns row- and bit-identical pairs to the
-    same math presented UNMARKED (expression path)."""
-    from cassandra_analytics_spark.operators.similarity import (
-        semantic_pairs_from_cells,
+    check_named(
+        spark, "test_pair_dot_nan_after_overflowing_prefix_is_null_both"
     )
-
-    def pdot(a, b):
-        return _pdot_expr(a, b)
-
-    def pnorm(a):
-        return _psq_norm_expr(a)
-
-    mdot = lambda a, b: _pdot_expr(a, b)  # noqa: E731
-    mnorm = lambda a: _psq_norm_expr(a)  # noqa: E731
-    mdot.__scaled_decimal__ = 12
-    mnorm.__scaled_decimal__ = 12
-
-    rng = random.Random(18)
-    base = [rng.gauss(0, 1) for _ in range(8)]
-    rows = []
-    for i in range(50):
-        v = [x + rng.gauss(0, 0.05) for x in base]
-        rows.append((i, i % 3, v))
-    df = spark.createDataFrame(
-        rows, "vec_id long, cell int, embedding array<double>"
-    )
-
-    def key(rows_):
-        return sorted(
-            (r.a, r.b, r.cell, r.cosine_sim.hex()) for r in rows_
-        )
-
-    expr_pairs = key(
-        semantic_pairs_from_cells(
-            df, 0.95, dot_fn=pdot, norm_fn=pnorm
-        ).collect()
-    )
-    kern_pairs = key(
-        semantic_pairs_from_cells(
-            df, 0.95, dot_fn=mdot, norm_fn=mnorm
-        ).collect()
-    )
-    assert expr_pairs == kern_pairs and len(kern_pairs) > 50

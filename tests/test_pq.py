@@ -502,86 +502,79 @@ def test_append_to_ivf_pq_index_roundtrip_and_refusals(spark, tmp_path):
 
 
 def test_ivf_pq_custom_math_spec_contract(spark, tmp_path):
-    """save_ivf_pq_index's custom-math assignment mirrors
-    build_ivf_index's contract: custom fns REQUIRE sim_id (pinned in
-    the spec); appends to a custom layout must re-present the same
-    sim_id + fns; an expr layout refuses custom math; assignments
-    match the build's (append = rebuild equivalence on cells)."""
+    """save_ivf_pq_index's decimal12 assignment mirrors
+    build_ivf_index's contract: the math is pinned in the spec (in the
+    unchanged on-disk "custom" + sim_id form); appends follow it and
+    refuse the other math; a float layout refuses a decimal12 append;
+    assignments match the build's (append = rebuild equivalence on
+    cells); reads follow the layout's math and accept an override."""
+    import warnings as w
+
     from cassandra_analytics_spark.operators.pq import (
         append_to_ivf_pq_index,
+        query_ivf_pq_index,
         read_ivf_pq_spec,
         save_ivf_pq_index,
-    )
-    from cassandra_analytics_spark.operators.similarity import (
-        dot as _d,
-        norm as _n,
     )
 
     rows, df = _corpus(spark, n=120)
     first = df.filter(F.col("vec_id") % 2 == 0)
     second = df.filter(F.col("vec_id") % 2 == 1)
 
-    with pytest.raises(ValueError, match="needs sim_id"):
-        save_ivf_pq_index(first, str(tmp_path / "x"), num_centroids=4,
-                          m=4, ks=16, dot_fn=_d, norm_fn=_n)
-    with pytest.raises(ValueError, match="only meaningful with custom"):
-        save_ivf_pq_index(first, str(tmp_path / "x"), num_centroids=4,
-                          m=4, ks=16, sim_id="std-v1")
-
     cpath = str(tmp_path / "ivfpq_custom")
     cents, cb = save_ivf_pq_index(
         first, cpath, num_centroids=4, m=4, ks=16, seed=3,
-        dot_fn=_d, norm_fn=_n, sim_id="std-v1", residuals=True,
+        math="decimal12", residuals=True,
     )
     spec = read_ivf_pq_spec(spark, cpath)
     assert (spec["assignment"], spec["sim_id"], spec["residuals"]) == (
-        "custom", "std-v1", True,
+        "custom", "portable-decimal-cosine-v1", True,
     )
-    with pytest.raises(ValueError, match="custom similarity math"):
-        append_to_ivf_pq_index(second, cpath)
-    with pytest.raises(ValueError, match="sim_id mismatch"):
-        append_to_ivf_pq_index(second, cpath, dot_fn=_d, norm_fn=_n,
-                               sim_id="other")
-    append_to_ivf_pq_index(second, cpath, dot_fn=_d, norm_fn=_n,
-                           sim_id="std-v1")
+    with pytest.raises(ValueError, match="math mismatch"):
+        append_to_ivf_pq_index(second, cpath, math="float")
+    append_to_ivf_pq_index(second, cpath)
     grown = spark.read.parquet(cpath)
     assert grown.count() == 120
     # appended rows are residual-complete (residuals follow the spec)
     assert grown.filter(F.col("pq_err").isNull()).count() == 0
+    full = str(tmp_path / "ivfpq_custom_full")
+    save_ivf_pq_index(
+        df, full, centroids=cents, codebook=cb, math="decimal12",
+        residuals=True,
+    )
 
-    # an expr layout refuses custom math on append
+    def cells(p):
+        return sorted(
+            (r.vec_id, r.cell)
+            for r in spark.read.parquet(p).select("vec_id", "cell").collect()
+        )
+
+    assert cells(cpath) == cells(full)
+
+    # a float layout refuses a decimal12 append
     epath = str(tmp_path / "ivfpq_expr")
     save_ivf_pq_index(first, epath, num_centroids=4, codebook=cb, seed=3)
-    with pytest.raises(ValueError, match="built-in 'expr' assignment"):
-        append_to_ivf_pq_index(second, epath, dot_fn=_d, norm_fn=_n,
-                               sim_id="std-v1")
+    with pytest.raises(ValueError, match="math mismatch"):
+        append_to_ivf_pq_index(second, epath, math="decimal12")
 
-    # READ contract parity with the IVF paths (_validate_read_math):
-    # reading the custom layout without naming its sim_id warns,
-    # naming it correctly is silent, mismatches are refused
-    import warnings as w
-
-    from cassandra_analytics_spark.operators.pq import query_ivf_pq_index
-
+    # reads follow the layout's math silently; an override is accepted
     q = rows[0][1]
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        query_ivf_pq_index(spark, cpath, q, k=3, num_probes=4).count()
-    assert any("unverified scoring math" in str(x.message) for x in caught)
     with w.catch_warnings():
         w.simplefilter("error")
-        query_ivf_pq_index(spark, cpath, q, k=3, num_probes=4,
-                           dot_fn=_d, norm_fn=_n, sim_id="std-v1").count()
-    with pytest.raises(ValueError, match="sim_id mismatch"):
-        query_ivf_pq_index(spark, cpath, q, k=3, num_probes=4,
-                           dot_fn=_d, norm_fn=_n, sim_id="other")
+        own = query_ivf_pq_index(spark, cpath, q, k=3, num_probes=4).collect()
+        assert own == query_ivf_pq_index(
+            spark, cpath, q, k=3, num_probes=4, math="decimal12"
+        ).collect()
+        assert query_ivf_pq_index(
+            spark, cpath, q, k=3, num_probes=4, math="float"
+        ).count() == 3
 
 
 def test_ivf_pq_vectorized_assignment_mode(spark, tmp_path):
     """assignment='vectorized' (round 14 — required at the k ∝ N
     codebook sizes corpus-scale SemDeDup needs): the mode is pinned in
     the spec, appends follow it through the shared _ivf_cell_for_mode,
-    probe-all reads stay exact, and custom math refuses the vectorized
+    probe-all reads stay exact, and decimal12 refuses the vectorized
     path exactly like build_ivf_index."""
     from cassandra_analytics_spark.operators.pq import (
         append_to_ivf_pq_index,
@@ -591,8 +584,6 @@ def test_ivf_pq_vectorized_assignment_mode(spark, tmp_path):
     )
     from cassandra_analytics_spark.operators.similarity import (
         brute_force_topk,
-        dot as _d,
-        norm as _n,
     )
 
     rows, df = _corpus(spark, n=240)
@@ -642,7 +633,7 @@ def test_ivf_pq_vectorized_assignment_mode(spark, tmp_path):
     with pytest.raises(ValueError, match="no vectorized path"):
         save_ivf_pq_index(
             first, str(tmp_path / "x"), num_centroids=4, m=8, ks=32,
-            assignment="vectorized", dot_fn=_d, norm_fn=_n, sim_id="s",
+            assignment="vectorized", math="decimal12",
         )
     with pytest.raises(ValueError, match="assignment must be"):
         save_ivf_pq_index(first, str(tmp_path / "x"), assignment="bogus")

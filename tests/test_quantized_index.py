@@ -279,7 +279,7 @@ def test_quantized_semdedup_margin_sound_at_threshold_boundary(spark, tmp_path):
             fromlist=["_quantized_pairs_from_cells"],
         )._quantized_pairs_from_cells(
             spark.read.parquet(path), 0.95, "vec_id", "embedding",
-            10_000, None, None, None,
+            10_000, "float", None,
         ).collect()
     }
     from cassandra_analytics_spark.operators.similarity import (
@@ -393,12 +393,12 @@ def test_sq8_high_dim_arrow_kernels_match_expression(spark):
     key = lambda r: (r.a, r.b, round(r.cosine_sim, 9))  # noqa: E731
     expr_pairs = sorted(
         map(key, _quantized_pairs_from_cells(
-            coded, 0.1, "vec_id", "embedding", 10_000, None, None, None,
+            coded, 0.1, "vec_id", "embedding", 10_000, "float", None,
         ).collect())
     )
     arrow_pairs = sorted(
         map(key, _quantized_pairs_from_cells(
-            coded, 0.1, "vec_id", "embedding", 10_000, None, None, None,
+            coded, 0.1, "vec_id", "embedding", 10_000, "float", None,
             dim=dim,
         ).collect())
     )

@@ -916,16 +916,11 @@ def test_centroid_norm_job_amortized_across_triggers(
     spark, tmp_path, monkeypatch
 ):
     """r17: the codebook's norms are as frozen as the codebook — a
-    custom-math stream with a cache computes them with ONE k-row job
+    decimal12 stream with a cache computes them with ONE k-row job
     (the first post-bootstrap trigger) instead of one per trigger, and
     the cached values feed the SAME assignment (pair output unchanged).
     """
     import cassandra_analytics_spark.operators.similarity as sim_mod
-    from cassandra_analytics_spark.queries.llm import (
-        _PORTABLE_SIM_ID,
-        _pdot,
-        _psq_norm,
-    )
     from cassandra_analytics_spark.streaming.semantic_stream import (
         process_semantic_batch,
     )
@@ -936,9 +931,9 @@ def test_centroid_norm_job_amortized_across_triggers(
     calls = {"n": 0}
     orig = sim_mod.centroid_norms
 
-    def counting(spark_, cents, norm_fn=None):
+    def counting(spark_, cents, math="float"):
         calls["n"] += 1
-        return orig(spark_, cents, norm_fn)
+        return orig(spark_, cents, math)
 
     monkeypatch.setattr(sim_mod, "centroid_norms", counting)
 
@@ -948,9 +943,7 @@ def test_centroid_norm_job_amortized_across_triggers(
         pairs_out=str(tmp_path / "pairs"),
         centroids=CENTROIDS,
         threshold=0.98,
-        dot_fn=_pdot,
-        norm_fn=_psq_norm,
-        sim_id=_PORTABLE_SIM_ID,
+        math="decimal12",
         codebook_cache=cache,
     )
     batches = [
@@ -979,8 +972,7 @@ def test_centroid_norm_job_amortized_across_triggers(
         (r.removed, r.kept_rep)
         for r in removal_verdicts(
             semantic_dedup_pairs(
-                df, CENTROIDS, threshold=0.98,
-                dot_fn=_pdot, norm_fn=_psq_norm,
+                df, CENTROIDS, threshold=0.98, math="decimal12",
             )
         ).collect()
     }

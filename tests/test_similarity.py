@@ -632,3 +632,145 @@ def test_train_coarse_centroids_deterministic_and_covering(spark):
             df, "/tmp/never-written", train="kmeans",
             centroids=[(0, [1.0] * dim)],
         )
+
+
+@pytest.fixture(scope="module")
+def math_layouts(spark, tmp_path_factory):
+    """Tiny float layouts of every persisted format that carries a math,
+    plus IVF / IVF-PQ copies whose spec names an unrecognised sim_id."""
+    import random
+    import shutil
+
+    from cassandra_analytics_spark.local_data import local_df
+    from cassandra_analytics_spark.operators.ann_index import (
+        _IVF_SPEC_SCHEMA,
+        build_ivf_index,
+        read_ivf_spec,
+    )
+    from cassandra_analytics_spark.operators.pq import (
+        _IVF_PQ_SPEC_SCHEMA,
+        read_ivf_pq_spec,
+        save_ivf_pq_index,
+        save_pq_index,
+    )
+
+    root = tmp_path_factory.mktemp("math_layouts")
+    rng = random.Random(3)
+    df = spark.createDataFrame(
+        [(i, [rng.gauss(0.0, 1.0) for _ in range(8)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    out = {"df": df, "q": [0.1] * 8, "root": root}
+    out["cents"] = build_ivf_index(
+        df, str(root / "ivf"), num_centroids=4, quantize=True
+    )
+    _, out["cb"] = save_ivf_pq_index(
+        df, str(root / "ivfpq"), num_centroids=4, m=4, ks=8, residuals=True
+    )
+    save_pq_index(df, str(root / "pq"), m=4, ks=8)
+    for name, read, schema in (
+        ("ivf", read_ivf_spec, _IVF_SPEC_SCHEMA),
+        ("ivfpq", read_ivf_pq_spec, _IVF_PQ_SPEC_SCHEMA),
+    ):
+        bad = root / f"bad_{name}"
+        for suffix in ("", "_centroids", "_codebook"):
+            if (root / f"{name}{suffix}").exists():
+                shutil.copytree(root / f"{name}{suffix}", f"{bad}{suffix}")
+        spec = read(spark, str(root / name))
+        spec.update(assignment="custom", sim_id="jvm-v1")
+        fields = [f.split()[0] for f in schema.split(", ")]
+        local_df(spark, [tuple(spec[f] for f in fields)], schema).coalesce(
+            1
+        ).write.mode("overwrite").parquet(f"{bad}_spec")
+    return out
+
+
+def _math_entries():
+    """Every public entry that takes ``math=``, as ``(name, call)`` with
+    ``call(L, path_kind, math)`` — ``path_kind`` picks the good or the
+    bad-sim-id layout for the entries that read a persisted spec."""
+    from cassandra_analytics_spark.operators import ann_index, pq, quantize
+    from cassandra_analytics_spark.operators import similarity as sim
+    from cassandra_analytics_spark.streaming import semantic_stream as ss
+
+    def p(L, kind, name):
+        return str(L["root"] / (f"bad_{name}" if kind == "bad" else name))
+
+    def assigned(L):
+        return L["df"].withColumn("cell", F.lit(0))
+
+    spec_readers = {
+        "append_to_ivf_index": lambda L, k, m: ann_index.append_to_ivf_index(
+            L["df"], p(L, k, "ivf"), math=m),
+        "assign_with_index_spec": lambda L, k, m: ann_index.assign_with_index_spec(
+            L["df"], p(L, k, "ivf"), math=m),
+        "query_ivf_index": lambda L, k, m: ann_index.query_ivf_index(
+            L["df"].sparkSession, p(L, k, "ivf"), L["q"], math=m),
+        "query_ivf_index_quantized": lambda L, k, m: (
+            ann_index.query_ivf_index_quantized(
+                L["df"].sparkSession, p(L, k, "ivf"), L["q"], math=m)),
+        "semantic_dedup_on_index": lambda L, k, m: ann_index.semantic_dedup_on_index(
+            L["df"].sparkSession, p(L, k, "ivf"), math=m),
+        "ivf_knn_join": lambda L, k, m: ann_index.ivf_knn_join(
+            L["df"].withColumnRenamed("vec_id", "qid"), p(L, k, "ivf"), math=m),
+        "ivf_knn_join(use_pq)": lambda L, k, m: ann_index.ivf_knn_join(
+            L["df"].withColumnRenamed("vec_id", "qid"), p(L, k, "ivfpq"),
+            use_pq=True, math=m),
+        "append_to_ivf_pq_index": lambda L, k, m: pq.append_to_ivf_pq_index(
+            L["df"], p(L, k, "ivfpq"), math=m),
+        "assign_with_ivf_pq_spec": lambda L, k, m: pq.assign_with_ivf_pq_spec(
+            L["df"], p(L, k, "ivfpq"), math=m),
+        "query_ivf_pq_index": lambda L, k, m: pq.query_ivf_pq_index(
+            L["df"].sparkSession, p(L, k, "ivfpq"), L["q"], math=m),
+    }
+    others = {
+        "cosine": lambda L, k, m: sim.cosine(F.col("a"), F.col("b"), m),
+        "vector_op": lambda L, k, m: sim.vector_op(m, "dot"),
+        "centroid_norms": lambda L, k, m: sim.centroid_norms(
+            L["df"].sparkSession, L["cents"], m),
+        "assign_nearest_cells": lambda L, k, m: sim.assign_nearest_cells(
+            L["df"], L["cents"], math=m),
+        "semantic_pairs_from_cells": lambda L, k, m: sim.semantic_pairs_from_cells(
+            assigned(L), math=m),
+        "semantic_dedup_pairs": lambda L, k, m: sim.semantic_dedup_pairs(
+            L["df"], L["cents"], math=m),
+        "semantic_dedup": lambda L, k, m: sim.semantic_dedup(
+            L["df"], L["cents"], math=m),
+        "build_ivf_index": lambda L, k, m: ann_index.build_ivf_index(
+            L["df"], str(L["root"] / "never"), math=m),
+        "save_ivf_pq_index": lambda L, k, m: pq.save_ivf_pq_index(
+            L["df"], str(L["root"] / "never"), math=m),
+        "pq_pairs_from_cells": lambda L, k, m: pq.pq_pairs_from_cells(
+            assigned(L), L["cb"], 0.9, math=m),
+        "pq_adc_topk": lambda L, k, m: pq.pq_adc_topk(
+            L["df"], L["cb"], L["q"], math=m),
+        "query_pq_index": lambda L, k, m: pq.query_pq_index(
+            L["df"].sparkSession, str(L["root"] / "pq"), L["q"], math=m),
+        "quantized_topk": lambda L, k, m: quantize.quantized_topk(
+            L["df"], L["q"], math=m),
+        "run_semantic_dedup_stream": lambda L, k, m: ss.run_semantic_dedup_stream(
+            None, "unused", "unused", L["cents"], math=m),
+        "process_semantic_batch": lambda L, k, m: ss.process_semantic_batch(
+            L["df"], 0, index_path="unused", pairs_out="unused",
+            centroids=L["cents"], math=m),
+    }
+    cases = [("unknown-math", n, f) for n, f in {**spec_readers, **others}.items()]
+    cases += [("unknown-sim-id", n, f) for n, f in spec_readers.items()]
+    return cases
+
+
+@pytest.mark.parametrize(
+    "case,entry,call", _math_entries(),
+    ids=[f"{c}-{n}" for c, n, _ in _math_entries()],
+)
+def test_math_setting_is_closed(math_layouts, case, entry, call):
+    """``math`` is one closed setting: an unknown value is a ValueError
+    naming both choices at every public entry, before any work; and a
+    persisted spec whose sim_id this engine does not know is refused by
+    name by every reader and appender (it cannot reproduce that math)."""
+    if case == "unknown-math":
+        with pytest.raises(ValueError, match="'float' or 'decimal12'"):
+            call(math_layouts, "good", "cosine-v2")
+    else:
+        with pytest.raises(ValueError, match="sim_id='jvm-v1'"):
+            call(math_layouts, "bad", None)
