@@ -98,13 +98,13 @@ def asof_join(
     # the GREATEST value tuple win (the same convention as the LWW
     # merge's equal-writetime tiebreak). Map-typed carried columns join
     # the sort via their canonical sorted-entries projection
-    # (merge.order_key_expr); only payloads with no canonical order at
+    # (merge.order_key_sql); only payloads with no canonical order at
     # all (Variant, CalendarInterval) leave the duplicate-right edge
     # nondeterministic.
-    from cassandra_analytics_spark.operators.merge import order_key_expr
+    from cassandra_analytics_spark.operators.merge import order_key_sql
 
-    r_key = order_key_expr(F.col("__r"), struct_dtype)
-    tiebreak = [r_key.asc_nulls_first()] if r_key is not None else []
+    r_key = order_key_sql("__r", struct_dtype)
+    tiebreak = [F.expr(r_key).asc_nulls_first()] if r_key is not None else []
     if direction == "backward":
         # right rows sort before left at equal ts → match is <=
         w = (

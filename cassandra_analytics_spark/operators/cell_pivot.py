@@ -72,13 +72,13 @@ def cell_pivot(
     # tiebreak convention (merge.py, asof.py) — a bare max_by(value,
     # writetime) keeps whichever tied cell a task saw first (round-7
     # hostile pass). Map-typed values tiebreak via their canonical
-    # sorted-entries projection (merge.order_key_expr); only values with
+    # sorted-entries projection (merge.order_key_sql); only values with
     # no canonical order keep the writetime-only ordering.
-    from cassandra_analytics_spark.operators.merge import order_key_expr
+    from cassandra_analytics_spark.operators.merge import order_key_sql, quote_ident
 
-    vkey = order_key_expr(F.col(value_col), cells.schema[value_col].dataType)
+    vkey = order_key_sql(value_col, cells.schema[value_col].dataType)
     if vkey is not None:
-        order = F.struct(F.col(writetime_col), vkey)
+        order = F.expr(f"struct({quote_ident(writetime_col)}, {vkey})")
     else:
         order = F.col(writetime_col)
     pivoted = (

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 WRITETIME = "writetime"
@@ -39,7 +39,7 @@ def _value_columns(df: DataFrame, keys: Sequence[str]) -> list[str]:
 
 def orderable_type(dtype) -> bool:
     """True when Spark can sort/compare the type DIRECTLY (maps cannot).
-    Tiebreak call sites should prefer :func:`order_key_expr`, which also
+    Tiebreak call sites should prefer :func:`order_key_sql`, which also
     covers maps via a canonical sorted-entries projection (round 8) —
     this predicate remains for the "is the raw column itself sortable"
     question (e.g. whether a projection is even needed).
@@ -74,74 +74,70 @@ def orderable_type(dtype) -> bool:
     return isinstance(dtype, orderable_atoms + char_types)
 
 
-def _canonical_builder(dtype):
-    """A function Column -> orderable Column for ``dtype``, or None when
-    some nested part cannot be canonically ordered (Variant,
-    CalendarInterval). Orderable types project to themselves; a MAP
-    projects to its entry array sorted by key — map keys are unique and
-    the projection is injective, so equal maps always project equal and
-    distinct maps take one deterministic relative order regardless of
-    insertion/task order."""
-    from pyspark.sql import types as T
-
-    if orderable_type(dtype):
-        return lambda c: c
-    if isinstance(dtype, T.MapType):
-        fk = _canonical_builder(dtype.keyType)
-        fv = _canonical_builder(dtype.valueType)
-        if fk is None or fv is None:
-            return None
-        return lambda c: F.array_sort(
-            F.transform(
-                F.map_entries(c),
-                lambda e: F.struct(
-                    fk(e["key"]).alias("k"), fv(e["value"]).alias("v")
-                ),
-            )
-        )
-    if isinstance(dtype, T.ArrayType):
-        fe = _canonical_builder(dtype.elementType)
-        if fe is None:
-            return None
-        return lambda c: F.transform(c, fe)
-    if isinstance(dtype, T.StructType):
-        fs = [(f.name, _canonical_builder(f.dataType)) for f in dtype.fields]
-        if any(f is None for _, f in fs):
-            return None
-        # the when() guard keeps a NULL struct projecting to NULL (not a
-        # struct of NULL fields), preserving callers' nulls_first/last
-        # placement of whole-missing values
-        return lambda c: F.when(
-            c.isNotNull(), F.struct(*[f(c[n]).alias(n) for n, f in fs])
-        )
-    return None
+def quote_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (embedded backticks
+    doubled), so any column name survives SQL expression text."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def order_key_expr(col: Column, dtype) -> Column | None:
-    """A deterministically ORDERABLE projection of ``col``, or None when
-    the type cannot be canonically ordered.
+def sql_string(value: str) -> str:
+    """``value`` as a SQL string literal (backslashes and quotes escaped)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def order_key_sql(name: str, dtype) -> str | None:
+    """SQL text of a deterministically ORDERABLE projection of column
+    ``name`` of type ``dtype``, or None when some nested part cannot be
+    canonically ordered (Variant, CalendarInterval).
 
     Closes the map-payload determinism exception (VERDICT r7 what's-
     missing #3): Spark cannot compare maps directly, so map-typed columns
     used to fall out of every LWW/as-of/static tiebreak — the one
-    remaining "same input, two possible outputs" surface. Sorting
-    ``map_entries`` by key yields a comparable array<struct> stand-in.
-    The resulting order is NOT Cassandra's serialized-bytes comparator
-    (COVERAGE.md documents that approximation for orderable types too);
-    tiebreaks only need SOME total order applied consistently. Nested
-    maps (inside arrays, structs, or other maps' values) canonicalize
-    recursively."""
-    f = _canonical_builder(dtype)
-    return None if f is None else f(col)
+    remaining "same input, two possible outputs" surface. Orderable types
+    project to themselves; a MAP projects to its entry array sorted by key
+    — map keys are unique and the projection is injective, so equal maps
+    always project equal and distinct maps take one deterministic
+    relative order regardless of insertion/task order. The resulting
+    order is NOT Cassandra's serialized-bytes comparator (COVERAGE.md
+    documents that approximation for orderable types too); tiebreaks only
+    need SOME total order applied consistently. Nested maps (inside
+    arrays, structs, or other maps' values) canonicalize recursively.
 
+    Text, not a Column: the whole projection is parsed on the JVM in one
+    call, where the Column DSL costs a py4j round trip per node."""
+    from pyspark.sql import types as T
 
-def _full_window(keys: Sequence[str]) -> Window:
-    """Unbounded window over the whole key group (for per-group constants)."""
-    return (
-        Window.partitionBy(*keys)
-        .orderBy(F.lit(1))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
+    def build(expr: str, dtype, depth: int) -> str | None:
+        if orderable_type(dtype):
+            return expr
+        e = f"__e{depth}"  # lambda variable, unique per nesting level
+        if isinstance(dtype, T.MapType):
+            fk = build(f"{e}.key", dtype.keyType, depth + 1)
+            fv = build(f"{e}.value", dtype.valueType, depth + 1)
+            if fk is None or fv is None:
+                return None
+            return (
+                f"array_sort(transform(map_entries({expr}), "
+                f"{e} -> named_struct('k', {fk}, 'v', {fv})))"
+            )
+        if isinstance(dtype, T.ArrayType):
+            fe = build(e, dtype.elementType, depth + 1)
+            return None if fe is None else f"transform({expr}, {e} -> {fe})"
+        if isinstance(dtype, T.StructType):
+            fs = [
+                (f.name, build(f"{expr}.{quote_ident(f.name)}", f.dataType, depth))
+                for f in dtype.fields
+            ]
+            if any(f is None for _, f in fs):
+                return None
+            fields = ", ".join(f"{sql_string(n)}, {f}" for n, f in fs)
+            # the CASE guard keeps a NULL struct projecting to NULL (not a
+            # struct of NULL fields), preserving callers' nulls_first/last
+            # placement of whole-missing values
+            return f"CASE WHEN {expr} IS NOT NULL THEN named_struct({fields}) END"
+        return None
+
+    return build(quote_ident(name), dtype, 0)
 
 
 def compaction_merge(
@@ -173,8 +169,12 @@ def compaction_merge(
     5. a cell tombstone ``'cell:<col>'`` nulls column <col> of the winning
        row when ``tombstone.writetime >= row.writetime``
 
-    Two window passes — one hash shuffle on the partition key, one on the
-    full primary key; all expressions stay in whole-stage codegen.
+    One hash shuffle on the partition key feeds every window; all
+    expressions stay in whole-stage codegen. Each stage is ONE DataFrame
+    call over SQL expression text parsed on the JVM (the ``__kind``
+    projection, the deletion windows, the deletion filter, the LWW step):
+    building the plan takes a few dozen py4j round trips where the Column
+    DSL took one per expression node (~2,500 per merge).
 
     ``cell_lww=True`` switches step 4 to Cassandra's true *per-cell*
     reconciliation (``SparkCellIterator.java:204-231``, exercised by the
@@ -201,154 +201,133 @@ def compaction_merge(
     keys = list(partition_keys) + list(clustering_keys)
     system = [writetime_col] + [c for c in (ttl_col, tombstone_col) if c]
     value_cols = _value_columns(df, list(keys) + system)
-    wt = F.col(writetime_col)
+    q = quote_ident
+    wt = q(writetime_col)
+    key_list = ", ".join(map(q, keys))
+    pk_over = f"OVER (PARTITION BY {', '.join(map(q, partition_keys))})"
+    key_over = f"OVER (PARTITION BY {key_list})"
 
     # (1) TTL expiry → row tombstone.
     has_ttl = ttl_col is not None and ttl_col in df.columns
     has_tombstones = tombstone_col is not None and tombstone_col in df.columns
     if has_ttl:
-        if now_micros is None:
-            now_expr = F.unix_micros(F.current_timestamp())
-        else:
-            now_expr = F.lit(now_micros)
-        expired = F.col(ttl_col).isNotNull() & (
-            wt + F.col(ttl_col).cast("long") * F.lit(1_000_000) <= now_expr
+        now = (
+            "unix_micros(current_timestamp())"
+            if now_micros is None
+            else str(int(now_micros))
+        )
+        ttl = q(ttl_col)
+        expired = (
+            f"({ttl} IS NOT NULL AND {wt} + CAST({ttl} AS BIGINT) * 1000000 <= {now})"
         )
     else:
-        expired = F.lit(False)
-
+        expired = "false"
     if has_tombstones:
-        kind = F.when(expired & F.col(tombstone_col).isNull(), F.lit("row")).otherwise(
-            F.col(tombstone_col)
-        )
+        tomb = q(tombstone_col)
+        kind = f"CASE WHEN {expired} AND {tomb} IS NULL THEN 'row' ELSE {tomb} END"
     else:
-        kind = F.when(expired, F.lit("row")).otherwise(F.lit(None).cast("string"))
+        kind = f"CASE WHEN {expired} THEN 'row' ELSE CAST(NULL AS STRING) END"
 
     no_deletes = not has_ttl and not has_tombstones
     if no_deletes:
         # Fast path: no deletion metadata at all → no version can be a
-        # tombstone, so the three watermark/cell window passes would
-        # compute constant nulls at the cost of two extra exchanges.
-        # Straight to the LWW step — ONE shuffle total.
+        # tombstone, so the watermark/cell windows would compute constant
+        # nulls at the cost of extra window passes. Straight to the LWW
+        # step — ONE shuffle total.
         data = df
     else:
-        work = df.withColumn("__kind", kind)
-        pk_win = _full_window(partition_keys)
-        key_win = _full_window(keys)
-
         # (2) partition-tombstone watermark, (3) row-tombstone watermark,
-        # (5) cell tombstones collected per key group.
-        work = (
-            work.withColumn(
-                "__pt_wt",
-                F.max(F.when(F.col("__kind") == "partition", wt)).over(pk_win),
-            )
-            .withColumn(
-                "__rt_wt", F.max(F.when(F.col("__kind") == "row", wt)).over(key_win)
-            )
-            .withColumn(
-                "__cells",
-                F.collect_list(
-                    F.when(
-                        F.col("__kind").startswith("cell:"),
-                        F.struct(
-                            wt.alias("wt"), F.expr("substring(__kind, 6)").alias("col")
-                        ),
-                    )
-                ).over(key_win),
-            )
+        # (5) cell tombstones collected per key group. Whole-group windows
+        # need no ORDER BY/frame; the two (pk, ck) windows share one spec
+        # and so one Window operator.
+        work = df.selectExpr("*", f"{kind} AS __kind").selectExpr(
+            "*",
+            f"max(CASE WHEN __kind = 'partition' THEN {wt} END) {pk_over} AS __pt_wt",
+            f"max(CASE WHEN __kind = 'row' THEN {wt} END) {key_over} AS __rt_wt",
+            "collect_list(CASE WHEN startswith(__kind, 'cell:') THEN named_struct("
+            f"'wt', {wt}, 'col', substring(__kind, 6)) END) {key_over} AS __cells",
+        )
+        data = work.where(
+            "__kind IS NULL AND (greatest(__pt_wt, __rt_wt) IS NULL "
+            f"OR {wt} > greatest(__pt_wt, __rt_wt))"
         )
 
-        deletion_wt = F.greatest(F.col("__pt_wt"), F.col("__rt_wt"))
-        data = work.filter(F.col("__kind").isNull()).filter(
-            deletion_wt.isNull() | (wt > deletion_wt)
+    def shadowed(column_name: str) -> str:
+        """SQL predicate: a 'cell:<col>' tombstone at or after the
+        version's writetime deletes this column's cell."""
+        if no_deletes:
+            return "false"
+        return (
+            f"exists(__cells, __t -> __t.col = {sql_string(column_name)} "
+            f"AND __t.wt >= {wt})"
         )
 
     # (4) LWW winner per key; ties broken by the value tuple descending.
     # Map-typed columns join the tiebreak via their canonical sorted-
-    # entries projection (see :func:`order_key_expr`); only types with no
+    # entries projection (see :func:`order_key_sql`); only types with no
     # canonical order at all (Variant, CalendarInterval) are skipped.
     dtypes = {f.name: f.dataType for f in df.schema.fields}
+    order_keys = {c: order_key_sql(c, dtypes[c]) for c in value_cols}
+    keep_ttl = keep_ttl and has_ttl
 
     if cell_lww:
         # Per-cell reconciliation: every column keeps its own max-writetime
         # non-null cell, minus cells shadowed by a 'cell:<col>' tombstone
         # (shadow covers cell writetimes <= the tombstone's, as in row mode).
-        def _cell_shadow(col_name: str) -> Column:
-            if no_deletes:
-                return F.lit(False)
-            return F.exists(
-                F.col("__cells"),
-                lambda t: (t["col"] == F.lit(col_name)) & (t["wt"] >= wt),
-            )
-
-        # Materialize each cell's ordering key as a plain column first:
-        # lambdas/aliases inside aggregate expressions trip Spark's
-        # lateral-alias analysis, and plain columns keep codegen simple.
+        # Each cell's ordering key is materialized as a plain column first:
+        # lambdas inside aggregate expressions trip Spark's lateral-alias
+        # analysis, and plain columns keep codegen simple.
+        ords = []
         for c in value_cols:
-            valid = F.col(c).isNotNull() & ~_cell_shadow(c)
-            key = order_key_expr(F.col(c), dtypes[c])
-            if key is not None:
-                order_key = F.when(
-                    valid, F.struct(wt.alias("__wt"), key.alias("__v"))
-                )
-            else:
-                order_key = F.when(valid, F.struct(wt.alias("__wt")))
-            data = data.withColumn(f"__ord_{c}", order_key)
+            fields = f"'__wt', {wt}"
+            if order_keys[c] is not None:
+                fields += f", '__v', {order_keys[c]}"
+            ords.append(
+                f"CASE WHEN {q(c)} IS NOT NULL AND NOT {shadowed(c)} "
+                f"THEN named_struct({fields}) END AS {q('__ord_' + c)}"
+            )
         # max_by skips rows whose ordering key is NULL, so invalid cells
         # never participate; all-null columns stay NULL.
-        aggs: list[Column] = [
-            F.max_by(F.col(c), F.col(f"__ord_{c}")).alias(c) for c in value_cols
-        ]
+        aggs = [f"max_by({q(c)}, {q('__ord_' + c)}) AS {q(c)}" for c in value_cols]
         if keep_writetime:
-            aggs.append(F.max(wt).alias(writetime_col))
-        if keep_ttl and ttl_col is not None and ttl_col in df.columns:
+            aggs.append(f"max({wt}) AS {wt}")
+        if keep_ttl:
             # row-level TTL travels with the newest surviving version;
             # (wt, ttl) ordering makes equal-writetime versions resolve
             # greatest-ttl-wins instead of task order (round-7 pass —
             # the value columns already tiebreak on their own values)
+            ttl = q(ttl_col)
             aggs.append(
-                F.max_by(
-                    F.col(ttl_col),
-                    F.struct(wt.alias("__wt"), F.col(ttl_col).alias("__t")),
-                ).alias(ttl_col)
+                f"max_by({ttl}, named_struct('__wt', {wt}, '__t', {ttl})) AS {ttl}"
             )
-        return data.groupBy(*keys).agg(*aggs)
+        return (
+            data.selectExpr("*", *ords)
+            .groupBy(*[F.expr(q(k)) for k in keys])
+            .agg(*[F.expr(a) for a in aggs])
+        )
 
-    order = [wt.desc()] + [
-        key.desc_nulls_last()
+    order = ", ".join(
+        [f"{wt} DESC"]
+        + [f"{k} DESC NULLS LAST" for k in order_keys.values() if k is not None]
+    )
+    out_cols = [q(k) for k in keys] + [
+        f"CASE WHEN {shadowed(c)} THEN NULL ELSE {q(c)} END AS {q(c)}"
         for c in value_cols
-        for key in (order_key_expr(F.col(c), dtypes[c]),)
-        if key is not None
     ]
-    data = data.withColumn(
-        "__rn", F.row_number().over(Window.partitionBy(*keys).orderBy(*order))
-    ).filter(F.col("__rn") == 1)
-
-    def shadowed_by_cell_tombstone(column_name: str) -> Column:
-        if no_deletes:
-            return F.lit(False)
-        return F.exists(
-            F.col("__cells"),
-            lambda t: (t["col"] == F.lit(column_name))
-            & (t["wt"] >= F.col(writetime_col)),
-        )
-
-    out_cols: list[Column] = [F.col(k) for k in keys]
-    for c in value_cols:
-        out_cols.append(
-            F.when(shadowed_by_cell_tombstone(c), F.lit(None))
-            .otherwise(F.col(c))
-            .alias(c)
-        )
     if keep_writetime:
         out_cols.append(wt)
-    if keep_ttl and ttl_col is not None and ttl_col in df.columns:
+    if keep_ttl:
         # the winning row version's (still unexpired) TTL survives the
         # merge — compaction must not strip a live TTL (ADVICE r1:
         # otherwise the row never expires after a compaction)
-        out_cols.append(F.col(ttl_col))
-    return data.select(*out_cols)
+        out_cols.append(q(ttl_col))
+    return (
+        data.selectExpr(
+            "*", f"row_number() OVER (PARTITION BY {key_list} ORDER BY {order}) AS __rn"
+        )
+        .where("__rn = 1")
+        .selectExpr(*out_cols)
+    )
 
 
 def latest_by_key(
@@ -362,30 +341,28 @@ def latest_by_key(
     The common fast path of M1 when the table has no deletion metadata.
     ``tiebreakers`` make the result deterministic under equal ``order_col``;
     map-typed tiebreakers sort by their canonical projection
-    (:func:`order_key_expr`) — passing one used to throw an
+    (:func:`order_key_sql`) — passing one used to throw an
     AnalysisException from the window sort (round-8 pass).
     """
     if not keys:
         # an empty key list makes the window global — the whole table
         # silently collapses to its single newest row (round-8 probe)
         raise ValueError("latest_by_key needs at least one key column")
-    tb_keys = []
+    order = [f"{quote_ident(order_col)} DESC"]
     for t in tiebreakers:
-        key = order_key_expr(F.col(t), df.schema[t].dataType)
+        key = order_key_sql(t, df.schema[t].dataType)
         if key is None:
             raise ValueError(
                 f"latest_by_key: tiebreaker {t!r} has no canonical order "
                 f"({df.schema[t].dataType.simpleString()}) — it cannot "
                 "make the result deterministic"
             )
-        tb_keys.append(key)
-    order = [F.col(order_col).desc()] + [k.desc() for k in tb_keys]
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+        order.append(f"{key} DESC")
+    rank = (
+        f"row_number() OVER (PARTITION BY {', '.join(map(quote_ident, keys))} "
+        f"ORDER BY {', '.join(order)})"
     )
+    return df.withColumn("__rn", F.expr(rank)).where("__rn = 1").drop("__rn")
 
 
 def last_modified_timestamp(
@@ -397,9 +374,8 @@ def last_modified_timestamp(
     """Reference feature M5 (``LastModifiedTimestampDecorator.java:27-67``,
     option ``lastModifiedColumnName``): append the max cell write-timestamp
     per partition as an extra column."""
-    return df.withColumn(
-        out_col, F.max(F.col(writetime_col)).over(_full_window(partition_keys))
-    )
+    over = f"OVER (PARTITION BY {', '.join(map(quote_ident, partition_keys))})"
+    return df.withColumn(out_col, F.expr(f"max({quote_ident(writetime_col)}) {over}"))
 
 
 def propagate_static_columns(
@@ -417,18 +393,19 @@ def propagate_static_columns(
     greatest value DETERMINISTICALLY (the LWW tiebreak convention) where
     ``first(ignorenulls)`` kept whichever value a task saw first
     (round-7 hostile pass). Map-typed statics resolve by the canonical
-    sorted-entries order (``max_by`` on :func:`order_key_expr` — null
+    sorted-entries order (``max_by`` on :func:`order_key_sql` — null
     keys are skipped, so null-where-never-set is preserved); only types
     with no canonical order keep the first(ignorenulls) path."""
-    w = _full_window(partition_keys)
+    over = f"OVER (PARTITION BY {', '.join(map(quote_ident, partition_keys))})"
     dtypes = {f.name: f.dataType for f in df.schema.fields}
-    out = df
+    replaced = {}
     for c in static_cols:
-        key = order_key_expr(F.col(c), dtypes[c])
+        key = order_key_sql(c, dtypes[c])
         if orderable_type(dtypes[c]):
-            out = out.withColumn(c, F.max(F.col(c)).over(w))
+            agg = f"max({quote_ident(c)})"
         elif key is not None:
-            out = out.withColumn(c, F.max_by(F.col(c), key).over(w))
+            agg = f"max_by({quote_ident(c)}, {key})"
         else:
-            out = out.withColumn(c, F.first(F.col(c), ignorenulls=True).over(w))
-    return out
+            agg = f"first({quote_ident(c)}, true)"
+        replaced[c] = F.expr(f"{agg} {over}")
+    return df.withColumns(replaced) if replaced else df

@@ -101,37 +101,6 @@ class FilePartition(InputPartition):
     units: list  # [(path, row_group_ids | None), ...]
 
 
-def _data_files(table_path: str, snapshot: str | None = None) -> list[str]:
-    """Data files of every committed batch, trusting each batch's
-    manifest: a retried/speculative task can leave an orphan duplicate
-    parquet in a batch dir, and directory listing would read it twice.
-    The manifest records exactly the files the committing attempt owns.
-    Batches without a manifest (foreign writers) fall back to listing.
-    ``snapshot`` restricts to batches committed at or before that batch
-    id (batch ids are millisecond-ordered, so lexicographic ≤ is a
-    point-in-time snapshot)."""
-    import json
-    import os
-
-    from cassandra_analytics_spark.sinks.bulk_writer import committed_batches
-
-    files = []
-    batches = committed_batches(table_path)
-    if snapshot is not None:
-        batches = [b for b in batches if os.path.basename(b) <= snapshot]
-    for batch in batches:
-        manifest_path = os.path.join(batch, "_manifest.json")
-        if os.path.isfile(manifest_path):
-            with open(manifest_path) as f:
-                listed = sorted(json.load(f).get("files", {}))
-            files.extend(os.path.join(batch, fname) for fname in listed)
-        else:
-            for fname in sorted(os.listdir(batch)):
-                if fname.endswith(".parquet"):
-                    files.append(os.path.join(batch, fname))
-    return files
-
-
 # Spark lowercases data source option keys before they reach Python, so
 # the reference's camelCase spellings (ClientConfig.java:48-83 /
 # WriterOptions.java) arrive as e.g. "snapshotname". Each canonical
@@ -251,6 +220,10 @@ class CassandraBulkReader(DataSourceReader):
         return filters
 
     def partitions(self):
+        # imported here, not at module level: bulk_writer pulls in pandas,
+        # which the scan workers never need
+        from cassandra_analytics_spark.sinks.bulk_writer import _data_files
+
         files = _data_files(self.table_path, self.snapshot)
         if not files:
             # empty table (e.g. caller-supplied schema + a snapshot older
@@ -583,6 +556,12 @@ class CassandraBulkDataSource(DataSource):
 
         import pyarrow.parquet as pq
 
+        from cassandra_analytics_spark.sinks.bulk_writer import (
+            _data_files,
+            _manifest_schema,
+            committed_batches,
+        )
+
         files = _data_files(
             _required_path(dict(self.options)), _snapshot_option(dict(self.options))
         )
@@ -590,19 +569,9 @@ class CassandraBulkDataSource(DataSource):
             # committed-but-file-less batches (e.g. a compaction of a
             # fully-deleted table) still carry the Spark schema in their
             # manifest — the table is EMPTY, not missing
-            from cassandra_analytics_spark.sinks.bulk_writer import (
-                _manifest_schema,
-                committed_batches,
+            batches = committed_batches(
+                self.options["path"], _snapshot_option(dict(self.options))
             )
-
-            batches = committed_batches(self.options["path"])
-            snap = _snapshot_option(dict(self.options))
-            if snap is not None:
-                import os as _os
-
-                batches = [
-                    b for b in batches if _os.path.basename(b) <= snap
-                ]
             if batches:
                 return _manifest_schema(batches[-1])
             raise FileNotFoundError(

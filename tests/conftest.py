@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import contextlib
 import os
+from types import SimpleNamespace
 
 import pytest
 
@@ -18,6 +20,32 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def py4j_calls():
+    """Counts py4j round trips to the JVM: ``with py4j_calls() as n:``
+    counts every ``ClientServerConnection.send_command`` inside the block
+    into ``n.count``. Pins the driver-side cost of building a plan, which
+    the Column DSL pays one round trip per expression node."""
+    from py4j.clientserver import ClientServerConnection
+
+    @contextlib.contextmanager
+    def counting():
+        counter = SimpleNamespace(count=0)
+        original = ClientServerConnection.send_command
+
+        def send_command(self, *args, **kwargs):
+            counter.count += 1
+            return original(self, *args, **kwargs)
+
+        ClientServerConnection.send_command = send_command
+        try:
+            yield counter
+        finally:
+            ClientServerConnection.send_command = original
+
+    return counting
 
 
 # Tests measured above ~10 s each on an idle `local[8]` session (r17

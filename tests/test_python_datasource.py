@@ -118,9 +118,9 @@ def test_orphan_task_file_not_published(spark, tmp_path):
     import json
     import os
 
+    from cassandra_analytics_spark.sinks.bulk_writer import _data_files
     from cassandra_analytics_spark.sources.python_datasource import (
         CassandraBulkWriter,
-        _data_files,
     )
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -535,3 +535,52 @@ def test_read_bulk_table_as_of_batch_validated(spark, bulk_table):
         spark, bulk_table, ["pk"], ["ck"], as_of_batch="batch-9999999999999"
     ).count()
     assert n == n_all
+
+
+def test_orphan_parquet_read_by_neither_reader(spark, tmp_path):
+    """Both readers follow the one file-list rule (the manifest): an
+    unlisted parquet copied into a committed batch — a newer version of a
+    row, so reading it would change the merged result — changes the rows
+    of neither ``read_bulk_table`` nor the ``cassandra_bulk`` source, and
+    ``verify_digests`` still reports the batch as tampered."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from cassandra_analytics_spark.sinks.bulk_writer import (
+        committed_batches,
+        read_bulk_table,
+        verify_digests,
+    )
+
+    path = str(tmp_path / "tbl")
+    bulk_write(
+        spark.createDataFrame([Row(pk=i % 3, ck=i, val=f"v{i}") for i in range(12)]),
+        path, ["pk"], ["ck"], write_timestamp_micros=1_000,
+    )
+    register(spark)
+
+    def snapshot():
+        return (
+            sorted(read_bulk_table(spark, path, ["pk"], ["ck"]).collect()),
+            sorted(read_bulk_table(spark, path, ["pk"], ["ck"], merge=False).collect()),
+            sorted(_load(spark, path).collect()),
+        )
+
+    before = snapshot()
+    (batch,) = committed_batches(path)
+    data = sorted(f for f in os.listdir(batch) if f.endswith(".parquet"))[0]
+    table = pq.read_table(os.path.join(batch, data))
+    table = table.set_column(
+        table.schema.get_field_index("val"), "val",
+        pc.binary_join_element_wise(table["val"], "-orphan", ""),
+    ).set_column(
+        table.schema.get_field_index("writetime"), "writetime",
+        pc.add(table["writetime"], 1_000),
+    )
+    pq.write_table(table, os.path.join(batch, "part-orphan.parquet"))
+
+    assert snapshot() == before
+    assert before[0] and len(before[1]) == 12
+    assert verify_digests(batch) is False
