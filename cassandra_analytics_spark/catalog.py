@@ -109,6 +109,23 @@ SPREAD_MIN_ROWS_PER_TASK = int(
 _SPREAD_MIN_WIDTH = 4
 
 
+def _parquet_files(path: str) -> list[str]:
+    """Every ``*.parquet`` file under directory ``path``, recursing into
+    partition directories (``k=v/``) and skipping the names Spark's file
+    listing skips: ``.``-prefixed, and ``_``-prefixed unless ``k=v``."""
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not hidden(d)]
+        files.extend(
+            os.path.join(root, n) for n in names if n.endswith(".parquet") and not hidden(n)
+        )
+    return files
+
+
 def _scan_meta(spark: SparkSession, path: str, mtime) -> tuple[int, int]:
     """(num_rows, record-bearing splits) from the parquet FOOTER —
     driver-side metadata only, memoized per (path, mtime). Spark's
@@ -126,11 +143,10 @@ def _scan_meta(spark: SparkSession, path: str, mtime) -> tuple[int, int]:
         try:
             if os.path.isdir(path):
                 rows = groups = 0
-                for entry in os.scandir(path):
-                    if entry.name.endswith(".parquet"):
-                        md = pq.ParquetFile(entry.path).metadata
-                        rows += md.num_rows
-                        groups += md.num_row_groups
+                for file in _parquet_files(path):
+                    md = pq.ParquetFile(file).metadata
+                    rows += md.num_rows
+                    groups += md.num_row_groups
             else:
                 md = pq.ParquetFile(path).metadata
                 rows, groups = md.num_rows, md.num_row_groups

@@ -38,6 +38,13 @@ def token_column(*key_cols: Column) -> Column:
     return F.xxhash64(*key_cols)
 
 
+def token_sql(*key_exprs: str) -> str:
+    """:func:`token_column` as SQL expression text over ``key_exprs``
+    (SQL expressions, e.g. quoted column names), for plans built from
+    expression strings."""
+    return f"xxhash64({', '.join(key_exprs)})"
+
+
 def token_range_splits(num_splits: int) -> list[tuple[int, int]]:
     """Split the full token ring into ``num_splits`` contiguous [start, end]
     sub-ranges, mirroring ``TokenPartitioner.java:76-120`` (equal-width

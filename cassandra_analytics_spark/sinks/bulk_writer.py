@@ -43,7 +43,7 @@ from enum import Enum
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cassandra_analytics_spark.functions.tokens import token_column
+from cassandra_analytics_spark.functions.tokens import token_sql
 from cassandra_analytics_spark.operators.merge import (
     SYSTEM_COLUMNS,
     TOMBSTONE,
@@ -51,6 +51,7 @@ from cassandra_analytics_spark.operators.merge import (
     WRITETIME,
     compaction_merge,
     order_key_sql,
+    quote_ident,
 )
 from cassandra_analytics_spark.schema import CqlTable
 
@@ -150,6 +151,49 @@ def _file_digest(path: str, algorithm: str = "md5") -> str:
     return h.hexdigest()
 
 
+# Staged bytes at or below which the driver digests a batch itself
+# instead of running a Python-worker job. Driver md5 runs at ~450 MB/s
+# and any Python-worker job costs >= ~0.24 s on a 4-CPU host, so at
+# 64 MiB (~0.15 s of driver md5) the driver never costs more than the
+# job it replaces (PERF.md, "Driver-side digest gate").
+_DRIVER_DIGEST_MAX_BYTES = 64 << 20
+
+
+def _manifest_entry(path: str, algorithm: str = "md5") -> dict:
+    """One file's manifest entry, ``{"bytes": size, algorithm: digest}``:
+    the shape every writer's manifest uses."""
+    return {"bytes": os.path.getsize(path), algorithm: _file_digest(path, algorithm)}
+
+
+def _staged_file_meta(path: str, algorithm: str) -> tuple[str, dict, int]:
+    """(file name, manifest entry, footer row count) of one staged parquet
+    file."""
+    import pyarrow.parquet as pq
+
+    return (
+        os.path.basename(path),
+        _manifest_entry(path, algorithm),
+        pq.read_metadata(path).num_rows,
+    )
+
+
+def _digest_staged(sc, paths: Sequence[str], algorithm: str) -> list[tuple[str, dict, int]]:
+    """:func:`_staged_file_meta` of every staged file, sorted by name.
+
+    At most ``_DRIVER_DIGEST_MAX_BYTES`` in total: read on the driver (the
+    files are on shared storage). Above it: ONE distributed job, so the
+    driver never reads more than the gate's worth of data bytes — same
+    posture as ``_replicate_staged_files`` and the bundler."""
+    if sum(os.path.getsize(p) for p in paths) <= _DRIVER_DIGEST_MAX_BYTES:
+        return sorted(_staged_file_meta(p, algorithm) for p in paths)
+    n_tasks = max(1, min(len(paths), sc.defaultParallelism))
+    return sorted(
+        sc.parallelize(list(paths), n_tasks)
+        .mapPartitions(lambda ps: (_staged_file_meta(p, algorithm) for p in ps))
+        .collect()
+    )
+
+
 def bulk_write(
     df: DataFrame,
     table_path: str,
@@ -173,13 +217,15 @@ def bulk_write(
     REQUIRES SHARED STORAGE: ``table_path`` must be one filesystem
     visible to the driver AND every executor (NFS/shared mount locally;
     a DFS/object-store fuse mount on a cluster) — the staged parquet
-    files are written by executor tasks and then digested/row-counted by
-    a second distributed job that lists the same directory, while the
-    manifest write and the commit rename happen on the driver. The same
-    holds for every consumer of committed batches (``read_bulk_table``,
-    ``bundle_write``, ``restore_bundles``). This mirrors the reference's
-    deployment assumption (SSTables staged on storage all Sidecars can
-    reach); there is no non-shared-storage fallback.
+    files are written by executor tasks, then digested and row-counted
+    from the same directory — by the driver when they total at most
+    ``_DRIVER_DIGEST_MAX_BYTES`` (64 MiB), else by a second distributed
+    job — while the manifest write and the commit rename happen on the
+    driver. The same holds for every consumer of committed batches
+    (``read_bulk_table``, ``bundle_write``, ``restore_bundles``). This
+    mirrors the reference's deployment assumption (SSTables staged on
+    storage all Sidecars can reach); there is no non-shared-storage
+    fallback.
     """
     out, _, mode = _prepare_batch_df(
         df, partition_keys, clustering_keys, mode, table,
@@ -234,25 +280,29 @@ def _prepare_batch_df(
         require_clustering=mode is not WriteMode.DELETE_PARTITION,
     )
 
-    wt = (
-        F.lit(write_timestamp_micros)
-        if write_timestamp_micros is not None
-        else F.lit(int(time.time() * 1_000_000))
-    )
+    q = quote_ident
+    if write_timestamp_micros is None:
+        wt = f"CAST({int(time.time() * 1_000_000)} AS BIGINT)"
+    else:
+        wt = f"CAST({int(write_timestamp_micros)} AS BIGINT)"
+    # One projection, column name -> SQL text, in output order; a system
+    # column the caller already has is rewritten in place.
     if mode is WriteMode.DELETE_PARTITION:
         # S5: rows are partition keys to delete → partition tombstones
-        out = df.select(*partition_keys).withColumn(WRITETIME, wt.cast("long"))
-        out = out.withColumn(TTL, F.lit(None).cast("int"))
-        out = out.withColumn(TOMBSTONE, F.lit("partition"))
+        cols = {k: q(k) for k in partition_keys}
+        cols[WRITETIME] = wt
+        cols[TTL] = "CAST(NULL AS INT)"
+        cols[TOMBSTONE] = "'partition'"
     else:
-        if WRITETIME in df.columns and write_timestamp_micros is None:
+        cols = {c: q(c) for c in df.columns}
+        if WRITETIME in cols and write_timestamp_micros is None:
             # caller supplies per-row writetime (TimestampOption.java
             # per-row mode); normalize its type — an int/short column
             # written as-is would make later mergeSchema reads fail
             # against long-typed batches
-            out = df.withColumn(WRITETIME, F.col(WRITETIME).cast("long"))
+            cols[WRITETIME] = f"CAST({q(WRITETIME)} AS BIGINT)"
         else:
-            out = df.withColumn(WRITETIME, wt.cast("long"))
+            cols[WRITETIME] = wt
         # TTL 0 = FOREVER (TTLOption.java FOREVER = new TTLOption(0); in
         # Cassandra a TTL of 0 on a write means "no expiry" and is not
         # stored). The stored canonical form is NULL — writing a literal
@@ -261,20 +311,19 @@ def _prepare_batch_df(
         # the constant option and per-row TTL column values. Precedence
         # matches the writetime rule above (and the format writer): the
         # per-row column is used only when no explicit constant is given.
-        if TTL in df.columns and ttl_seconds is None:
-            per_row = F.col(TTL).cast("int")
-            out = out.withColumn(
-                TTL, F.when(per_row == 0, F.lit(None).cast("int")).otherwise(per_row)
-            )
+        if TTL in cols and ttl_seconds is None:
+            per_row = f"CAST({q(TTL)} AS INT)"
+            cols[TTL] = f"CASE WHEN {per_row} = 0 THEN CAST(NULL AS INT) ELSE {per_row} END"
+        elif ttl_seconds:
+            cols[TTL] = f"CAST({int(ttl_seconds)} AS INT)"
         else:
-            const_ttl = None if not ttl_seconds else ttl_seconds
-            out = out.withColumn(TTL, F.lit(const_ttl).cast("int"))
-        if TOMBSTONE not in df.columns:
-            out = out.withColumn(TOMBSTONE, F.lit(None).cast("string"))
+            cols[TTL] = "CAST(NULL AS INT)"
+        cols.setdefault(TOMBSTONE, "CAST(NULL AS STRING)")
+    cols["__token"] = token_sql(*map(q, partition_keys))
 
     # W2: token + range partition + sort within partitions. At cluster scale
-    # repartitionByRange samples token quantiles — the analog of the
-    # reference's ring-range split; sortWithinPartitions gives each file the
+    # the range exchange samples token quantiles — the analog of the
+    # reference's ring-range split; the local SORT BY gives each file the
     # reference's (token, ck...) sort order. The system columns AND the
     # orderable value columns join the sort as tiebreakers so rows
     # identical in key + system columns but differing in payload (e.g.
@@ -287,21 +336,36 @@ def _prepare_batch_df(
     # only columns with no canonical order at all are skipped — rows
     # distinguished ONLY by such a value may still swap order across
     # attempts (the remaining bounded exception).
-    out = out.withColumn("__token", token_column(*[F.col(k) for k in partition_keys]))
-    n = num_partitions or out.sparkSession.sparkContext.defaultParallelism
-    tiebreakers = [c for c in (WRITETIME, TTL, TOMBSTONE) if c in out.columns]
-    sorted_so_far = {"__token", *partition_keys, *required_ck, *tiebreakers}
-    value_tiebreakers = [
-        F.expr(key)
-        for f in out.schema.fields
-        if f.name not in sorted_so_far and not f.name.startswith("__")
-        for key in (order_key_sql(f.name, f.dataType),)
-        if key is not None
-    ]
-    out = out.repartitionByRange(n, F.col("__token")).sortWithinPartitions(
-        "__token", *partition_keys, *required_ck, *tiebreakers, *value_tiebreakers
-    )
-    return out.drop("__token"), required_ck, mode
+    #
+    # The whole plan is ONE SQL statement over the input as a temporary
+    # view, parsed on the JVM in one call: sortWithinPartitions takes
+    # Column objects, and each costs JVM round trips (~300 per build for
+    # a 14-column batch, against ~10 here).
+    key_cols = ["__token", *partition_keys, *required_ck, WRITETIME, TTL, TOMBSTONE]
+    sort_keys = [q(c) for c in key_cols]
+    dtypes = {f.name: f.dataType for f in df.schema.fields}
+    for c in cols:
+        if c not in key_cols and not c.startswith("__"):
+            key = order_key_sql(c, dtypes[c])
+            if key is not None:
+                sort_keys.append(key)
+    stamp = ", ".join(sql if sql == q(c) else f"{sql} AS {q(c)}" for c, sql in cols.items())
+    spark = df.sparkSession
+    n = num_partitions or spark.sparkContext.defaultParallelism
+    view = f"__bulk_write_{uuid.uuid4().hex}"
+    df.createOrReplaceTempView(view)
+    try:
+        out = spark.sql(
+            f"SELECT {', '.join(q(c) for c in cols if c != '__token')} FROM ("
+            f"SELECT * FROM (SELECT /*+ REPARTITION_BY_RANGE({int(n)}, __token) */ "
+            f"{stamp} FROM {q(view)}) SORT BY {', '.join(sort_keys)})"
+        )
+    finally:
+        # the session catalog's drop, not spark.catalog.dropTempView: that
+        # one also uncaches every cached plan equal to the view's, which
+        # is the caller's own input when the caller cached it
+        spark._jsparkSession.sessionState().catalog().dropTempView(view)
+    return out, required_ck, mode
 
 
 def _stage_batch(
@@ -337,38 +401,19 @@ def _stage_batch(
         # Spark uses — e.g. INT96 timestamps — which pyarrow cannot
         # reproduce, and a mismatched file breaks cross-batch schema
         # unification in the python datasource.)
-        fnames = sorted(
-            f for f in os.listdir(staging) if f.endswith(".parquet")
-        )
+        paths = [
+            os.path.join(staging, f) for f in os.listdir(staging) if f.endswith(".parquet")
+        ]
 
         # per-file digests → manifest (DigestAlgorithms.java analog; the
         # reference defaults xxhash32 and also offers MD5 — we use MD5).
-        # Digest + row-count run as ONE distributed job over the staged
-        # files (the reference digests inside each RecordWriter task);
-        # the driver only collects O(#files) metadata rows, never data
-        # bytes — same posture as _replicate_staged_files and the bundler.
-        files = {}
-        num_rows = 0
-        sc = out.sparkSession.sparkContext
-        paths = [os.path.join(staging, f) for f in fnames]
-
-        def _digest_meta(items):
-            import pyarrow.parquet as _pq
-
-            for p in items:
-                yield (
-                    os.path.basename(p),
-                    os.path.getsize(p),
-                    _file_digest(p, digest_algorithm),
-                    _pq.read_metadata(p).num_rows,
-                )
-
-        n_tasks = max(1, min(len(paths), sc.defaultParallelism))
-        for fname, nbytes, digest, rows in sorted(
-            sc.parallelize(paths, n_tasks).mapPartitions(_digest_meta).collect()
-        ):
-            files[fname] = {"bytes": nbytes, digest_algorithm: digest}
-            num_rows += rows
+        # The reference digests inside each RecordWriter task; here the
+        # driver digests the staged files itself below a staged-bytes
+        # gate and runs ONE distributed job above it, which then returns
+        # only O(#files) metadata rows (see _digest_staged).
+        metas = _digest_staged(out.sparkSession.sparkContext, paths, digest_algorithm)
+        files = {fname: entry for fname, entry, _ in metas}
+        num_rows = sum(rows for _, _, rows in metas)
 
         manifest = {
             "batch": batch_id,

@@ -127,7 +127,10 @@ def _make_bundler(
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
-        from cassandra_analytics_spark.sinks.bulk_writer import _file_digest
+        from cassandra_analytics_spark.sinks.bulk_writer import (
+            _file_digest,
+            _manifest_entry,
+        )
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
@@ -170,8 +173,7 @@ def _make_bundler(
                     with zf.open(zi, "w") as dst, open(fpath, "rb") as srcf:
                         _shutil.copyfileobj(srcf, dst)
                     member_meta[fname] = {
-                        "bytes": _os.path.getsize(fpath),
-                        digest_algorithm: _file_digest(fpath, digest_algorithm),
+                        **_manifest_entry(fpath, digest_algorithm),
                         "rows": rows,
                         "start_token": lo,
                         "end_token": hi,

@@ -494,9 +494,10 @@ class CassandraBulkWriter(DataSourceWriter):
         return StructType(fields)
 
     def commit(self, messages) -> None:
-        import hashlib
         import json
         import os
+
+        from cassandra_analytics_spark.sinks.bulk_writer import _manifest_entry
 
         # a plan with zero tasks (empty source RDD) never created the
         # staging dir — the batch still commits, carrying the schema
@@ -506,15 +507,9 @@ class CassandraBulkWriter(DataSourceWriter):
         for m in messages:
             if m is None:
                 continue
-            path = os.path.join(self.staging, m.file_name)
-            h = hashlib.md5()
-            with open(path, "rb") as f:
-                for chunk in iter(lambda: f.read(1 << 20), b""):
-                    h.update(chunk)
-            files[m.file_name] = {
-                "bytes": os.path.getsize(path),
-                "md5": h.hexdigest(),
-            }
+            files[m.file_name] = _manifest_entry(
+                os.path.join(self.staging, m.file_name), "md5"
+            )
             total += m.num_rows
         manifest = {
             "batch": self.batch_id,

@@ -19,6 +19,7 @@ import shutil
 
 from cassandra_analytics_spark.catalog import (
     _SPREAD_MIN_WIDTH,
+    _scan_meta,
     load_table,
     spread_scan,
 )
@@ -107,3 +108,22 @@ def test_spread_scan_schema_is_independent_of_the_gate(spark, sf_dir):
     assert "Repartition" not in raw._jdf.queryExecution().analyzed().toString()
     assert spread.schema == raw.schema
     assert spread.columns == list(cols)
+
+
+def test_scan_meta_counts_hive_partitioned_rows(spark, tmp_path):
+    """A ``k=v/part.parquet`` table reports its true footer row count
+    (it reported 0, which pinned ``spread_scan`` to the raw scan), and
+    files Spark's listing skips (``_``/``.``-prefixed) are not counted."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = tmp_path / "parted"
+    for k, n in ((1, 30), (2, 12)):
+        (table / f"k={k}").mkdir(parents=True)
+        pq.write_table(pa.table({"v": list(range(n))}), str(table / f"k={k}" / "part.parquet"))
+    (table / "_temporary").mkdir()
+    pq.write_table(pa.table({"v": [0] * 5}), str(table / "_temporary" / "part.parquet"))
+    pq.write_table(pa.table({"v": [0] * 7}), str(table / "k=1" / ".hidden.parquet"))
+    rows, splits = _scan_meta(spark, str(table), "test-mtime")
+    assert rows == 42 == spark.read.parquet(str(table)).count()
+    assert splits == 2
