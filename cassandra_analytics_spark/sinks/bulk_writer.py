@@ -151,14 +151,6 @@ def _file_digest(path: str, algorithm: str = "md5") -> str:
     return h.hexdigest()
 
 
-# Staged bytes at or below which the driver digests a batch itself
-# instead of running a Python-worker job. Driver md5 runs at ~450 MB/s
-# and any Python-worker job costs >= ~0.24 s on a 4-CPU host, so at
-# 64 MiB (~0.15 s of driver md5) the driver never costs more than the
-# job it replaces (PERF.md, "Driver-side digest gate").
-_DRIVER_DIGEST_MAX_BYTES = 64 << 20
-
-
 def _manifest_entry(path: str, algorithm: str = "md5") -> dict:
     """One file's manifest entry, ``{"bytes": size, algorithm: digest}``:
     the shape every writer's manifest uses."""
@@ -174,23 +166,6 @@ def _staged_file_meta(path: str, algorithm: str) -> tuple[str, dict, int]:
         os.path.basename(path),
         _manifest_entry(path, algorithm),
         pq.read_metadata(path).num_rows,
-    )
-
-
-def _digest_staged(sc, paths: Sequence[str], algorithm: str) -> list[tuple[str, dict, int]]:
-    """:func:`_staged_file_meta` of every staged file, sorted by name.
-
-    At most ``_DRIVER_DIGEST_MAX_BYTES`` in total: read on the driver (the
-    files are on shared storage). Above it: ONE distributed job, so the
-    driver never reads more than the gate's worth of data bytes — same
-    posture as ``_replicate_staged_files`` and the bundler."""
-    if sum(os.path.getsize(p) for p in paths) <= _DRIVER_DIGEST_MAX_BYTES:
-        return sorted(_staged_file_meta(p, algorithm) for p in paths)
-    n_tasks = max(1, min(len(paths), sc.defaultParallelism))
-    return sorted(
-        sc.parallelize(list(paths), n_tasks)
-        .mapPartitions(lambda ps: (_staged_file_meta(p, algorithm) for p in ps))
-        .collect()
     )
 
 
@@ -218,10 +193,9 @@ def bulk_write(
     visible to the driver AND every executor (NFS/shared mount locally;
     a DFS/object-store fuse mount on a cluster) — the staged parquet
     files are written by executor tasks, then digested and row-counted
-    from the same directory — by the driver when they total at most
-    ``_DRIVER_DIGEST_MAX_BYTES`` (64 MiB), else by a second distributed
-    job — while the manifest write and the commit rename happen on the
-    driver. The same holds for every consumer of committed batches
+    by the driver from the same directory, where the manifest write and
+    the commit rename also happen. The same holds for every consumer of
+    committed batches
     (``read_bulk_table``, ``bundle_write``, ``restore_bundles``). This
     mirrors the reference's deployment assumption (SSTables staged on
     storage all Sidecars can reach); there is no non-shared-storage
@@ -252,6 +226,9 @@ def bulk_write(
 
 def _new_batch_id() -> str:
     return f"batch-{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
+
+
+_DISABLE_HINTS = "spark.sql.optimizer.disableHints"
 
 
 def _prepare_batch_df(
@@ -340,7 +317,12 @@ def _prepare_batch_df(
     # The whole plan is ONE SQL statement over the input as a temporary
     # view, parsed on the JVM in one call: sortWithinPartitions takes
     # Column objects, and each costs JVM round trips (~300 per build for
-    # a 14-column batch, against ~10 here).
+    # a 14-column batch, against ~11 here); every extra DataFrame step
+    # re-analyzes the input plan (~10 ms each over a merge plan). The
+    # range exchange is a REPARTITION_BY_RANGE hint, and the analyzer
+    # drops every hint without a word when
+    # spark.sql.optimizer.disableHints is set — files would then no
+    # longer hold contiguous token ranges — so that setting is refused.
     key_cols = ["__token", *partition_keys, *required_ck, WRITETIME, TTL, TOMBSTONE]
     sort_keys = [q(c) for c in key_cols]
     dtypes = {f.name: f.dataType for f in df.schema.fields}
@@ -351,6 +333,11 @@ def _prepare_batch_df(
                 sort_keys.append(key)
     stamp = ", ".join(sql if sql == q(c) else f"{sql} AS {q(c)}" for c, sql in cols.items())
     spark = df.sparkSession
+    if spark.conf.get(_DISABLE_HINTS, "false").lower() == "true":
+        raise BulkWriteError(
+            f"bulk writes range-partition by token through a SQL hint; unset "
+            f"{_DISABLE_HINTS} (it drops every hint)"
+        )
     n = num_partitions or spark.sparkContext.defaultParallelism
     view = f"__bulk_write_{uuid.uuid4().hex}"
     df.createOrReplaceTempView(view)
@@ -361,9 +348,10 @@ def _prepare_batch_df(
             f"{stamp} FROM {q(view)}) SORT BY {', '.join(sort_keys)})"
         )
     finally:
-        # the session catalog's drop, not spark.catalog.dropTempView: that
-        # one also uncaches every cached plan equal to the view's, which
-        # is the caller's own input when the caller cached it
+        # The session catalog's drop (the JVM SessionCatalog, not part
+        # of PySpark's API), not spark.catalog.dropTempView: that one
+        # also uncaches every cached plan equal to the view's, which is
+        # the caller's own input when the caller cached it.
         spark._jsparkSession.sessionState().catalog().dropTempView(view)
     return out, required_ck, mode
 
@@ -408,10 +396,10 @@ def _stage_batch(
         # per-file digests → manifest (DigestAlgorithms.java analog; the
         # reference defaults xxhash32 and also offers MD5 — we use MD5).
         # The reference digests inside each RecordWriter task; here the
-        # driver digests the staged files itself below a staged-bytes
-        # gate and runs ONE distributed job above it, which then returns
-        # only O(#files) metadata rows (see _digest_staged).
-        metas = _digest_staged(out.sparkSession.sparkContext, paths, digest_algorithm)
+        # driver streams each staged file through the digest in 1 MiB
+        # chunks and reads its footer's row count, with no Spark job
+        # (PERF.md, "The Python-worker job floor and the driver digest").
+        metas = sorted(_staged_file_meta(p, digest_algorithm) for p in paths)
         files = {fname: entry for fname, entry, _ in metas}
         num_rows = sum(rows for _, _, rows in metas)
 

@@ -1,11 +1,9 @@
-"""The bulk writer's digest gate and plan-build cost.
+"""The bulk writer's driver-side digest and plan-build cost.
 
-``_stage_batch`` digests and row-counts the staged files on the driver
-when they total at most ``_DRIVER_DIGEST_MAX_BYTES``, and with one
-distributed job above it. Either way the manifest and the table read
-back the same. Below the gate a write runs the range-sampling, shuffle
-map and write jobs and nothing else; ``_prepare_batch_df`` builds its
-plan from one SQL statement.
+``_stage_batch`` digests and row-counts the staged files on the driver,
+so a write runs the range-sampling, shuffle map and write jobs and
+nothing else; ``_prepare_batch_df`` builds its plan from one SQL
+statement.
 """
 
 from __future__ import annotations
@@ -18,12 +16,11 @@ import pytest
 from pyspark.errors import AnalysisException
 
 from cassandra_analytics_spark.functions.tokens import token_column, token_sql
-from cassandra_analytics_spark.sinks import bulk_writer
 from cassandra_analytics_spark.sinks.bulk_writer import (
-    _digest_staged,
+    BulkWriteError,
     _prepare_batch_df,
+    _staged_file_meta,
     bulk_write,
-    read_bulk_table,
     verify_digests,
 )
 
@@ -55,55 +52,31 @@ def _bulk_frame(spark, n=400):
     )
 
 
-def test_digest_gate_same_result_either_way(spark, tmp_path, monkeypatch):
-    """Forcing the gate either way commits a batch that verifies, counts
-    the same rows and reads back the same table. (The files themselves
-    may differ: range bounds are sampled anew by every write.)"""
-    df = _bulk_frame(spark)
-    results = {}
-    for arm, gate in (("job", 0), ("driver", 1 << 60)):
-        monkeypatch.setattr(bulk_writer, "_DRIVER_DIGEST_MAX_BYTES", gate)
-        path = str(tmp_path / arm)
-        res = bulk_write(df, path, ["tenant", "bucket"], ["seq"], write_timestamp_micros=5_000)
-        assert verify_digests(res.batch_dir), arm
-        with open(res.manifest_path) as f:
-            manifest = json.load(f)
-        assert manifest["num_rows"] == res.num_rows
-        assert all(set(meta) == {"bytes", "md5"} for meta in manifest["files"].values())
-        rows = read_bulk_table(spark, path, ["tenant", "bucket"], ["seq"], now_micros=0)
-        results[arm] = (res.num_rows, sorted(map(tuple, rows.collect())))
-    assert results["job"] == results["driver"]
-    assert results["job"][0] == 400
-
-
-def test_driver_and_job_digest_the_same_files(spark, tmp_path, monkeypatch):
-    """Over one fixed staged directory the driver path and the
-    distributed job return identical (name, bytes, digest, rows)."""
+def test_manifest_lists_the_staged_files(spark, tmp_path):
+    """The driver's manifest holds each committed file's size and digest,
+    and its row count is the files' footer row counts summed."""
     res = bulk_write(
         _bulk_frame(spark), str(tmp_path / "tbl"), ["tenant", "bucket"], ["seq"],
         write_timestamp_micros=5_000, num_partitions=4,
     )
-    paths = sorted(
+    assert verify_digests(res.batch_dir)
+    paths = [
         os.path.join(res.batch_dir, f)
         for f in os.listdir(res.batch_dir)
         if f.endswith(".parquet")
-    )
+    ]
     assert len(paths) > 1
-    sc = spark.sparkContext
-    monkeypatch.setattr(bulk_writer, "_DRIVER_DIGEST_MAX_BYTES", 1 << 60)
-    on_driver = _digest_staged(sc, paths, "md5")
-    monkeypatch.setattr(bulk_writer, "_DRIVER_DIGEST_MAX_BYTES", 0)
-    in_job = _digest_staged(sc, paths, "md5")
-    assert on_driver == in_job
-    assert sum(rows for _, _, rows in on_driver) == res.num_rows
+    metas = [_staged_file_meta(p, "md5") for p in paths]
     with open(res.manifest_path) as f:
         manifest = json.load(f)
-    assert {name: entry for name, entry, _ in in_job} == manifest["files"]
+    assert manifest["files"] == {name: entry for name, entry, _ in metas}
+    assert all(list(entry) == ["bytes", "md5"] for entry in manifest["files"].values())
+    assert manifest["num_rows"] == res.num_rows == sum(rows for _, _, rows in metas) == 400
 
 
-def test_below_gate_write_runs_three_jobs(spark, tmp_path):
-    """Range sampling, the shuffle map stage and the parquet write: the
-    digest no longer runs as a fourth (Python-worker) job."""
+def test_bulk_write_runs_three_jobs(spark, tmp_path):
+    """Range sampling, the shuffle map stage and the parquet write, and
+    no (Python-worker) digest job."""
     df = _bulk_frame(spark)
     sc = spark.sparkContext
     group = f"bulk-write-{uuid.uuid4().hex}"
@@ -158,6 +131,27 @@ def test_bulk_write_keeps_the_callers_cache(spark, tmp_path):
         assert df.storageLevel.useMemory
     finally:
         df.unpersist()
+
+
+def test_disabled_hints_are_refused(spark):
+    """The token range exchange is a SQL hint, which
+    spark.sql.optimizer.disableHints would drop without a word: the
+    build refuses that setting instead of writing unranged files."""
+    key = "spark.sql.optimizer.disableHints"
+    old = spark.conf.get(key, "false")
+    spark.conf.set(key, "true")
+    try:
+        with pytest.raises(BulkWriteError, match=key):
+            _prepare_batch_df(
+                _bulk_frame(spark, 10), ["tenant"], ["seq"], "append", None, 1, None, 3, "append"
+            )
+    finally:
+        spark.conf.set(key, old)
+    out, _, _ = _prepare_batch_df(
+        _bulk_frame(spark, 10), ["tenant"], ["seq"], "append", None, 1, None, 3, "append"
+    )
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "RepartitionByExpression [__token" in plan, plan
 
 
 def test_token_sql_is_token_column(spark):
