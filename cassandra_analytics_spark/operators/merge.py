@@ -149,7 +149,7 @@ def compaction_merge(
     tombstone_col: str | None = TOMBSTONE,
     now_micros: int | None = None,
     keep_writetime: bool = False,
-    keep_ttl: bool = False,
+    for_compaction: bool = False,
     cell_lww: bool = False,
 ) -> DataFrame:
     """Last-write-wins merge + tombstone/TTL purge over a multi-version table.
@@ -191,6 +191,19 @@ def compaction_merge(
     hash aggregation of ``max_by`` expressions — still ONE shuffle on the
     full primary key, with map-side partial aggregation (better than the
     window at 100 TB: partial aggs collapse versions before the exchange).
+
+    ``for_compaction=True`` shapes the output as a major compaction's
+    batch: every merged row keeps its writetime and live TTL, and the
+    newest deletion of each (pk, ck, kind) scope — a tombstone row, or an
+    expired-TTL version as a ``'row'`` deletion — comes out too, as a
+    *shield* row (NULL values and TTL, the deletion's writetime and kind)
+    under Cassandra's gc_grace rule: a write with an older timestamp
+    arriving later must stay shadowed. The shields come from the same
+    ``__kind`` projection as the purge (one TTL clock), and ride the same
+    windows: the final rank (row mode) or aggregation (cell mode) keys on
+    (pk, ck, kind). Merged rows carry a NULL ``tombstone`` column beside
+    them; without deletion metadata there are no shields and no such
+    column.
     """
     if not partition_keys:
         # Cassandra tables always have a partition key; with an empty key
@@ -247,9 +260,12 @@ def compaction_merge(
             "collect_list(CASE WHEN startswith(__kind, 'cell:') THEN named_struct("
             f"'wt', {wt}, 'col', substring(__kind, 6)) END) {key_over} AS __cells",
         )
+        # every deletion row passes as a shield candidate for compaction;
+        # reads put a literal false there, which the optimizer folds away
+        keep = "__kind IS NOT NULL" if for_compaction else "false"
         data = work.where(
-            "__kind IS NULL AND (greatest(__pt_wt, __rt_wt) IS NULL "
-            f"OR {wt} > greatest(__pt_wt, __rt_wt))"
+            f"{keep} OR (__kind IS NULL AND (greatest(__pt_wt, __rt_wt) IS NULL "
+            f"OR {wt} > greatest(__pt_wt, __rt_wt)))"
         )
 
     def shadowed(column_name: str) -> str:
@@ -268,7 +284,13 @@ def compaction_merge(
     # canonical order at all (Variant, CalendarInterval) are skipped.
     dtypes = {f.name: f.dataType for f in df.schema.fields}
     order_keys = {c: order_key_sql(c, dtypes[c]) for c in value_cols}
-    keep_ttl = keep_ttl and has_ttl
+    keep_writetime = keep_writetime or for_compaction
+    keep_ttl = for_compaction and has_ttl
+    # shields group by kind beside the key; NULL kind is the merged row
+    shields = for_compaction and not no_deletes
+    group_keys = [q(k) for k in keys] + (["__kind"] if shields else [])
+    data_only = "__kind IS NULL AND " if shields else ""
+    tail = [f"__kind AS {q(tombstone_col or TOMBSTONE)}"] if shields else []
 
     if cell_lww:
         # Per-cell reconciliation: every column keeps its own max-writetime
@@ -283,7 +305,7 @@ def compaction_merge(
             if order_keys[c] is not None:
                 fields += f", '__v', {order_keys[c]}"
             ords.append(
-                f"CASE WHEN {q(c)} IS NOT NULL AND NOT {shadowed(c)} "
+                f"CASE WHEN {data_only}{q(c)} IS NOT NULL AND NOT {shadowed(c)} "
                 f"THEN named_struct({fields}) END AS {q('__ord_' + c)}"
             )
         # max_by skips rows whose ordering key is NULL, so invalid cells
@@ -295,23 +317,32 @@ def compaction_merge(
             # row-level TTL travels with the newest surviving version;
             # (wt, ttl) ordering makes equal-writetime versions resolve
             # greatest-ttl-wins instead of task order (round-7 pass —
-            # the value columns already tiebreak on their own values)
+            # the value columns already tiebreak on their own values);
+            # a shield carries none
             ttl = q(ttl_col)
             aggs.append(
-                f"max_by({ttl}, named_struct('__wt', {wt}, '__t', {ttl})) AS {ttl}"
+                f"max_by({ttl}, CASE WHEN __kind IS NULL THEN "
+                f"named_struct('__wt', {wt}, '__t', {ttl}) END) AS {ttl}"
             )
-        return (
+        merged = (
             data.selectExpr("*", *ords)
-            .groupBy(*[F.expr(q(k)) for k in keys])
-            .agg(*[F.expr(a) for a in aggs])
+            .groupBy(*map(F.expr, group_keys))
+            .agg(*map(F.expr, aggs))
+        )
+        if not shields:
+            return merged
+        return merged.selectExpr(
+            *[q(k) for k in keys], *[q(c) for c in value_cols], wt,
+            *([q(ttl_col)] if keep_ttl else []), *tail,
         )
 
     order = ", ".join(
         [f"{wt} DESC"]
         + [f"{k} DESC NULLS LAST" for k in order_keys.values() if k is not None]
     )
+    dead = "__kind IS NOT NULL OR " if shields else ""  # a shield has no values
     out_cols = [q(k) for k in keys] + [
-        f"CASE WHEN {shadowed(c)} THEN NULL ELSE {q(c)} END AS {q(c)}"
+        f"CASE WHEN {dead}{shadowed(c)} THEN NULL ELSE {q(c)} END AS {q(c)}"
         for c in value_cols
     ]
     if keep_writetime:
@@ -320,11 +351,12 @@ def compaction_merge(
         # the winning row version's (still unexpired) TTL survives the
         # merge — compaction must not strip a live TTL (ADVICE r1:
         # otherwise the row never expires after a compaction)
-        out_cols.append(q(ttl_col))
+        ttl = q(ttl_col)
+        out_cols.append(f"CASE WHEN __kind IS NULL THEN {ttl} END AS {ttl}")
+    out_cols += tail
+    rank_over = f"PARTITION BY {', '.join(group_keys)} ORDER BY {order}"
     return (
-        data.selectExpr(
-            "*", f"row_number() OVER (PARTITION BY {key_list} ORDER BY {order}) AS __rn"
-        )
+        data.selectExpr("*", f"row_number() OVER ({rank_over}) AS __rn")
         .where("__rn = 1")
         .selectExpr(*out_cols)
     )

@@ -41,7 +41,6 @@ from dataclasses import dataclass
 from enum import Enum
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from cassandra_analytics_spark.functions.tokens import token_sql
 from cassandra_analytics_spark.operators.merge import (
@@ -425,36 +424,23 @@ def _stage_batch(
 
 
 def _replicate_staged_files(
-    spark: SparkSession,
     copies: Sequence[tuple[str, str, str | None]],
     algorithm: str,
 ) -> None:
-    """Copy staged files to replica staging dirs as ONE distributed job.
+    """Copy staged files to replica staging dirs on the driver.
 
     ``copies`` is (src_path, dst_path, expected_digest_or_None); each
-    task copies its files over shared storage and digests the written
-    replica; the driver only compares the collected digests. This is the
-    executor-side fan-out of the reference's coordinated upload (each
-    RecordWriter task uploads its SSTables to every cluster) — the
-    driver never moves data bytes, only O(#files) metadata. Copies are
-    idempotent (full overwrite), so task retries are safe.
+    replica is digested after the copy and a mismatch raises. Like the
+    staging digest (:func:`_stage_batch`) this runs on the driver over
+    shared storage: at the batch sizes measured, a copy job's Python-
+    worker floor costs far more than the copy (PERF.md). Copies are
+    full overwrites, so a retry is safe.
     """
-    if not copies:
-        return
-    sc = spark.sparkContext
-    n = max(1, min(len(copies), sc.defaultParallelism))
+    import shutil
 
-    def _copy(items):
-        import shutil as _sh
-
-        for src, dst, want in items:
-            _sh.copyfile(src, dst)
-            yield (dst, want, _file_digest(dst, algorithm) if want else None)
-
-    for dst, want, got in (
-        sc.parallelize(list(copies), n).mapPartitions(_copy).collect()
-    ):
-        if want is not None and got != want:
+    for src, dst, want in copies:
+        shutil.copyfile(src, dst)
+        if want is not None and _file_digest(dst, algorithm) != want:
             raise BulkWriteError(f"replica digest mismatch: {dst}")
 
 
@@ -511,13 +497,14 @@ def coordinated_bulk_write(
        job unless every cluster's conf is coherent): duplicate targets
        are rejected, and any target that already holds committed batches
        must agree on partition/clustering keys.
-    2. **Stage once, replicate executor-side** — the W1/W2/W3 pipeline
-       runs ONE time (one Spark job, one token sort); the resulting
-       sorted files are then replicated byte-for-byte into every other
-       target's staging dir by a distributed copy job over shared
-       storage and digest-verified there (:func:`_replicate_staged_files`
-       — the driver moves no data bytes), exactly as one SSTable set is
-       uploaded from the write tasks to every cluster.
+    2. **Stage once, replicate on the driver** — the W1/W2/W3 pipeline
+       runs ONE time (one token sort, the jobs of one ``bulk_write``);
+       the resulting sorted files are then copied byte-for-byte into
+       every other target's staging dir over shared storage and
+       digest-verified there (:func:`_replicate_staged_files`), as one
+       SSTable set is uploaded to every cluster. The driver copies: a
+       distributed copy job's Python-worker floor outweighs the copy at
+       the batch sizes measured (PERF.md).
     3. **Joint commit** — only after every staging replica is verified
        are the atomic renames performed. If anything fails before that
        point, every staging dir is removed and no target sees the batch;
@@ -594,7 +581,7 @@ def coordinated_bulk_write(
     batch_id = _new_batch_id()
     if consistency is not None:
         return _coordinated_write_with_cl(
-            df, out, targets, list(target_dcs), list(pending_dcs),
+            out, targets, list(target_dcs), list(pending_dcs),
             consistency, rf, local_dc, batch_id, mode, partition_keys,
             clustering_keys, max_records_per_file, digest_algorithm,
         )
@@ -624,7 +611,7 @@ def coordinated_bulk_write(
                 os.path.join(first_staging, "_manifest.json"),
                 os.path.join(s, "_manifest.json"),
             )
-        _replicate_staged_files(df.sparkSession, copies, algo)
+        _replicate_staged_files(copies, algo)
     except BaseException:
         for _, s in stagings:
             shutil.rmtree(s, ignore_errors=True)
@@ -645,7 +632,6 @@ def coordinated_bulk_write(
 
 
 def _coordinated_write_with_cl(
-    df: DataFrame,
     out: DataFrame,
     targets: list[str],
     target_dcs: list[str],
@@ -688,7 +674,6 @@ def _coordinated_write_with_cl(
             try:
                 os.makedirs(s)
                 _replicate_staged_files(
-                    df.sparkSession,
                     [
                         (
                             os.path.join(src_staging, fname),
@@ -945,8 +930,8 @@ def compact_table(
     (LWW applied) and retire the old batches.
 
     ``now_micros``: the TTL-expiry clock (defaults to the current time),
-    used by BOTH the merge's expiry purge and the expired-row shield
-    re-emission — one clock, so a row is never purged unshielded.
+    used by BOTH the merge's expiry purge and the expired-row shields —
+    one clock, so a row is never purged unshielded.
 
     Mirrors Cassandra compaction: read amplification drops from
     O(#batches) to 1; row writetimes AND live TTLs are preserved so later
@@ -957,11 +942,12 @@ def compact_table(
     resurrects deleted data — and ``bulk_write`` accepts caller-supplied
     write timestamps, so that hazard is real here). Rows whose TTL has
     already expired are the same hazard in disguise — Cassandra treats
-    them as tombstones — so their shields are re-emitted too: an expired
+    them as tombstones — so their shields are carried too: an expired
     row must keep shadowing older-timestamped writes across the
-    compaction. Pass ``purge_tombstones=True`` only when no batch with
-    older writetimes can ever be ingested again (the gc_grace-elapsed
-    analog).
+    compaction. The shields are rows of the merge itself
+    (``compaction_merge(for_compaction=True)``), so the table is scanned
+    once. Pass ``purge_tombstones=True`` only when no batch with older
+    writetimes can ever be ingested again (the gc_grace-elapsed analog).
 
     ``cell_lww`` must match how the table is READ: a table of partial
     upserts read with ``cell_lww=True`` reconciles per column, and
@@ -973,72 +959,24 @@ def compact_table(
     removed, so concurrent readers never see a gap — at worst they read
     duplicates, which their own merge resolves.
     """
+    import shutil
+
     old_batches = committed_batches(table_path)
-    merged = read_bulk_table(
+    raw = read_bulk_table(
         spark, table_path, partition_keys, clustering_keys, merge=False
     )
-    # ONE clock for the whole compaction: the merge's TTL-expiry purge and
-    # the expired-row shield re-emission below must agree on "now". Left
-    # to default, the merge would evaluate F.current_timestamp() at job
-    # execution while the shield filter uses driver time at plan build —
-    # a row whose TTL expires in between would be purged WITHOUT a
-    # shield, so an older-timestamped re-ingest could resurrect it
-    # (the gc_grace invariant this function promises).
-    now = int(time.time() * 1_000_000) if now_micros is None else now_micros
+    # ONE clock for the whole compaction: the purge and the shields both
+    # come from the merge's one TTL-expiry expression, evaluated once
     compacted = compaction_merge(
-        merged,
+        raw,
         partition_keys=partition_keys,
         clustering_keys=clustering_keys,
-        now_micros=now,
-        keep_writetime=True,
-        keep_ttl=True,
+        now_micros=now_micros,
+        for_compaction=True,
         cell_lww=cell_lww,
     )
-    if not purge_tombstones:
-        # newest deletion per (pk, ck, kind) scope still shields its
-        # range; re-emit it so the shield survives the compaction
-        from cassandra_analytics_spark.operators.merge import latest_by_key
-
-        shields = []
-        key_cols = [*partition_keys, *clustering_keys]
-        if TOMBSTONE in merged.columns:
-            shields.append(
-                merged.filter(F.col(TOMBSTONE).isNotNull()).select(
-                    *key_cols, WRITETIME, TOMBSTONE
-                )
-            )
-        if TTL in merged.columns:
-            # expired-TTL data rows act as row tombstones at their own
-            # writetime (compaction_merge step 1, same expression) — the
-            # merge purges the row itself, but its shield must persist
-            not_tomb = (
-                F.col(TOMBSTONE).isNull()
-                if TOMBSTONE in merged.columns
-                else F.lit(True)
-            )
-            expired = (
-                merged.filter(
-                    not_tomb
-                    & F.col(TTL).isNotNull()
-                    & (
-                        F.col(WRITETIME)
-                        + F.col(TTL).cast("long") * F.lit(1_000_000)
-                        <= F.lit(now)
-                    )
-                )
-                .select(*key_cols, WRITETIME, F.lit("row").alias(TOMBSTONE))
-            )
-            shields.append(expired)
-        if shields:
-            all_shields = shields[0]
-            for s in shields[1:]:
-                all_shields = all_shields.unionByName(s)
-            tombs = latest_by_key(
-                all_shields,
-                keys=[*key_cols, TOMBSTONE],
-                order_col=WRITETIME,
-            )
-            compacted = compacted.unionByName(tombs, allowMissingColumns=True)
+    if purge_tombstones and TOMBSTONE in compacted.columns:
+        compacted = compacted.where(f"{TOMBSTONE} IS NULL").drop(TOMBSTONE)
     result = bulk_write(
         compacted,
         table_path,
@@ -1046,8 +984,6 @@ def compact_table(
         clustering_keys,
         num_partitions=num_partitions,
     )
-    import shutil
-
     for b in old_batches:
         shutil.rmtree(b)
     return result

@@ -450,10 +450,9 @@ def coordinated_bundle_write(
     PER CLUSTER and the same SSTable bundles are uploaded to each
     (``CassandraCoordinatedBulkWriterContext.java``). Analogously: the
     bundle pipeline (token sort → per-task zip bundles) runs ONCE into
-    the first store's staging dir, the finished bundles are replicated
-    byte-for-byte into every other store's staging by a distributed copy
-    job (``_replicate_staged_files`` — the driver moves no data bytes,
-    matching each task uploading its own bundles to every cluster) and
+    the first store's staging dir, the finished bundles are copied
+    byte-for-byte into every other store's staging on the driver
+    (``_replicate_staged_files``, as the bulk writer's replicas are) and
     digest-verified there, and only then does the joint commit rename
     every staging into its ``job-…`` dir — with rollback on a mid-commit
     failure, so no store ever exposes a job the others don't have.
@@ -491,7 +490,7 @@ def coordinated_bundle_write(
                 os.path.join(first_staging, "_bundle_manifest.json"),
                 os.path.join(s, "_bundle_manifest.json"),
             )
-        _replicate_staged_files(df.sparkSession, copies, algo)
+        _replicate_staged_files(copies, algo)
     except BaseException:
         for s in stagings:
             shutil.rmtree(s, ignore_errors=True)

@@ -25,18 +25,25 @@ def sf_dir() -> str:
 @pytest.fixture
 def py4j_calls():
     """Counts py4j round trips to the JVM: ``with py4j_calls() as n:``
-    counts every ``ClientServerConnection.send_command`` inside the block
-    into ``n.count``. Pins the driver-side cost of building a plan, which
-    the Column DSL pays one round trip per expression node."""
+    counts every ``ClientServerConnection.send_command`` the block's own
+    thread makes into ``n.count``. Pins the driver-side cost of building
+    a plan, which the Column DSL pays one round trip per expression node.
+    py4j's finalizer thread sends the deletes of garbage-collected JVM
+    object proxies (earlier tests' too) whenever Python's collector
+    runs; those come from another thread and are not counted."""
+    import threading
+
     from py4j.clientserver import ClientServerConnection
 
     @contextlib.contextmanager
     def counting():
         counter = SimpleNamespace(count=0)
         original = ClientServerConnection.send_command
+        caller = threading.get_ident()
 
         def send_command(self, *args, **kwargs):
-            counter.count += 1
+            if threading.get_ident() == caller:
+                counter.count += 1
             return original(self, *args, **kwargs)
 
         ClientServerConnection.send_command = send_command
@@ -44,6 +51,29 @@ def py4j_calls():
             yield counter
         finally:
             ClientServerConnection.send_command = original
+
+    return counting
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """Counts Spark jobs: ``with spark_jobs() as n:`` puts the number of
+    jobs started inside the block into ``n.count`` (read back from the
+    status tracker through a job group set around the block)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def counting():
+        counter = SimpleNamespace(count=0)
+        group = f"counted-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted jobs")
+        try:
+            yield counter
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            counter.count = len(sc.statusTracker().getJobIdsForGroup(group))
 
     return counting
 

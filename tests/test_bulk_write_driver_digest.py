@@ -2,7 +2,8 @@
 
 ``_stage_batch`` digests and row-counts the staged files on the driver,
 so a write runs the range-sampling, shuffle map and write jobs and
-nothing else; ``_prepare_batch_df`` builds its plan from one SQL
+nothing else; a coordinated write copies and digests its replicas on the
+driver too; ``_prepare_batch_df`` builds its plan from one SQL
 statement.
 """
 
@@ -10,7 +11,7 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
+import shutil
 
 import pytest
 from pyspark.errors import AnalysisException
@@ -21,6 +22,8 @@ from cassandra_analytics_spark.sinks.bulk_writer import (
     _prepare_batch_df,
     _staged_file_meta,
     bulk_write,
+    committed_batches,
+    coordinated_bulk_write,
     verify_digests,
 )
 
@@ -74,22 +77,76 @@ def test_manifest_lists_the_staged_files(spark, tmp_path):
     assert manifest["num_rows"] == res.num_rows == sum(rows for _, _, rows in metas) == 400
 
 
-def test_bulk_write_runs_three_jobs(spark, tmp_path):
+def test_bulk_write_runs_three_jobs(spark, tmp_path, spark_jobs):
     """Range sampling, the shuffle map stage and the parquet write, and
     no (Python-worker) digest job."""
     df = _bulk_frame(spark)
-    sc = spark.sparkContext
-    group = f"bulk-write-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "bulk_write job count")
-    try:
+    with spark_jobs() as jobs:
         res = bulk_write(
             df, str(tmp_path / "tbl"), ["tenant", "bucket"], ["seq"],
             write_timestamp_micros=5_000,
         )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     assert res.num_rows == 400
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    assert jobs.count <= 3
+
+
+@pytest.mark.parametrize("gate", [{}, {"consistency": "QUORUM", "rf": 3}],
+                         ids=["plain", "cl_gated"])
+def test_coordinated_write_runs_one_writes_jobs(spark, tmp_path, spark_jobs, gate):
+    """A 3-target coordinated write copies and digests its replicas on
+    the driver: it runs the jobs of one bulk_write and no copy job."""
+    df = _bulk_frame(spark)
+    targets = [str(tmp_path / f"t{i}") for i in range(3)]
+    with spark_jobs() as jobs:
+        results = coordinated_bulk_write(
+            df, targets, ["tenant", "bucket"], ["seq"],
+            write_timestamp_micros=5_000, **gate,
+        )
+    assert len(results) == 3
+    assert all(r.num_rows == 400 and verify_digests(r.batch_dir) for r in results)
+    assert jobs.count <= 3
+
+
+def _corrupt_copies_into(monkeypatch, bad_dir):
+    """Make every parquet copy into ``bad_dir`` land one byte longer."""
+    real = shutil.copyfile
+
+    def copyfile(src, dst, *args, **kwargs):
+        out = real(src, dst, *args, **kwargs)
+        if dst.endswith(".parquet") and dst.startswith(bad_dir):
+            with open(dst, "ab") as f:
+                f.write(b"\0")
+        return out
+
+    monkeypatch.setattr(shutil, "copyfile", copyfile)
+
+
+def test_replica_digest_mismatch_aborts_every_target(spark, tmp_path, monkeypatch):
+    """Without a CL gate a replica whose digest differs aborts the write:
+    no target publishes the batch."""
+    targets = [str(tmp_path / f"t{i}") for i in range(3)]
+    _corrupt_copies_into(monkeypatch, targets[2])
+    with pytest.raises(BulkWriteError, match="replica digest mismatch"):
+        coordinated_bulk_write(
+            _bulk_frame(spark, 40), targets, ["tenant", "bucket"], ["seq"],
+            write_timestamp_micros=5_000,
+        )
+    assert all(committed_batches(t) == [] for t in targets)
+    assert all(os.listdir(t) == [] for t in targets if os.path.isdir(t))
+
+
+def test_replica_digest_mismatch_is_an_instance_failure(spark, tmp_path, monkeypatch):
+    """Under a CL gate a replica whose digest differs fails its target
+    only: QUORUM of rf=3 commits on the other two."""
+    targets = [str(tmp_path / f"t{i}") for i in range(3)]
+    _corrupt_copies_into(monkeypatch, targets[1])
+    results = coordinated_bulk_write(
+        _bulk_frame(spark, 40), targets, ["tenant", "bucket"], ["seq"],
+        write_timestamp_micros=5_000, consistency="QUORUM", rf=3,
+    )
+    assert sorted(os.path.dirname(r.batch_dir) for r in results) == [targets[0], targets[2]]
+    assert all(verify_digests(r.batch_dir) for r in results)
+    assert committed_batches(targets[1]) == []
 
 
 def test_prepare_batch_df_py4j_round_trips(spark, py4j_calls):

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import Row
 
 from cassandra_analytics_spark.sinks.bulk_writer import (
@@ -308,3 +309,147 @@ def test_compaction_preserves_quantized_code_consistency(spark, tmp_path):
         ).alias("worst")
     ).collect()[0]["worst"]
     assert rec <= 1.0 + 1e-9  # within the scheme's per-element bound
+
+
+# -- one-pass compaction: invisible to readers, one scan, gate-flip arm --
+
+T = 200_000_000  # micros: the one clock of every compaction and read below
+HISTORY_SCHEMA = (
+    "pk int, ck int, a int, b string, m map<string,int>, "
+    "writetime long, ttl int, tombstone string"
+)
+
+
+def _history(seed, n=60):
+    """A seeded table history over 3 partitions x 3 rows in 3 batches:
+    full and partial upserts (NULL = cell not written), live and expired
+    TTLs, and partition, row, ``cell:a`` and ``cell:m`` tombstones, each
+    version with its own writetime. Partitions 3 and 4 hold deletions
+    only (a ``cell:a`` tombstone, an expired row, a partition delete), so
+    each of those shields alone decides what a later stale write shows."""
+    import random
+
+    rng = random.Random(seed)
+    batches = [[], [], [
+        (3, 0, None, None, None, 5_000, None, "cell:a"),
+        (3, 1, 1, "e", None, 6_000, 1, None),
+        (4, None, None, None, None, 7_000, None, "partition"),
+    ]]
+    for wt in rng.sample(range(1_000, 150_000_000, 1_000), n):
+        pk, ck, r = rng.randrange(3), rng.randrange(3), rng.random()
+        if r < 0.06:
+            row = (pk, None, None, None, None, wt, None, "partition")
+        elif r < 0.14:
+            row = (pk, ck, None, None, None, wt, None, "row")
+        elif r < 0.26:
+            row = (pk, ck, None, None, None, wt, None, rng.choice(["cell:a", "cell:m"]))
+        else:
+            def maybe(v):
+                return v if rng.random() < 0.7 else None
+
+            # 1 s TTLs are long expired at T, 1e6 s TTLs are live
+            ttl = rng.choice([None, None, None, 1, 1_000_000])
+            row = (pk, ck, maybe(rng.randrange(100)), maybe(f"s{rng.randrange(9)}"),
+                   maybe({"x": rng.randrange(5)}), wt, ttl, None)
+        rng.choice(batches).append(row)
+    return batches
+
+
+def _write_history(spark, path, batches):
+    for rows in batches:
+        bulk_write(spark.createDataFrame(rows, HISTORY_SCHEMA), path, ["pk"], ["ck"])
+
+
+def _rows(df):
+    """A frame's rows as a sorted list of plain tuples (maps as sorted
+    item tuples)."""
+    def plain(v):
+        return tuple(sorted(v.items())) if isinstance(v, dict) else v
+
+    return sorted((tuple(plain(v) for v in r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("cell_lww", [False, True], ids=["row", "cell"])
+def test_compaction_is_invisible_to_readers(spark, tmp_path, cell_lww):
+    """Compacting (shields kept) changes nothing a reader sees at the
+    compaction's clock, even after a stale re-ingest at writetime 0 to
+    every row: each deletion kind's newest shield still shadows it."""
+    import shutil
+
+    stale = spark.createDataFrame(
+        [(pk, ck, 7, "stale", {"x": 9}) for pk in range(6) for ck in range(3)],
+        "pk int, ck int, a int, b string, m map<string,int>",
+    )
+    for seed in (1, 2):
+        plain, compacted = str(tmp_path / f"plain{seed}"), str(tmp_path / f"compacted{seed}")
+        _write_history(spark, plain, _history(seed))
+        shutil.copytree(plain, compacted)
+        compact_table(spark, compacted, ["pk"], ["ck"], cell_lww=cell_lww, now_micros=T)
+        for path in (plain, compacted):
+            bulk_write(stale, path, ["pk"], ["ck"], write_timestamp_micros=0)
+
+        def read(path):
+            return _rows(read_bulk_table(spark, path, ["pk"], ["ck"],
+                                         cell_lww=cell_lww, now_micros=T))
+
+        assert read(compacted) == read(plain), seed
+
+
+@pytest.mark.parametrize("cell_lww", [False, True], ids=["row", "cell"])
+def test_compaction_scans_the_table_once(
+    spark, tmp_path, monkeypatch, py4j_calls, spark_jobs, cell_lww
+):
+    """The frame compact_table hands bulk_write reads every batch file
+    once, shuffles once and unions nothing: the shields are rows of the
+    merge. One compaction is the schema-merging read plus one write's
+    jobs. (The shield branch this replaced scanned 3 times, shuffled
+    twice, ran 2 Unions and 6 jobs.)"""
+    from cassandra_analytics_spark.sinks import bulk_writer
+
+    path = str(tmp_path / "tbl")
+    _write_history(spark, path, _history(3))
+    seen = {}
+    write = bulk_writer.bulk_write
+
+    def spy(df, *args, **kwargs):
+        seen["py4j"] = n.count
+        seen["plan"] = df._jdf.queryExecution().executedPlan().toString()
+        return write(df, *args, **kwargs)
+
+    monkeypatch.setattr(bulk_writer, "bulk_write", spy)
+    with spark_jobs() as jobs, py4j_calls() as n:
+        compact_table(spark, path, ["pk"], ["ck"], cell_lww=cell_lww, now_micros=T)
+    plan = seen["plan"]
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Union" not in plan, plan
+    assert jobs.count <= 5, jobs.count
+    assert seen["py4j"] <= 150, seen["py4j"]
+
+
+def test_scan_paths_gate_flip_arm(spark, tmp_path, monkeypatch):
+    """``_scan_paths`` hands Spark whole batch dirs when they hold
+    exactly their listed files; forced to hand it the listed files
+    instead, both readers' rows and the compacted batch are unchanged."""
+    import shutil
+
+    from cassandra_analytics_spark.sinks import bulk_writer
+
+    path = str(tmp_path / "tbl")
+    _write_history(spark, path, _history(4))
+    copies = {arm: str(tmp_path / arm) for arm in ("dirs", "files")}
+    for copy in copies.values():
+        shutil.copytree(path, copy)
+
+    def arm_rows(table):
+        reads = [
+            _rows(read_bulk_table(spark, table, ["pk"], ["ck"], cell_lww=cell, now_micros=T))
+            for cell in (False, True)
+        ]
+        compact_table(spark, table, ["pk"], ["ck"], now_micros=T)
+        return reads, _rows(read_bulk_table(spark, table, ["pk"], ["ck"], merge=False))
+
+    assert bulk_writer._scan_paths(bulk_writer._data_files(path)) == committed_batches(path)
+    default = arm_rows(copies["dirs"])
+    monkeypatch.setattr(bulk_writer, "_scan_paths", lambda files: list(files))
+    assert arm_rows(copies["files"]) == default

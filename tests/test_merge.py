@@ -293,7 +293,7 @@ def test_equal_writetime_ttl_resolves_greatest(spark):
     row = {
         r.pk: (r.v, r.ttl)
         for r in compaction_merge(
-            df, ["pk"], keep_ttl=True, now_micros=0
+            df, ["pk"], for_compaction=True, now_micros=0
         ).collect()
     }
     assert row == {1: ("b", None), 2: ("y", 9)}
@@ -301,7 +301,7 @@ def test_equal_writetime_ttl_resolves_greatest(spark):
     cell = {
         r.pk: (r.v, r.ttl)
         for r in compaction_merge(
-            df, ["pk"], keep_ttl=True, now_micros=0, cell_lww=True
+            df, ["pk"], for_compaction=True, now_micros=0, cell_lww=True
         ).collect()
     }
     assert cell == {1: ("b", 5), 2: ("y", 9)}

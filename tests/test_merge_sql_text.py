@@ -74,6 +74,11 @@ EXPECTED = {
 }
 
 
+# compaction output's shields: the newest deletion per (ck, kind) scope,
+# as (ck, writetime, kind) — the expired TTL row of (p,3) is a 'row' one
+SHIELDS = {(1, 150, "cell:o'k"), (2, 250, "cell:back\\slash"), (3, 100, "row")}
+
+
 @pytest.mark.parametrize("names", [PINNED, ODD], ids=["pinned", "odd"])
 @pytest.mark.parametrize("keep", [False, True], ids=["plain", "keep_wt_ttl"])
 @pytest.mark.parametrize("cell_lww", [False, True], ids=["row", "cell"])
@@ -81,13 +86,23 @@ def test_merge_quotes_identifiers_and_literals(spark, cell_lww, keep, names):
     df = spark.createDataFrame(ROWS, _schema(names))
     out = compaction_merge(
         df, ["pk"], ["ck"], now_micros=NOW, cell_lww=cell_lww,
-        keep_writetime=keep, keep_ttl=keep,
+        for_compaction=keep,
     )
-    tail = ["writetime", "ttl"] if keep else []
+    tail = ["writetime", "ttl", "tombstone"] if keep else []
     assert out.columns == ["pk", "ck", *names, "m", *tail]
     # every merged column stays nullable, whatever its name
     assert all(f.nullable for f in out.schema.fields[2:])
-    got = {r["ck"]: r for r in out.collect()}
+    rows = out.collect()
+    if keep:
+        shields = [r for r in rows if r["tombstone"] is not None]
+        rows = [r for r in rows if r["tombstone"] is None]
+        assert {(r["ck"], r["writetime"], r["tombstone"]) for r in shields} == SHIELDS
+        assert len(shields) == len(SHIELDS)
+        for r in shields:
+            assert r["ttl"] is None and r["m"] is None
+            assert all(r[c] is None for c in names)
+    got = {r["ck"]: r for r in rows}
+    assert len(got) == len(rows)
     want = EXPECTED[cell_lww]
     assert sorted(got) == sorted(want)
     for ck, (vals, m, wt, ttl) in want.items():
