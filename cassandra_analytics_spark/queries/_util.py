@@ -17,9 +17,17 @@ switch the affected query to the decimal variant (``DEC``/``DEC_SQL``).
 
 Per-row double arithmetic (products, sqrt) is IEEE-deterministic and safe;
 only the reduction order needs the fixed-point detour.
+
+Also here: :func:`scratch_dir`, the one place a query makes and removes
+the scratch directory its written files live in.
 """
 
 from __future__ import annotations
+
+import contextlib
+import shutil
+import tempfile
+from collections.abc import Iterator
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -51,3 +59,17 @@ def davg(c: Column) -> Column:
 
 def davg_sql(expr: str) -> str:
     return f"{dsum_sql(expr)} / COUNT({expr})"
+
+
+@contextlib.contextmanager
+def scratch_dir(prefix: str) -> Iterator[str]:
+    """A fresh directory under the temp dir for the files one query run
+    writes, removed whole on exit. A layout's sidecars
+    (``<path>_spec``, ``<path>_centroids``, ``<path>_codebook``) sit next
+    to it, so only removing the root removes everything; a result that
+    reads these files must be materialized before the block exits."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)

@@ -19,7 +19,7 @@ from cassandra_analytics_spark.operators.merge import (
 )
 from cassandra_analytics_spark.operators.partition_stats import partition_sizes
 from cassandra_analytics_spark.queries import query
-from cassandra_analytics_spark.queries._util import dsum, dsum_sql
+from cassandra_analytics_spark.queries._util import dsum, dsum_sql, scratch_dir
 
 
 @query(
@@ -131,8 +131,6 @@ def lmt_last_modified(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(the reference's write-then-read-back Tester.java pattern).",
 )
 def bulk_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from cassandra_analytics_spark.sinks.bulk_writer import (
         bulk_write,
         read_bulk_table,
@@ -141,10 +139,7 @@ def bulk_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    import shutil
-
-    path = tempfile.mkdtemp(prefix="cas_bulk_roundtrip_")
-    try:
+    with scratch_dir("cas_bulk_roundtrip_") as path:
         bulk_write(
             o,
             path,
@@ -164,8 +159,6 @@ def bulk_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             # deleted now instead of leaking a full orders copy per run
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -187,8 +180,6 @@ def bulk_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "targets (or from the source) breaks the row count and hash.",
 )
 def coordinated_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from cassandra_analytics_spark.sinks.bulk_writer import (
         coordinated_bulk_write,
         read_bulk_table,
@@ -197,10 +188,7 @@ def coordinated_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    import shutil
-
-    root = tempfile.mkdtemp(prefix="cas_coord_roundtrip_")
-    try:
+    with scratch_dir("cas_coord_roundtrip_") as root:
         targets = [f"{root}/cluster_a", f"{root}/cluster_b"]
         coordinated_bulk_write(
             o,
@@ -224,8 +212,6 @@ def coordinated_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             # materialize so both replica copies can be deleted now
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -594,8 +580,6 @@ def static_column_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bundle -> store -> restore breaks the hash.",
 )
 def bundle_write_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from cassandra_analytics_spark.sinks.bulk_writer import read_bulk_table
     from cassandra_analytics_spark.sinks.bundles import (
         bundle_write,
@@ -605,11 +589,9 @@ def bundle_write_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"
     )
-    import shutil
-
-    store = tempfile.mkdtemp(prefix="cas_bundle_store_")
-    table = tempfile.mkdtemp(prefix="cas_bundle_tbl_")
-    try:
+    with scratch_dir("cas_bundle_store_") as store, scratch_dir(
+        "cas_bundle_tbl_"
+    ) as table:
         res = bundle_write(
             o,
             store,
@@ -630,9 +612,6 @@ def bundle_write_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
             # serialized copies of orders) can be deleted now
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
-        shutil.rmtree(table, ignore_errors=True)
 
 
 @query(

@@ -13,7 +13,7 @@ structure computed independently (group by embedding, remove all but
 the min id per >1 group): the same 198,000, with zero set difference.
 
 Usage: python scripts/measure_streaming_semdedup_100x.py [corpus_dir]
-Needs .scale100/ (scripts/make_scale100.py).
+Needs .scale100/ (python scripts/make_scale.py .scale100 100).
 """
 
 from __future__ import annotations
