@@ -4,7 +4,8 @@
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
 
     {"metric": "total_query_time", "value": N, "unit": "sec",
-     "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1}
+     "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1,
+     "cpus": N, "defaultParallelism": N}
 
 Each query is forced end-to-end with the noop sink (full computation, no
 driver collect) after a warm-up run of the session.
@@ -458,17 +459,28 @@ def main() -> None:
                 }
             )
         )
+    print(json.dumps(_final_record(spark, times, n_runs + extra_runs, sf, bytes_total)))
+
+
+def _final_record(spark, times: dict, runs: int, sf, bytes_total) -> dict:
+    """The driver-parsed final line, with the run conditions it was
+    measured under: ``cpus`` (the N of ``local[N]``) and Spark's
+    ``defaultParallelism``."""
+    master = spark.sparkContext.master
+    n = master[master.find("[") + 1:master.rfind("]")] if "[" in master else master
     final = {
         "metric": "total_query_time",
         "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
-        "runs": n_runs + extra_runs,
+        "runs": runs,
         "sf": sf,
+        "cpus": int(n) if n.isdigit() else n,
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
     }
     if bytes_total:
         final["bytes"] = bytes_total
-    print(json.dumps(final))
+    return final
 
 
 if __name__ == "__main__":

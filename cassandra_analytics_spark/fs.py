@@ -73,3 +73,39 @@ def glob_paths(spark: SparkSession, pattern: str) -> list[str]:
     if statuses is None:
         return []
     return [st.getPath().toString() for st in statuses]
+
+
+def read_sidecar(spark: SparkSession, path_str: str) -> list[dict] | None:
+    """The rows of a small parquet directory (a layout's ``_spec``,
+    ``_centroids`` or ``_codebook``) as column→value dicts, read on the
+    driver with no Spark job: the data files are listed and read through
+    the Hadoop FS API and decoded with pyarrow. Rows equal
+    ``[r.asDict() for r in spark.read.parquet(path_str).collect()]``; a
+    column a file lacks is absent from its dicts, not None. Returns None
+    when the directory is missing or holds no data file (where that
+    Spark read raises). Names starting with ``_`` or ``.`` (``_SUCCESS``,
+    checksums) are skipped, as Spark skips them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    fs, path = _fs_and_path(spark, path_str)
+    if not fs.exists(path):
+        return None
+    data_files = []
+    for st in fs.listStatus(path):
+        p = st.getPath()
+        name = p.getName()
+        if not name.startswith(("_", ".")) and st.isFile():
+            data_files.append((name, p))
+    if not data_files:
+        return None
+    io_utils = spark._jvm.org.apache.commons.io.IOUtils
+    rows: list[dict] = []
+    for _, p in sorted(data_files, key=lambda f: f[0]):
+        stream = fs.open(p)
+        try:
+            data = io_utils.toByteArray(stream)
+        finally:
+            stream.close()
+        rows.extend(pq.read_table(pa.BufferReader(data)).to_pylist())
+    return rows

@@ -431,10 +431,18 @@ def read_centroids(
     spark: SparkSession, index_path: str
 ) -> list[tuple[int, list[float]]]:
     """The coarse centroid table persisted beside an IVF / IVF-PQ
-    layout, sorted by cell id (bounded metadata collect)."""
+    layout, sorted by cell id (a driver-side sidecar read); a named
+    error when the table is missing."""
+    from cassandra_analytics_spark.fs import read_sidecar
+
+    rows = read_sidecar(spark, f"{index_path}_centroids")
+    if rows is None:
+        raise ValueError(
+            f"{index_path!r} has no centroid table ({index_path}_centroids)"
+            " — rebuild the layout"
+        )
     return sorted(
-        (int(r.cid), [float(x) for x in r.centroid])
-        for r in spark.read.parquet(f"{index_path}_centroids").collect()
+        (int(r["cid"]), [float(x) for x in r["centroid"]]) for r in rows
     )
 
 
@@ -442,18 +450,17 @@ def _read_ivf_spec_optional(spark: SparkSession, index_path: str) -> dict | None
     """The persisted spec of an IVF (or sign-LSH) layout, or None for
     pre-spec (legacy) layouts. A PRESENT-but-corrupt spec still raises — a multi-row spec is damage,
     not legacy."""
-    from pyspark.errors import AnalysisException
+    from cassandra_analytics_spark.fs import read_sidecar
 
-    try:
-        rows = spark.read.parquet(f"{index_path}_spec").collect()
-    except AnalysisException:
+    rows = read_sidecar(spark, f"{index_path}_spec")
+    if rows is None:
         return None
     if len(rows) != 1:
         raise ValueError(
             f"corrupt layout spec at {index_path}_spec: expected exactly "
             f"one row, found {len(rows)}"
         )
-    return rows[0].asDict()
+    return rows[0]
 
 
 def read_ivf_spec(spark: SparkSession, index_path: str) -> dict:
@@ -679,9 +686,9 @@ def query_ivf_index_quantized(
     scoring NULL codes would return an empty result with no hint.
     """
     from cassandra_analytics_spark.operators.quantize import (
+        _approx_score,
         _no_scores,
         _phase2_exact_topk,
-        approx_cosine_from_codes,
     )
 
     if k < 1:
@@ -714,15 +721,14 @@ def query_ivf_index_quantized(
             f"are {len(centroids[0][1])}-d"
         )
     cells = nearest_cells_for(query_vec, centroids, num_probes)
-    candidates = index.filter(F.col("cell").isin(cells))
-    approx = approx_cosine_from_codes(query_vec, _QCODE, _QMIN, _QSCALE)
+    candidates = index.where(f"cell IN ({', '.join(map(str, cells))})")
     # phase 1 projects ONLY (id, approx): the pruned scan reads codes +
     # metadata, never the float column (the quantized_topk plan audit)
-    scored = candidates.select(
-        F.col(id_col), approx.alias("__approx")
-    ).filter(F.col("__approx").isNotNull())
+    approx = _approx_score(
+        query_vec, _QCODE, _QMIN, _QSCALE, "array<tinyint>"
+    )
     return _phase2_exact_topk(
-        candidates, scored, [float(x) for x in query_vec], k, id_col,
+        candidates, approx, [float(x) for x in query_vec], k, id_col,
         vec_col, rescore_factor, rescore_mode, math,
     )
 
@@ -1478,12 +1484,11 @@ def compact_ann_index(
 
     Returns ``{"format", "files_before", "files_after"}`` (parquet data
     files only)."""
-    from pyspark.errors import AnalysisException
-
     from cassandra_analytics_spark.fs import (
         delete_path,
         glob_exists,
         list_files,
+        read_sidecar,
         rename_path,
     )
 
@@ -1492,20 +1497,19 @@ def compact_ann_index(
             f"files_per_partition must be >= 1, got {files_per_partition}"
         )
     spec_path = f"{index_path}_spec"
-    try:
-        rows = spark.read.parquet(spec_path).collect()
-    except AnalysisException:
+    rows = read_sidecar(spark, spec_path)
+    if rows is None:
         raise ValueError(
             f"{index_path!r} has no persisted spec ({spec_path}) — not a "
             "persisted ANN layout (or a rebuild/compaction crashed "
             "mid-write; rebuild, or restore the _spec__compacting stash)"
-        ) from None
+        )
     if len(rows) != 1:
         raise ValueError(
             f"corrupt spec at {spec_path}: expected exactly one row, "
             f"found {len(rows)}"
         )
-    fmt = rows[0].asDict().get("format")
+    fmt = rows[0].get("format")
     if fmt not in _ANN_FORMAT_PARTITION_COL:
         raise ValueError(
             f"spec at {spec_path} has unknown layout format {fmt!r} — "

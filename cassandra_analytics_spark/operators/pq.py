@@ -43,7 +43,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cassandra_analytics_spark.local_data import local_df
-from cassandra_analytics_spark.operators.similarity import lit_vector
+from cassandra_analytics_spark.operators.merge import quote_ident, sql_string
+from cassandra_analytics_spark.operators.similarity import (
+    _fold_sql,
+    lit_vector,
+    lit_vector_sql,
+    sql_double,
+    sql_over,
+)
 
 
 @dataclass(frozen=True)
@@ -323,37 +330,34 @@ def pq_encode(
     return df.select(*cols)
 
 
-def _guard_code_range(ccol, ks: int, caller: str):
-    """Wrap a PQ code column so any code indexing past a ``ks``-codeword
-    codebook raises LOUDLY instead of silently scoring as NULL: codes
-    are stored as argmin − 128, so a frame encoded with a LARGER-ks
-    codebook (same m) carries values whose ``code + 128 >= ks`` —
-    ``element_at`` against this codebook's flat literal would return
-    NULL under non-ANSI mode and the row (or pair) would silently
+def _guard_code_range_sql(c: str, ks: int, caller: str) -> str:
+    """SQL text wrapping the code array ``c`` so any code indexing past a
+    ``ks``-codeword codebook raises LOUDLY instead of silently scoring
+    as NULL: codes are stored as argmin − 128, so a frame encoded with a
+    LARGER-ks codebook (same m) carries values whose ``code + 128 >=
+    ks`` — ``element_at`` against this codebook's flat literal would
+    return NULL under non-ANSI mode and the row (or pair) would silently
     vanish from the result. Shared by every direct-API PQ scorer
     (``pq_adc_topk``, ``pq_adc_dot_expr``, ``pq_pairs_from_cells``) so
     they self-check identically (r14 ADVICE low); the persisted-layout
     paths additionally check spec geometry before ever building the
     expression. NULL code vectors pass through (the callers' NULL
     contract)."""
-    rng_bad = F.exists(
-        ccol, lambda c: c.cast("int") + F.lit(128) >= F.lit(ks)
+    msg = sql_string(
+        f"{caller}: codebook has ks={ks} codewords but found a code past "
+        "that range — the frame was encoded with a different (larger-ks) "
+        "codebook; re-encode or pass the matching codebook"
     )
     return (
-        F.when(ccol.isNull(), ccol)
-        .when(
-            rng_bad,
-            F.raise_error(
-                F.lit(
-                    f"{caller}: codebook has ks={ks} codewords but "
-                    "found a code past that range — the frame was "
-                    "encoded with a different (larger-ks) codebook; "
-                    "re-encode or pass the matching codebook"
-                )
-            ).cast("array<tinyint>"),
-        )
-        .otherwise(ccol)
+        f"CASE WHEN {c} IS NULL THEN {c} "
+        f"WHEN exists({c}, __c -> CAST(__c AS INT) + 128 >= {ks}) "
+        f"THEN CAST(raise_error({msg}) AS ARRAY<TINYINT>) ELSE {c} END"
     )
+
+
+def _guard_code_range(ccol, ks: int, caller: str):
+    """The Column form of :func:`_guard_code_range_sql`."""
+    return sql_over(lambda c: _guard_code_range_sql(c, ks, caller), ccol)
 
 
 # The per-PAIR ADC scorers below have two implementations. The
@@ -873,8 +877,8 @@ def pq_adc_topk(
     (PERF.md). NULL/unscorable rows never rank; a code vector whose
     length differs from m raises loudly.
 
-    ``extra_dot`` (round 15, residual-encoded IVF-PQ layouts): an
-    optional Column ADDED to the ADC sum before normalization — the
+    ``extra_dot`` (round 15, residual-encoded IVF-PQ layouts): optional
+    SQL expression text ADDED to the ADC sum before normalization — the
     anchor's contribution ``q·centroid[cell]``, a per-cell constant
     the caller derives from the row's partition column. The stored
     ``norm_col`` already describes the full reconstruction, so only
@@ -911,50 +915,37 @@ def pq_adc_topk(
         for i in range(m)
         for j in range(ks)
     ]
-    # ONE driver call (r17): the 512-double LUT via F.lit(list) cost
-    # ~0.26 s of py4j chatter per probe build (one RPC per element)
-    lut_lit = lit_vector(lut)
-    dim_ok = F.size(F.col(code_col)) == F.lit(m)
+    # the LUT rides the SQL text: one driver call for the whole score
+    # (r17 measured ~0.26 s of py4j chatter for a 512-double F.lit list)
+    c = quote_ident(code_col)
+    dim_msg = sql_string(
+        f"pq_adc_topk: codebook has m={m} subspaces but found a code "
+        "vector of length "
+    )
     # dim guard here, then the SHARED code-range guard (r13/r14 ADVICE
     # lows): a larger-ks encode would index past this LUT and NULL the
     # row out silently under non-ANSI element_at.
     guarded = (
-        F.when(F.col(code_col).isNull(), F.col(code_col))
-        .when(
-            ~dim_ok,
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"pq_adc_topk: codebook has m={m} subspaces but "
-                        "found a code vector of length "
-                    ),
-                    F.size(F.col(code_col)).cast("string"),
-                )
-            ).cast("array<tinyint>"),
-        )
-        .otherwise(_guard_code_range(F.col(code_col), ks, "pq_adc_topk"))
+        f"CASE WHEN {c} IS NULL THEN {c} WHEN NOT (size({c}) = {m}) THEN "
+        f"CAST(raise_error(concat({dim_msg}, CAST(size({c}) AS STRING))) "
+        f"AS ARRAY<TINYINT>) "
+        f"ELSE {_guard_code_range_sql(c, ks, 'pq_adc_topk')} END"
     )
     # element_at is 1-based; stored code = argmin − 128
-    contrib = F.transform(
-        guarded,
-        lambda c, i: F.element_at(
-            lut_lit, i * F.lit(ks) + c.cast("int") + F.lit(129)
-        ),
+    adc = _fold_sql(
+        f"transform({guarded}, (__c, __i) -> element_at({lit_vector_sql(lut)}, "
+        f"__i * {ks} + CAST(__c AS INT) + 129))",
+        "0D",
     )
-    adc = F.aggregate(contrib, F.lit(0.0), lambda acc, x: acc + x)
     if extra_dot is not None:
-        adc = adc + extra_dot
-    approx = F.try_divide(adc, F.col(norm_col) * F.lit(qnorm))
-    scored = (
-        qdf.select(F.col(id_col), approx.alias("__approx"))
-        .filter(F.col("__approx").isNotNull())
-    )
+        adc = f"{adc} + ({extra_dot})"
+    approx = f"try_divide({adc}, {quote_ident(norm_col)} * {sql_double(qnorm)})"
     from cassandra_analytics_spark.operators.quantize import (
         _phase2_exact_topk,
     )
 
     return _phase2_exact_topk(
-        qdf, scored, qv, k, id_col, vec_col, rescore_factor,
+        qdf, approx, qv, k, id_col, vec_col, rescore_factor,
         rescore_mode, math,
     )
 
@@ -1019,22 +1010,21 @@ def save_pq_index(
 
 def read_pq_spec(spark, index_path: str) -> dict:
     """The persisted spec of a PQ layout; loud on missing/corrupt."""
-    from pyspark.errors import AnalysisException
+    from cassandra_analytics_spark.fs import read_sidecar
 
-    try:
-        rows = spark.read.parquet(f"{index_path}_spec").collect()
-    except AnalysisException:
+    rows = read_sidecar(spark, f"{index_path}_spec")
+    if rows is None:
         raise ValueError(
             f"{index_path!r} has no persisted PQ spec "
             f"({index_path}_spec) — not a save_pq_index layout (or a "
             "rebuild crashed mid-write; rebuild with save_pq_index)"
-        ) from None
-    if len(rows) != 1 or rows[0]["format"] != "pq-v1":
+        )
+    if len(rows) != 1 or rows[0].get("format") != "pq-v1":
         raise ValueError(
             f"corrupt PQ spec at {index_path}_spec: expected one "
             f"'pq-v1' row, found {rows!r}"
         )
-    return rows[0].asDict()
+    return rows[0]
 
 
 def load_pq_codebook(spark, index_path: str) -> PQCodebook:
@@ -1346,23 +1336,22 @@ def _normalize_ivf_pq_spec(spec: dict) -> dict:
 def read_ivf_pq_spec(spark, index_path: str) -> dict:
     """The persisted spec of an IVF-PQ layout; loud on missing/corrupt
     (including a plain-PQ layout presented at an IVF-PQ read path)."""
-    from pyspark.errors import AnalysisException
+    from cassandra_analytics_spark.fs import read_sidecar
 
-    try:
-        rows = spark.read.parquet(f"{index_path}_spec").collect()
-    except AnalysisException:
+    rows = read_sidecar(spark, f"{index_path}_spec")
+    if rows is None:
         raise ValueError(
             f"{index_path!r} has no persisted spec ({index_path}_spec) — "
             "not a save_ivf_pq_index layout (or a rebuild crashed "
             "mid-write; rebuild)"
-        ) from None
-    if len(rows) != 1 or rows[0].asDict().get("format") != "ivf-pq-v1":
+        )
+    if len(rows) != 1 or rows[0].get("format") != "ivf-pq-v1":
         raise ValueError(
             f"spec at {index_path}_spec is not an IVF-PQ layout "
             f"(expected one 'ivf-pq-v1' row, found {rows!r}) — flat PQ "
             "layouts read through query_pq_index"
         )
-    return _normalize_ivf_pq_spec(rows[0].asDict())
+    return _normalize_ivf_pq_spec(rows[0])
 
 
 def _resolve_ivf_pq_codebook(
@@ -1372,8 +1361,8 @@ def _resolve_ivf_pq_codebook(
     codebook: PQCodebook | None,
     caller: str,
 ) -> PQCodebook:
-    """Rehydrate a PQ / IVF-PQ layout's trained codebook (bounded m·ks
-    metadata collect), or validate a caller-preloaded one against the
+    """Rehydrate a PQ / IVF-PQ layout's trained codebook (an m·ks-row
+    sidecar read on the driver), or validate a caller-preloaded one against the
     spec geometry — shared by every query and append path so all
     refuse a mismatched preload identically (codes from a different
     codebook would silently mis-decode)."""
@@ -1388,7 +1377,9 @@ def _resolve_ivf_pq_codebook(
                 f"m={spec['m']}, ks={spec['ks']}) at {index_path!r}"
             )
         return codebook
-    rows = spark.read.parquet(f"{index_path}_codebook").collect()
+    from cassandra_analytics_spark.fs import read_sidecar
+
+    rows = read_sidecar(spark, f"{index_path}_codebook") or []
     want = spec["m"] * spec["ks"]
     if len(rows) != want:
         raise ValueError(
@@ -1575,16 +1566,10 @@ def query_ivf_pq_index(
             for cid, c in centroids
             if cid in set(cells)
         }
-        extra = F.element_at(
-            F.create_map(
-                *[
-                    x
-                    for cid, off in sorted(offs.items())
-                    for x in (F.lit(cid), F.lit(off))
-                ]
-            ),
-            F.col("cell"),
+        entries = ", ".join(
+            f"{cid}, {sql_double(off)}" for cid, off in sorted(offs.items())
         )
+        extra = f"element_at(map({entries}), cell)"
     return pq_adc_topk(
         qdf, codebook, query_vec, k=k, id_col=id_col,
         vec_col=vec_col if rescore else None,

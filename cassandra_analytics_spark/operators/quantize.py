@@ -33,8 +33,17 @@ from __future__ import annotations
 
 import math as _math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from cassandra_analytics_spark.operators.merge import quote_ident, sql_string
+from cassandra_analytics_spark.operators.similarity import (
+    _fold_sql,
+    cosine_sql,
+    lit_vector_sql,
+    sql_double,
+    sql_over,
+)
 
 
 def quantization_exprs(vec_col: str):
@@ -224,8 +233,31 @@ def approx_cosine_from_codes(
     length differs from the query raises loudly (zip_with would NULL-pad
     and silently score to NULL). NULL code vectors score NULL.
     """
-    from cassandra_analytics_spark.operators.similarity import lit_vector
+    score = _approx_score(query_vec, code_col, min_col, scale_col, code_type)
+    return F.expr(score) if isinstance(score, str) else score
 
+
+def _sq8_cosine_sql(codes: str, code_col: str, min_col: str, scale_col: str,
+                    q: str, qsum: str, qnorm: str) -> str:
+    """SQL text of the code-space cosine :func:`approx_cosine_from_codes`
+    describes, over SQL operands: ``codes`` (the code array, possibly
+    wrapped in a guard), the raw code/min/scale columns, and the query
+    as an array, its element sum and its norm."""
+    s, m = quote_ident(scale_col), quote_ident(min_col)
+    u = f"transform({codes}, __c -> CAST(__c AS DOUBLE) + 128D)"
+    dot_uq = _fold_sql(f"zip_with({u}, {q}, (__a, __b) -> __a * __b)", "0D")
+    sum_u = _fold_sql(u, "0D")
+    sum_uu = f"aggregate({u}, 0D, (__acc, __v) -> __acc + __v * __v)"
+    d = f"CAST(size({quote_ident(code_col)}) AS DOUBLE)"
+    norm_sq = (
+        f"{s} * {s} * {sum_uu} + 2D * {s} * {m} * {sum_u} + {d} * {m} * {m}"
+    )
+    return f"try_divide({s} * {dot_uq} + {m} * {qsum}, sqrt({norm_sq}) * {qnorm})"
+
+
+def _approx_score(query_vec, code_col, min_col, scale_col, code_type):
+    """The phase-1 score of :func:`approx_cosine_from_codes`: SQL text up
+    to ``_EXPR_MAX_DIM``, the Arrow kernel's Column above it."""
     qv = [float(x) for x in query_vec]
     if not qv or not all(_math.isfinite(x) for x in qv):
         raise ValueError(
@@ -281,34 +313,20 @@ def approx_cosine_from_codes(
             return res.where(pd.notna(res), None)
 
         return _score(F.col(code_col), F.col(min_col), F.col(scale_col))
-    qlit = lit_vector(qv)
-    dim_ok = F.size(F.col(code_col)) == F.lit(len(qv))
-    guarded_codes = F.when(
-        F.col(code_col).isNull() | dim_ok, F.col(code_col)
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"approx_cosine_from_codes: query vector is {len(qv)}-d "
-                    "but found a code vector of length "
-                ),
-                F.size(F.col(code_col)).cast("string"),
-            )
-        ).cast(code_type)
+    c = quote_ident(code_col)
+    msg = sql_string(
+        f"approx_cosine_from_codes: query vector is {len(qv)}-d "
+        "but found a code vector of length "
     )
-    u = F.transform(guarded_codes, lambda c: c.cast("double") + F.lit(128.0))
-    dot_uq = F.aggregate(
-        F.zip_with(u, qlit, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    guarded = (
+        f"CASE WHEN {c} IS NULL OR size({c}) = {len(qv)} THEN {c} ELSE "
+        f"CAST(raise_error(concat({msg}, CAST(size({c}) AS STRING))) "
+        f"AS {code_type}) END"
     )
-    sum_u = F.aggregate(u, F.lit(0.0), lambda acc, x: acc + x)
-    sum_uu = F.aggregate(u, F.lit(0.0), lambda acc, x: acc + x * x)
-    d = F.size(F.col(code_col)).cast("double")
-    s, m = F.col(scale_col), F.col(min_col)
-    dot_approx = s * dot_uq + m * F.lit(qsum)
-    norm_sq = s * s * sum_uu + F.lit(2.0) * s * m * sum_u + d * m * m
-    return F.try_divide(dot_approx, F.sqrt(norm_sq) * F.lit(qnorm))
+    return _sq8_cosine_sql(
+        guarded, code_col, min_col, scale_col,
+        lit_vector_sql(qv), sql_double(qsum), sql_double(qnorm),
+    )
 
 
 # SQ8's per-PAIR scorers share PQ's round-15 high-dim finding (see
@@ -430,21 +448,13 @@ def approx_cosine_codes_vs_query_col(
             qvec_col, qsum_col, qnorm_col,
             F.col(code_col), F.col(min_col), F.col(scale_col),
         )
-    u = F.transform(
-        F.col(code_col), lambda c: c.cast("double") + F.lit(128.0)
+    return sql_over(
+        lambda q, qsum, qnorm: _sq8_cosine_sql(
+            quote_ident(code_col), code_col, min_col, scale_col,
+            q, qsum, qnorm,
+        ),
+        qvec_col, qsum_col, qnorm_col,
     )
-    dot_uq = F.aggregate(
-        F.zip_with(u, qvec_col, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sum_u = F.aggregate(u, F.lit(0.0), lambda acc, x: acc + x)
-    sum_uu = F.aggregate(u, F.lit(0.0), lambda acc, x: acc + x * x)
-    d = F.size(F.col(code_col)).cast("double")
-    s, m = F.col(scale_col), F.col(min_col)
-    dot_approx = s * dot_uq + m * qsum_col
-    norm_sq = s * s * sum_uu + F.lit(2.0) * s * m * sum_u + d * m * m
-    return F.try_divide(dot_approx, F.sqrt(norm_sq) * qnorm_col)
 
 
 def quantized_topk(
@@ -526,21 +536,12 @@ def quantized_topk(
     # a dimension mismatch raises loudly inside the expression (zip_with
     # would NULL-pad and silently return an EMPTY result); raise_error's
     # cast tracks the actual code-column type
-    approx = approx_cosine_from_codes(
+    approx = _approx_score(
         qv, code_col, min_col, scale_col,
-        code_type=qdf.schema[code_col].dataType.simpleString(),
-    )
-
-    # phase 1 projects ONLY (id, approx): carrying the float column
-    # through the TakeOrderedAndProject would make the scan read floats
-    # for EVERY row, silently defeating the 1-byte/dim claim (round-10
-    # plan audit — .explain showed embedding carried through phase 1)
-    scored = (
-        qdf.select(F.col(id_col), approx.alias("__approx"))
-        .filter(F.col("__approx").isNotNull())
+        qdf.schema[code_col].dataType.simpleString(),
     )
     return _phase2_exact_topk(
-        qdf, scored, qv, k, id_col, vec_col, rescore_factor,
+        qdf, approx, qv, k, id_col, vec_col, rescore_factor,
         rescore_mode, math,
     )
 
@@ -561,9 +562,20 @@ def _no_scores(qdf: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+def _sql_literal(value, dtype) -> str:
+    """``value`` (as collected from a column of type ``dtype``) as SQL
+    text of that type: strings escaped, anything else cast from its
+    string form, so an ``IN`` list compares like the column."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, str):
+        return sql_string(value)
+    return f"CAST({sql_string(str(value))} AS {dtype.simpleString()})"
+
+
 def _phase2_exact_topk(
     qdf: DataFrame,
-    scored: DataFrame,
+    approx: str | Column,
     qv: list[float],
     k: int,
     id_col: str,
@@ -572,46 +584,52 @@ def _phase2_exact_topk(
     rescore_mode: str,
     math: str,
 ) -> DataFrame:
-    """The shared phase 2 of two-phase top-k (SQ8 ``quantized_topk`` /
+    """The shared two phases of two-phase top-k (SQ8 ``quantized_topk`` /
     ``ann_index.query_ivf_index_quantized`` and PQ ``pq_adc_topk``):
-    take the top ``k * rescore_factor`` of ``scored`` (columns
-    ``id_col``, ``__approx``), rescore them with the exact ``math``
+    score ``qdf`` with ``approx`` (SQL text, or a kernel's Column), take
+    the top ``k * rescore_factor``, rescore them with the exact ``math``
     cosine against the float column, return the top k. Without
-    ``vec_col`` the approximate scores are final."""
-    from cassandra_analytics_spark.operators.similarity import (
-        cosine,
-        lit_vector,
-    )
+    ``vec_col`` the approximate scores are final.
 
-    qlit = lit_vector(qv)
+    Each stage is one DataFrame call over SQL text. Phase 1 projects ONLY
+    (id, approx): carrying the float column through the
+    TakeOrderedAndProject would make the scan read floats for EVERY row,
+    silently defeating the 1-byte/dim claim (round-10 plan audit)."""
+    idq = quote_ident(id_col)
+    if isinstance(approx, str):
+        scored = qdf.selectExpr(idq, f"{approx} AS __approx")
+    else:
+        scored = qdf.select(F.col(id_col), approx.alias("__approx"))
+    scored = scored.where("__approx IS NOT NULL")
     if vec_col is None:
-        return (
-            scored.select(F.col(id_col), F.col("__approx").alias("cosine_sim"))
-            .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-            .limit(k)
-        )
-    exact = cosine(F.col(vec_col), qlit, math)
-
-    survivors = scored.orderBy(
-        F.col("__approx").desc(), F.col(id_col)
-    ).limit(k * rescore_factor)
+        return _top(scored.withColumnRenamed("__approx", "cosine_sim"),
+                    "cosine_sim", id_col, k)
+    survivors = _top(scored, "__approx", id_col, k * rescore_factor)
     if rescore_mode == "join":
         # distributed rescore: the survivor ids never touch the driver —
         # a broadcast inner join (k·factor rows) filters the float scan
-        rescan = qdf.join(
-            F.broadcast(survivors.select(id_col)), id_col
-        )
+        rescan = qdf.join(F.broadcast(survivors.select(id_col)), id_col)
     else:
-        survivor_ids = [r[id_col] for r in survivors.collect()]
+        survivor_ids = [r[0] for r in survivors.select(id_col).collect()]
         if not survivor_ids:
             return _no_scores(qdf, id_col)
-        rescan = qdf.filter(F.col(id_col).isin(survivor_ids))
-    return (
-        rescan.select(F.col(id_col), exact.alias("cosine_sim"))
-        .filter(F.col("cosine_sim").isNotNull())
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-        .limit(k)
+        dtype = qdf.schema[id_col].dataType
+        ids = ", ".join(_sql_literal(v, dtype) for v in survivor_ids)
+        rescan = qdf.where(f"{idq} IN ({ids})")
+    exact = cosine_sql(quote_ident(vec_col), lit_vector_sql(qv), math)
+    return _top(
+        rescan.selectExpr(idq, f"{exact} AS cosine_sim").where(
+            "cosine_sim IS NOT NULL"
+        ),
+        "cosine_sim", id_col, k,
     )
+
+
+def _top(df: DataFrame, score: str, id_col: str, n: int) -> DataFrame:
+    """The ``n`` rows of highest ``score``, ties by ascending id.
+    ``F.desc``/``F.asc`` by name cost a third of the py4j round trips
+    of ``Column.desc()`` or a list with ``ascending=``."""
+    return df.orderBy(F.desc(score), F.asc(id_col)).limit(n)
 
 
 def dequantize_embeddings(

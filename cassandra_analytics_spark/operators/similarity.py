@@ -20,41 +20,77 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
+def sql_double(x: float) -> str:
+    """``x`` as SQL text of the exact IEEE double: ``CAST('<repr>' AS
+    DOUBLE)`` round-trips the value (the optimizer folds it to a
+    literal)."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
+def lit_vector_sql(values: list[float]) -> str:
+    """SQL text of a literal array<double> (see :func:`lit_vector`)."""
+    return f"array({', '.join(map(sql_double, values))})"
+
+
 def lit_vector(values: list[float]) -> Column:
     """A literal array<double> built with ONE driver call.
 
     ``F.array(*[F.lit(x) ...])`` costs a py4j round-trip per element —
     ~0.2 s of plan-build latency for a 64-dim vector. A generated SQL
-    string is a single call; ``CAST('<repr>' AS DOUBLE)`` round-trips the
-    IEEE value exactly.
+    string is a single call.
     """
-    body = ", ".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in values)
-    return F.expr(f"array({body})")
+    return F.expr(lit_vector_sql(values))
+
+
+def sql_over(body: Callable[..., str], *cols: Column) -> Column:
+    """The Column form of a SQL-text builder: ``body`` gets one SQL
+    reference per operand and returns expression text, which is applied
+    to the ``cols`` through a one-element array of a struct
+    (``element_at(transform(array(struct(cols)), __s -> body), 1)``).
+    Formulas are written once, as text that a caller holding column
+    names puts straight into ``selectExpr``; Column callers go through
+    here, in a handful of py4j calls instead of one per node."""
+    fields = [f"__s.c{i}" for i in range(len(cols))]
+    arg = F.array(F.struct(*[c.alias(f"c{i}") for i, c in enumerate(cols)]))
+    fn = F.expr(f"__s -> {body(*fields)}")
+    return F.element_at(F.call_function("transform", arg, fn), 1)
+
+
+def _fold_sql(elems: str, zero: str, acc_cast: str | None = None) -> str:
+    """Index-order left fold ``Σ elems`` from ``zero``; ``acc_cast``
+    casts each partial sum (the exact decimal fold)."""
+    step = "__acc + __v" if acc_cast is None else f"CAST(__acc + __v AS {acc_cast})"
+    return f"aggregate({elems}, {zero}, (__acc, __v) -> {step})"
+
+
+def dot_sql(a: str, b: str) -> str:
+    """SQL text of the elementwise dot product of two arrays (double
+    accumulator, index order — deterministic)."""
+    return _fold_sql(
+        f"zip_with({a}, {b}, (__x, __y) -> CAST(__x AS DOUBLE) * CAST(__y AS DOUBLE))",
+        "0D",
+    )
+
+
+def norm_sql(a: str) -> str:
+    """SQL text of the L2 norm of an array."""
+    return "sqrt({})".format(
+        _fold_sql(f"transform({a}, __x -> CAST(__x AS DOUBLE) * CAST(__x AS DOUBLE))", "0D")
+    )
 
 
 def dot(a: Column, b: Column) -> Column:
-    """Elementwise dot product of two array columns (double accumulator,
-    index order — deterministic)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    """Elementwise dot product of two array columns (:func:`dot_sql`)."""
+    return sql_over(dot_sql, a, b)
 
 
 def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
+    return sql_over(norm_sql, a)
 
 
-def cosine(a: Column, b: Column, math: str = "float") -> Column:
-    """``dot(a, b) / (norm(a) * norm(b))`` under one of the closed
-    :data:`MATHS` (the float default is the built-in JVM cosine)."""
+def cosine_sql(a: str, b: str, math: str = "float") -> str:
+    """SQL text of ``dot(a, b) / (norm(a) * norm(b))`` under one of the
+    closed :data:`MATHS`."""
     m = vector_math(math)
     # try_divide, not '/': under Spark 4's default ANSI mode a division
     # by zero THROWS, so one zero-norm vector anywhere in a 100 TB corpus
@@ -66,7 +102,16 @@ def cosine(a: Column, b: Column, math: str = "float") -> Column:
     # unscorable like zero-norm vectors, while the dedup/assignment
     # paths raise instead — a silent NULL there would change VERDICTS,
     # not just omit a score (round-8 continuation probe).
-    return F.try_divide(m.dot(a, b), m.norm(a) * m.norm(b))
+    return (
+        f"try_divide({m.sql['dot'](a, b)}, "
+        f"{m.sql['norm'](a)} * {m.sql['norm'](b)})"
+    )
+
+
+def cosine(a: Column, b: Column, math: str = "float") -> Column:
+    """The Column form of :func:`cosine_sql` (the float default is the
+    built-in JVM cosine)."""
+    return sql_over(lambda x, y: cosine_sql(x, y, math), a, b)
 
 
 # --------------------------------------------------------------------------
@@ -78,30 +123,37 @@ def cosine(a: Column, b: Column, math: str = "float") -> Column:
 DECIMAL12 = "decimal(28,12)"
 
 
-def _pdot(a: Column, b: Column) -> Column:
+def _pdot_sql(a: str, b: str) -> str:
     """Portable dot product: double products → decimal sum → double."""
-    return F.aggregate(
-        F.zip_with(
-            a, b,
-            lambda x, y: (x.cast("double") * y.cast("double")).cast(DECIMAL12),
-        ),
-        F.lit(0).cast(DECIMAL12),
-        lambda acc, v: (acc + v).cast(DECIMAL12),
-    ).cast("double")
+    return "CAST({} AS DOUBLE)".format(
+        _fold_sql(
+            f"zip_with({a}, {b}, (__x, __y) -> "
+            f"CAST(CAST(__x AS DOUBLE) * CAST(__y AS DOUBLE) AS {DECIMAL12}))",
+            f"CAST(0 AS {DECIMAL12})",
+            DECIMAL12,
+        )
+    )
+
+
+def _psq_norm_sql(a: str) -> str:
+    """Portable L2 norm: double squares → decimal sum → double → sqrt
+    (bit-identical across engines; same shape as the cosine_topk oracle)."""
+    return "sqrt(CAST({} AS DOUBLE))".format(
+        _fold_sql(
+            f"transform({a}, __x -> "
+            f"CAST(CAST(__x AS DOUBLE) * CAST(__x AS DOUBLE) AS {DECIMAL12}))",
+            f"CAST(0 AS {DECIMAL12})",
+            DECIMAL12,
+        )
+    )
+
+
+def _pdot(a: Column, b: Column) -> Column:
+    return sql_over(_pdot_sql, a, b)
 
 
 def _psq_norm(a: Column) -> Column:
-    """Portable L2 norm: double squares → decimal sum → double → sqrt
-    (bit-identical across engines; same shape as the cosine_topk oracle)."""
-    return F.sqrt(
-        F.aggregate(
-            F.transform(
-                a, lambda x: (x.cast("double") * x.cast("double")).cast(DECIMAL12)
-            ),
-            F.lit(0).cast(DECIMAL12),
-            lambda acc, v: (acc + v).cast(DECIMAL12),
-        ).cast("double")
-    )
+    return sql_over(_psq_norm_sql, a)
 
 
 def _py_norm(vec) -> float:
@@ -145,6 +197,10 @@ class VectorMath:
 
     * ``"dot"`` — ``(a, b) -> Column``, the pair dot product;
     * ``"norm"`` — ``(a) -> Column``, the row L2 norm;
+
+    ``dot`` and ``norm`` are written once, as SQL text over operand
+    text (``sql``); their Column forms apply that text
+    (:func:`sql_over`).
     * ``"expr_cell"`` — ``(vec, centroids) -> Column``, the
       ``assignment="expr"`` argmax (HIGHEST cid on ties; float only);
     * ``"norm_once_cell"`` — ``(vec, nrm, centroids, cnorms) -> Column``,
@@ -157,6 +213,7 @@ class VectorMath:
     name: str
     sim_id: str | None
     scalar_norm: Callable[[Sequence[float]], float]
+    sql: Mapping[str, Callable[..., str]]
     exprs: Mapping[str, Callable[..., Column]]
     kernels: Mapping[str, Callable[..., Column]]
 
@@ -211,6 +268,7 @@ _MATH: dict[str, VectorMath] = {
         name="float",
         sim_id=None,
         scalar_norm=_py_norm,
+        sql={"dot": dot_sql, "norm": norm_sql},
         exprs={
             "dot": dot,
             "norm": norm,
@@ -225,6 +283,7 @@ _MATH: dict[str, VectorMath] = {
         name="decimal12",
         sim_id="portable-decimal-cosine-v1",
         scalar_norm=_py_psq_norm,
+        sql={"dot": _pdot_sql, "norm": _psq_norm_sql},
         exprs={
             "dot": _pdot,
             "norm": _psq_norm,

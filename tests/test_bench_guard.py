@@ -150,3 +150,16 @@ def test_prior_extended_and_classify_extended():
     assert _classify_extended({"a": {"shuffle_write_bytes": 1}}, {"x": {}})[
         "a"
     ] is None
+
+
+def test_final_record_echoes_run_conditions(spark):
+    """The final line keeps its keys and adds the run conditions: the N
+    of ``local[N]`` as ``cpus`` and Spark's ``defaultParallelism``."""
+    from bench import _final_record
+
+    rec = _final_record(spark, {"q1": 1.25, "q2": 0.5}, 3, 0.1, 0)
+    assert {"metric", "value", "unit", "queries", "runs", "sf"} <= rec.keys()
+    assert rec["value"] == 1.75 and rec["runs"] == 3 and "bytes" not in rec
+    master = spark.sparkContext.master
+    assert rec["cpus"] == int(master[master.index("[") + 1:-1])
+    assert rec["defaultParallelism"] == spark.sparkContext.defaultParallelism

@@ -174,6 +174,37 @@ def test_compaction_with_cell_lww_preserves_upsert_cells(spark, tmp_path):
     assert (after.a, after.b) == (5, 2)  # b survived the compaction
 
 
+@pytest.mark.xfail(
+    strict=True, raises=AssertionError,
+    reason="cell-mode compaction keeps one row-level TTL per merged row "
+    "(compaction_merge's max_by(ttl, (wt, ttl))), so a TTL'd cell under a "
+    "newer TTL-less upsert stops expiring once compacted",
+)
+def test_cell_mode_compaction_keeps_a_cells_own_ttl(spark, tmp_path):
+    """A cell written with a TTL must still expire after a cell-mode
+    compaction merged it with a newer TTL-less upsert of another cell."""
+    path = str(tmp_path / "tbl")
+    schema = "k int, a int, b int"
+    bulk_write(
+        spark.createDataFrame([Row(k=1, a=1, b=None)], schema), path, ["k"],
+        write_timestamp_micros=10_000_000, ttl_seconds=100,
+    )
+    bulk_write(
+        spark.createDataFrame([Row(k=1, a=None, b=2)], schema), path, ["k"],
+        write_timestamp_micros=20_000_000,
+    )
+
+    def read():
+        rows = read_bulk_table(
+            spark, path, ["k"], cell_lww=True, now_micros=500_000_000
+        ).collect()
+        return [(r.k, r.a, r.b) for r in rows]
+
+    assert read() == [(1, None, 2)]
+    compact_table(spark, path, ["k"], cell_lww=True, now_micros=50_000_000)
+    assert read() == [(1, None, 2)]
+
+
 def test_compaction_preserves_expired_ttl_shield(spark, tmp_path):
     """An expired-TTL row acts as a row tombstone at its own writetime;
     its shield must survive compaction — otherwise an older-timestamped

@@ -176,6 +176,7 @@ def test_persisted_pq_layout_roundtrip_and_spec_discipline(spark, tmp_path):
     codebook rehydrates bit-identically, keep_vec=False refuses rescore
     LOUDLY, and missing/corrupt specs are named errors."""
     from cassandra_analytics_spark.operators.pq import (
+        _resolve_ivf_pq_codebook,
         load_pq_codebook,
         query_pq_index,
         read_pq_spec,
@@ -1179,3 +1180,43 @@ def test_ivf_pq_kmeans_trained_coarse_residual(spark, tmp_path):
             df, str(tmp_path / "x"), train="kmeans",
             centroids=[(0, [1.0] * dim)],
         )
+
+
+def test_probe_cost_pinned(spark, tmp_path, py4j_calls, spark_jobs):
+    """One PQ probe with a preloaded codebook reads its spec on the
+    driver (0 Spark jobs, as do the codebook and IVF-PQ spec reads) and
+    builds its ADC and rescore plan from SQL text: at most 150 py4j
+    round trips to build, and 3 Spark jobs once collected — the layout
+    scan's schema inference, the survivor collect and the final collect."""
+    from cassandra_analytics_spark.operators.ann_index import read_centroids
+    from cassandra_analytics_spark.operators.pq import (
+        _resolve_ivf_pq_codebook,
+        load_pq_codebook,
+        query_pq_index,
+        read_ivf_pq_spec,
+        read_pq_spec,
+        save_ivf_pq_index,
+        save_pq_index,
+    )
+
+    rows, df = _corpus(spark, n=300)
+    path, ivfpq = str(tmp_path / "pq"), str(tmp_path / "ivfpq")
+    cb = save_pq_index(df, path, m=8, ks=16, seed=3)
+    save_ivf_pq_index(df, ivfpq, num_centroids=4, m=8, ks=16, residuals=True)
+    q = rows[0][1]
+    query_pq_index(spark, path, q, k=5, codebook=cb).collect()
+    with spark_jobs() as sidecar_jobs:
+        read_pq_spec(spark, path)
+        assert load_pq_codebook(spark, path) == cb
+        _resolve_ivf_pq_codebook(
+            spark, ivfpq, read_ivf_pq_spec(spark, ivfpq), None, caller="test"
+        )
+        read_centroids(spark, ivfpq)
+    assert sidecar_jobs.count == 0
+    with spark_jobs() as jobs:
+        with py4j_calls() as calls:
+            out = query_pq_index(spark, path, q, k=5, codebook=cb)
+        got = out.collect()
+    assert calls.count <= 150, calls.count
+    assert jobs.count == 3
+    assert len(got) == 5 and got[0].vec_id == 0

@@ -484,3 +484,175 @@ def test_sq8_single_query_kernel_matches_expression(spark, monkeypatch):
         short.select(
             approx_cosine_from_codes([1.0] * 256).alias("c")
         ).collect()
+
+
+def test_probe_cost_pinned(spark, tmp_path, py4j_calls, spark_jobs):
+    """One IVF-SQ8 probe reads its sidecars on the driver (0 Spark jobs)
+    and builds its scoring plan from SQL text: at most 150 py4j round
+    trips to build, and 3 Spark jobs once collected — the index scan's
+    schema inference, the survivor collect and the final collect."""
+    from cassandra_analytics_spark.operators.ann_index import read_centroids
+
+    df, rows = _corpus(spark)
+    path = str(tmp_path / "qivf")
+    build_ivf_index(df, path, num_centroids=8, quantize=True)
+    qvec = rows[0][1]
+    query_ivf_index_quantized(spark, path, qvec, k=5, num_probes=4).collect()
+    with spark_jobs() as sidecar_jobs:
+        read_ivf_spec(spark, path)
+        read_centroids(spark, path)
+    assert sidecar_jobs.count == 0
+    with spark_jobs() as jobs:
+        with py4j_calls() as calls:
+            out = query_ivf_index_quantized(
+                spark, path, qvec, k=5, num_probes=4
+            )
+        got = out.collect()
+    assert calls.count <= 150, calls.count
+    assert jobs.count == 3
+    assert len(got) == 5 and got[0].vec_id == 0
+
+
+def _spark_sidecar_rows(spark, path):
+    return [r.asDict() for r in spark.read.parquet(path).collect()]
+
+
+def test_sidecar_reads_match_spark_reads(spark, tmp_path):
+    """``fs.read_sidecar`` returns exactly the dicts the Spark read did,
+    on every sidecar kind the layouts write: the checked-in decimal12
+    IVF fixture, IVF-SQ8, sign-LSH, PQ and IVF-PQ."""
+    import os
+
+    from cassandra_analytics_spark.fs import read_sidecar
+    from cassandra_analytics_spark.operators.ann_index import build_ann_index
+    from cassandra_analytics_spark.operators.pq import (
+        save_ivf_pq_index,
+        save_pq_index,
+    )
+
+    df, _ = _corpus(spark, n=96, dim=8)
+    build_ivf_index(df, str(tmp_path / "ivf"), num_centroids=4, quantize=True)
+    build_ann_index(df, str(tmp_path / "lsh"), num_planes=4)
+    save_pq_index(df, str(tmp_path / "pq"), m=4, ks=8, seed=3)
+    save_ivf_pq_index(
+        df, str(tmp_path / "ivfpq"), num_centroids=4, m=4, ks=8,
+        residuals=True,
+    )
+    fixture = os.path.join(
+        os.path.dirname(__file__), "data", "decimal12_ivf_layout", "ivf"
+    )
+    sidecars = [
+        f"{fixture}_spec", f"{fixture}_centroids",
+        str(tmp_path / "ivf_spec"), str(tmp_path / "ivf_centroids"),
+        str(tmp_path / "lsh_spec"),
+        str(tmp_path / "pq_spec"), str(tmp_path / "pq_codebook"),
+        str(tmp_path / "ivfpq_spec"), str(tmp_path / "ivfpq_codebook"),
+        str(tmp_path / "ivfpq_centroids"),
+    ]
+    for path in sidecars:
+        got = read_sidecar(spark, path)
+        assert got and got == _spark_sidecar_rows(spark, path), path
+
+
+def test_sidecar_failures_keep_their_outcomes(spark, tmp_path):
+    """A missing sidecar, a sidecar dir with no data file (Spark's read
+    raised AnalysisException for it) and a multi-row spec end as they did
+    when Spark read them; a spec written before a column existed reads
+    without that key, so the spec normalizer still fills it in."""
+    from pyspark.errors import AnalysisException
+
+    from cassandra_analytics_spark.fs import read_sidecar
+    from cassandra_analytics_spark.local_data import local_df
+    from cassandra_analytics_spark.operators.ann_index import (
+        _IVF_SPEC_SCHEMA,
+        _read_ivf_spec_optional,
+    )
+    from cassandra_analytics_spark.operators.pq import (
+        _IVF_PQ_SPEC_SCHEMA,
+        _PQ_SPEC_SCHEMA,
+        read_ivf_pq_spec,
+        read_pq_spec,
+    )
+
+    empty = tmp_path / "empty_spec"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_bytes(b"")
+    with pytest.raises(AnalysisException):
+        spark.read.parquet(str(empty))
+    for layout in (str(tmp_path / "missing"), str(tmp_path / "empty")):
+        assert read_sidecar(spark, f"{layout}_spec") is None
+        assert _read_ivf_spec_optional(spark, layout) is None
+        with pytest.raises(ValueError, match="no persisted spec"):
+            read_ivf_spec(spark, layout)
+        with pytest.raises(ValueError, match="no persisted PQ spec"):
+            read_pq_spec(spark, layout)
+        with pytest.raises(ValueError, match="no persisted spec"):
+            read_ivf_pq_spec(spark, layout)
+
+    def write_spec(name, rows, schema):
+        local_df(spark, rows, schema).coalesce(1).write.parquet(
+            str(tmp_path / f"{name}_spec")
+        )
+        return str(tmp_path / name)
+
+    ivf = write_spec(
+        "ivf", [("ivf-v1", "expr", None, 8, 4, 1, True)] * 2, _IVF_SPEC_SCHEMA
+    )
+    with pytest.raises(ValueError, match="corrupt layout spec"):
+        _read_ivf_spec_optional(spark, ivf)
+    pq = write_spec("pq", [("pq-v1", 8, 4, 8, True)] * 2, _PQ_SPEC_SCHEMA)
+    with pytest.raises(ValueError, match="corrupt PQ spec"):
+        read_pq_spec(spark, pq)
+    ivfpq = write_spec(
+        "ivfpq",
+        [("ivf-pq-v1", 8, 4, 8, 4, True, "expr", None, False, "raw")] * 2,
+        _IVF_PQ_SPEC_SCHEMA,
+    )
+    with pytest.raises(ValueError, match="not an IVF-PQ layout"):
+        read_ivf_pq_spec(spark, ivfpq)
+
+    old = write_spec(
+        "old",
+        [("ivf-pq-v1", 8, 4, 8, 4, True)],
+        "format string, dim int, m int, ks int, num_centroids int, "
+        "keep_vec boolean",
+    )
+    raw = read_sidecar(spark, f"{old}_spec")
+    assert raw == _spark_sidecar_rows(spark, f"{old}_spec")
+    assert "assignment" not in raw[0]
+    spec = read_ivf_pq_spec(spark, old)
+    assert (spec["assignment"], spec["encoding"]) == ("expr", "raw")
+
+
+def test_string_and_long_ids_rescore_identically(spark, tmp_path):
+    """The survivor ``IN`` list is typed like the id column: a layout
+    with STRING ids (holding a quote and a backslash) returns the same
+    neighbors and scores as the same vectors under long ids, in both
+    rescore modes."""
+    _, rows = _corpus(spark, n=160, dim=8, seed=11)
+    longs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def sid(i):
+        return f"d'\\{i:04d}"
+
+    strings = spark.createDataFrame(
+        [(sid(i), v) for i, v in rows], "vec_id string, embedding array<double>"
+    )
+    lpath, spath = str(tmp_path / "long"), str(tmp_path / "str")
+    cents = build_ivf_index(longs, lpath, num_centroids=4, quantize=True)
+    build_ivf_index(strings, spath, centroids=cents, quantize=True)
+    qvec = rows[7][1]
+    for mode in ("pushdown", "join"):
+        want = [
+            (sid(r.vec_id), r.cosine_sim)
+            for r in query_ivf_index_quantized(
+                spark, lpath, qvec, k=8, num_probes=2, rescore_mode=mode
+            ).collect()
+        ]
+        got = [
+            (r.vec_id, r.cosine_sim)
+            for r in query_ivf_index_quantized(
+                spark, spath, qvec, k=8, num_probes=2, rescore_mode=mode
+            ).collect()
+        ]
+        assert got == want and len(got) == 8, mode
