@@ -5,7 +5,7 @@
 
     {"metric": "total_query_time", "value": N, "unit": "sec",
      "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1,
-     "cpus": N, "defaultParallelism": N}
+     "cpus": N, "defaultParallelism": N, "python_daemon": module}
 
 Each query is forced end-to-end with the noop sink (full computation, no
 driver collect) after a warm-up run of the session.
@@ -464,8 +464,9 @@ def main() -> None:
 
 def _final_record(spark, times: dict, runs: int, sf, bytes_total) -> dict:
     """The driver-parsed final line, with the run conditions it was
-    measured under: ``cpus`` (the N of ``local[N]``) and Spark's
-    ``defaultParallelism``."""
+    measured under: ``cpus`` (the N of ``local[N]``), Spark's
+    ``defaultParallelism`` and ``python_daemon``, the module Python
+    workers fork from."""
     master = spark.sparkContext.master
     n = master[master.find("[") + 1:master.rfind("]")] if "[" in master else master
     final = {
@@ -477,6 +478,9 @@ def _final_record(spark, times: dict, runs: int, sf, bytes_total) -> dict:
         "sf": sf,
         "cpus": int(n) if n.isdigit() else n,
         "defaultParallelism": spark.sparkContext.defaultParallelism,
+        "python_daemon": spark.sparkContext.getConf().get(
+            "spark.python.daemon.module", "pyspark.daemon"
+        ),
     }
     if bytes_total:
         final["bytes"] = bytes_total

@@ -15,6 +15,14 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 
+# py4j answers a byte[] as base64 text; an answer longer than its 8 KB
+# write buffer stalls ~42 ms (measured at 6,144 bytes, not at 6,140), so
+# sidecar bytes come back in chunks whose base64 stays under it
+_PY4J_CHUNK = 6000
+# the footer key Spark reads a parquet file's Spark schema from
+_SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
+
+
 def _fs_and_path(spark: SparkSession, path_str: str):
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(path_str)
@@ -96,16 +104,59 @@ def read_sidecar(spark: SparkSession, path_str: str) -> list[dict] | None:
         p = st.getPath()
         name = p.getName()
         if not name.startswith(("_", ".")) and st.isFile():
-            data_files.append((name, p))
+            data_files.append((name, p, st.getLen()))
     if not data_files:
         return None
     io_utils = spark._jvm.org.apache.commons.io.IOUtils
     rows: list[dict] = []
-    for _, p in sorted(data_files, key=lambda f: f[0]):
+    for _, p, size in sorted(data_files, key=lambda f: f[0]):
         stream = fs.open(p)
         try:
-            data = io_utils.toByteArray(stream)
+            data = b"".join(
+                io_utils.toByteArray(stream, min(_PY4J_CHUNK, size - off))
+                for off in range(0, size, _PY4J_CHUNK)
+            )
         finally:
             stream.close()
         rows.extend(pq.read_table(pa.BufferReader(data)).to_pylist())
     return rows
+
+
+def write_sidecar(spark: SparkSession, path_str: str, rows, schema) -> None:
+    """Write ``rows`` (tuples in ``schema`` order; ``schema`` a DDL
+    string or ``StructType``) as a one-file parquet directory at
+    ``path_str``, replacing what is there, on the driver with no Spark
+    job: the write twin of :func:`read_sidecar`. The file is encoded
+    with pyarrow and carries Spark's row-metadata schema, so
+    ``spark.read.parquet`` sees the schema a Spark write of the same
+    rows gives. It is written through the Hadoop FS API under a
+    ``_``-prefixed name that readers skip, renamed into place, and
+    followed by a ``_SUCCESS`` marker."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    table = pa.Table.from_pylist(
+        [dict(zip(st.names, r)) for r in rows], schema=to_arrow_schema(st)
+    ).replace_schema_metadata({_SPARK_ROW_METADATA: st.json()})
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink, compression="snappy")
+    fs, path = _fs_and_path(spark, path_str)
+    if fs.exists(path):
+        fs.delete(path, True)
+    fs.mkdirs(path)
+    name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    tmp = Path(path, f"_{name}")
+    out = fs.create(tmp, False)
+    try:
+        out.write(sink.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, Path(path, name)):
+        raise IOError(f"write_sidecar: could not rename {tmp} into place")
+    fs.create(Path(path, "_SUCCESS"), True).close()

@@ -12,10 +12,10 @@ up front and the plan JVM-only — the identical 16-row write drops to
 lazy semantics.
 
 Use :func:`local_df` for every metadata-sized local relation on a hot
-path (layout sidecars, spec tables, rescore survivor lists, routing
-tables). The plain path remains for empty frames (no job ever runs a
-worker over zero rows) and as the fallback for rows pandas/Arrow cannot
-represent.
+path (rescore survivor lists, routing tables); layout sidecars need no
+relation at all (``fs.write_sidecar`` writes them on the driver). The
+plain path remains for empty frames (no job ever runs a worker over
+zero rows) and as the fallback for rows pandas/Arrow cannot represent.
 """
 
 from __future__ import annotations

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cassandra_analytics_spark.fs import write_sidecar
 from cassandra_analytics_spark.local_data import local_df
 
 # the index layout and query signatures share ONE definition — the
@@ -74,9 +75,10 @@ def build_ann_index(
         df.select(F.col(id_col), F.col(vec_col), F.lit(0).alias("sig")).write.mode(
             "overwrite"
         ).parquet(index_path)
-        local_df(
-            spark, [("ann-lsh-v1", num_planes, seed, None)], _LSH_SPEC_SCHEMA
-        ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_spec")
+        write_sidecar(
+            spark, f"{index_path}_spec",
+            [("ann-lsh-v1", num_planes, seed, None)], _LSH_SPEC_SCHEMA,
+        )
         return
     dim = len(probe[vec_col])
     tagged = df.select(
@@ -85,9 +87,10 @@ def build_ann_index(
         _signature_column(vec_col, dim, num_planes, seed).alias("sig"),
     )
     tagged.write.mode("overwrite").partitionBy("sig").parquet(index_path)
-    local_df(
-        spark, [("ann-lsh-v1", num_planes, seed, dim)], _LSH_SPEC_SCHEMA
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_spec")
+    write_sidecar(
+        spark, f"{index_path}_spec",
+        [("ann-lsh-v1", num_planes, seed, dim)], _LSH_SPEC_SCHEMA,
+    )
 
 
 def append_to_ann_index(
@@ -413,17 +416,17 @@ def build_ivf_index(
         if quantize:
             tagged = _with_layout_codes(tagged, vec_col)
         tagged.write.mode("overwrite").partitionBy("cell").parquet(index_path)
-    local_df(
-        spark,
+    write_sidecar(
+        spark, f"{index_path}_centroids",
         [(cid, [float(x) for x in vec]) for cid, vec in centroids],
         "cid int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_centroids")
+    )
     dim = len(centroids[0][1]) if centroids else None
-    local_df(
-        spark,
+    write_sidecar(
+        spark, f"{index_path}_spec",
         [("ivf-v1", mode, sim_id, dim, len(centroids), seed, quantize)],
         _IVF_SPEC_SCHEMA,
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_spec")
+    )
     return centroids
 
 

@@ -42,6 +42,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cassandra_analytics_spark.fs import write_sidecar
 from cassandra_analytics_spark.local_data import local_df
 from cassandra_analytics_spark.operators.merge import quote_ident, sql_string
 from cassandra_analytics_spark.operators.similarity import (
@@ -130,6 +131,18 @@ def train_pq_codebook(
             f"train_pq_codebook: dim {dim} is not divisible by m={m}"
         )
     k = min(ks, n)  # fewer sample points than codewords: shrink, stay live
+    books = _pq_kmeans(x, m, k, iterations, seed)
+    return PQCodebook(dim=dim, m=m, ks=k, centroids=books)
+
+
+def _pq_kmeans(x, m: int, k: int, iterations: int, seed: int) -> tuple:
+    """Per-subspace k-means of the ``n x dim`` sample ``x`` into ``m``
+    books of ``k`` codewords (nested tuples), seeded from ``k`` sample
+    rows drawn without replacement. A codeword no point is nearest to
+    is re-seeded from the point farthest from its nearest codeword."""
+    import numpy as np
+
+    n, dim = x.shape
     dsub = dim // m
     rng = np.random.default_rng(seed)
     books = []
@@ -144,15 +157,16 @@ def train_pq_codebook(
                 + (cents * cents).sum(axis=1)
             )
             assign = d2.argmin(axis=1)
-            for j in range(k):
-                mask = assign == j
-                if mask.any():
-                    cents[j] = sub[mask].mean(axis=0)
-                else:
-                    # dead codeword: re-seed from the farthest point
-                    cents[j] = sub[d2.min(axis=1).argmax()]
+            # np.add.at sums in row order, as a masked mean does, so
+            # the means are bit-identical to a per-codeword loop's
+            counts = np.bincount(assign, minlength=k)
+            sums = np.zeros_like(cents)
+            np.add.at(sums, assign, sub)
+            live = counts > 0
+            cents[live] = sums[live] / counts[live, None]
+            cents[~live] = sub[d2.min(axis=1).argmax()]
         books.append(tuple(tuple(float(v) for v in c) for c in cents))
-    return PQCodebook(dim=dim, m=m, ks=k, centroids=tuple(books))
+    return tuple(books)
 
 
 def pq_encode(
@@ -953,6 +967,20 @@ def pq_adc_topk(
 _PQ_SPEC_SCHEMA = "format string, dim int, m int, ks int, keep_vec boolean"
 
 
+def _write_codebook(spark, index_path: str, codebook: PQCodebook) -> None:
+    """Persist ``codebook`` as the ``{index_path}_codebook`` sidecar, one
+    row per (subspace, code)."""
+    write_sidecar(
+        spark, f"{index_path}_codebook",
+        [
+            (i, j, list(codebook.centroids[i][j]))
+            for i in range(codebook.m)
+            for j in range(codebook.ks)
+        ],
+        "sub int, code int, centroid array<double>",
+    )
+
+
 def save_pq_index(
     df: DataFrame,
     index_path: str,
@@ -992,19 +1020,12 @@ def save_pq_index(
     pq_encode(
         df, codebook, id_col=id_col, vec_col=vec_col, keep_vec=keep_vec
     ).write.mode("overwrite").parquet(index_path)
-    cb_rows = [
-        (i, j, list(codebook.centroids[i][j]))
-        for i in range(codebook.m)
-        for j in range(codebook.ks)
-    ]
-    local_df(
-        spark, cb_rows, "sub int, code int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_codebook")
-    local_df(
-        spark,
+    _write_codebook(spark, index_path, codebook)
+    write_sidecar(
+        spark, f"{index_path}_spec",
         [("pq-v1", codebook.dim, codebook.m, codebook.ks, keep_vec)],
         _PQ_SPEC_SCHEMA,
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_spec")
+    )
     return codebook
 
 
@@ -1295,24 +1316,18 @@ def save_ivf_pq_index(
     if not keep_vec:
         encoded = encoded.drop(vec_col)
     encoded.write.mode("overwrite").partitionBy("cell").parquet(index_path)
-    local_df(
-        spark, centroids, "cid int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_centroids")
-    cb_rows = [
-        (i, j, list(codebook.centroids[i][j]))
-        for i in range(codebook.m)
-        for j in range(codebook.ks)
-    ]
-    local_df(
-        spark, cb_rows, "sub int, code int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_codebook")
-    local_df(
-        spark,
+    write_sidecar(
+        spark, f"{index_path}_centroids", centroids,
+        "cid int, centroid array<double>",
+    )
+    _write_codebook(spark, index_path, codebook)
+    write_sidecar(
+        spark, f"{index_path}_spec",
         [("ivf-pq-v1", codebook.dim, codebook.m, codebook.ks,
           len(centroids), keep_vec, mode, sim_id, residuals,
           encoding)],
         _IVF_PQ_SPEC_SCHEMA,
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_spec")
+    )
     return centroids, codebook
 
 

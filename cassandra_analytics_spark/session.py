@@ -25,6 +25,11 @@ def get_session(
     coalescing + skew-join splitting), broadcast threshold generous enough
     to broadcast dimension tables, Arrow on for any pandas interchange,
     UTC session timezone so timestamps agree with external oracles.
+
+    Python workers fork from :mod:`pyworker_daemon`, which keeps each
+    task from re-reading every zip archive on the import path. Its
+    package's parent directory leads ``spark.executorEnv.PYTHONPATH``,
+    so workers import it from any working directory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -73,6 +78,14 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for key, value in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    package_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (package_root, conf.get("spark.executorEnv.PYTHONPATH")) if p
+    )
+    conf.setdefault(
+        "spark.python.daemon.module", "cassandra_analytics_spark.pyworker_daemon"
+    )
+    for key, value in conf.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

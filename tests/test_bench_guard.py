@@ -154,7 +154,8 @@ def test_prior_extended_and_classify_extended():
 
 def test_final_record_echoes_run_conditions(spark):
     """The final line keeps its keys and adds the run conditions: the N
-    of ``local[N]`` as ``cpus`` and Spark's ``defaultParallelism``."""
+    of ``local[N]`` as ``cpus``, Spark's ``defaultParallelism`` and the
+    Python worker daemon module as ``python_daemon``."""
     from bench import _final_record
 
     rec = _final_record(spark, {"q1": 1.25, "q2": 0.5}, 3, 0.1, 0)
@@ -163,3 +164,4 @@ def test_final_record_echoes_run_conditions(spark):
     master = spark.sparkContext.master
     assert rec["cpus"] == int(master[master.index("[") + 1:-1])
     assert rec["defaultParallelism"] == spark.sparkContext.defaultParallelism
+    assert rec["python_daemon"] == "cassandra_analytics_spark.pyworker_daemon"

@@ -49,6 +49,52 @@ def test_training_is_deterministic_and_shaped(spark):
         )
 
 
+def _pq_kmeans_loop(x, m, k, iterations, seed):
+    """The per-codeword loop form of the k-means update: one mask and
+    one mean per codeword, a dead codeword re-seeded from the farthest
+    point."""
+    import numpy as np
+
+    n, dim = x.shape
+    dsub = dim // m
+    rng = np.random.default_rng(seed)
+    books = []
+    for i in range(m):
+        sub = x[:, i * dsub:(i + 1) * dsub]
+        cents = sub[rng.choice(n, size=k, replace=False)].copy()
+        for _ in range(max(1, iterations)):
+            d2 = (
+                (sub * sub).sum(axis=1, keepdims=True)
+                - 2.0 * sub @ cents.T
+                + (cents * cents).sum(axis=1)
+            )
+            assign = d2.argmin(axis=1)
+            for j in range(k):
+                mask = assign == j
+                if mask.any():
+                    cents[j] = sub[mask].mean(axis=0)
+                else:
+                    cents[j] = sub[d2.min(axis=1).argmax()]
+        books.append(tuple(tuple(float(v) for v in c) for c in cents))
+    return tuple(books)
+
+
+def test_kmeans_update_is_bit_identical_to_the_loop_form():
+    """The vectorized codeword update gives the loop form's codebook bit
+    for bit, also when most codewords die: a sample with fewer distinct
+    points than codewords."""
+    import numpy as np
+
+    from cassandra_analytics_spark.operators.pq import _pq_kmeans
+
+    for seed in (1, 2, 3):
+        x = np.random.default_rng(seed).normal(size=(600, 32))
+        assert _pq_kmeans(x, 8, 32, 6, seed) == _pq_kmeans_loop(x, 8, 32, 6, seed)
+    few = np.repeat(np.random.default_rng(4).normal(size=(5, 8)), 12, axis=0)
+    assert len(np.unique(few, axis=0)) < 16
+    assert _pq_kmeans(few, 2, 16, 8, 4) == _pq_kmeans_loop(few, 2, 16, 8, 4)
+
+
 def test_encode_codes_nulls_and_dim_guard(spark):
     rows, df = _corpus(spark, n=100)
     cb = train_pq_codebook(df, m=4, ks=16, seed=3)

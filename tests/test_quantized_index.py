@@ -624,6 +624,91 @@ def test_sidecar_failures_keep_their_outcomes(spark, tmp_path):
     assert (spec["assignment"], spec["encoding"]) == ("expr", "raw")
 
 
+def test_driver_written_sidecars_match_spark_written(spark, tmp_path):
+    """``fs.write_sidecar`` writes every sidecar kind so that both
+    ``read_sidecar`` and ``spark.read.parquet`` see what they saw of
+    the Spark write of the same rows: LSH, IVF, PQ and IVF-PQ specs
+    (the empty-corpus specs' ``dim`` is NULL), centroid tables (one of
+    them empty) and a codebook."""
+    from cassandra_analytics_spark.fs import read_sidecar, write_sidecar
+    from cassandra_analytics_spark.local_data import local_df
+    from cassandra_analytics_spark.operators.ann_index import (
+        _IVF_SPEC_SCHEMA,
+        _LSH_SPEC_SCHEMA,
+    )
+    from cassandra_analytics_spark.operators.pq import (
+        _IVF_PQ_SPEC_SCHEMA,
+        _PQ_SPEC_SCHEMA,
+    )
+
+    rng = random.Random(5)
+    centroids = "cid int, centroid array<double>"
+    kinds = {
+        "lsh_spec": ([("ann-lsh-v1", 4, 42, 8)], _LSH_SPEC_SCHEMA),
+        "lsh_empty_spec": ([("ann-lsh-v1", 4, 42, None)], _LSH_SPEC_SCHEMA),
+        "ivf_spec": (
+            [("ivf-v1", "expr", None, 8, 4, 7, True)], _IVF_SPEC_SCHEMA
+        ),
+        "ivf_empty_spec": (
+            [("ivf-v1", "kernel", "float", None, 0, 7, False)],
+            _IVF_SPEC_SCHEMA,
+        ),
+        "ivf_centroids": (
+            [(c, [rng.gauss(0, 1) for _ in range(8)]) for c in range(4)],
+            centroids,
+        ),
+        "ivf_empty_centroids": ([], centroids),
+        "pq_codebook": (
+            [(i, j, [rng.gauss(0, 1) for _ in range(2)])
+             for i in range(4) for j in range(8)],
+            "sub int, code int, centroid array<double>",
+        ),
+        "pq_spec": ([("pq-v1", 8, 4, 8, False)], _PQ_SPEC_SCHEMA),
+        "ivfpq_spec": (
+            [("ivf-pq-v1", 8, 4, 8, 4, True, "expr", None, True, "residual")],
+            _IVF_PQ_SPEC_SCHEMA,
+        ),
+    }
+    for name, (rows, schema) in kinds.items():
+        ours, theirs = str(tmp_path / f"d_{name}"), str(tmp_path / f"s_{name}")
+        write_sidecar(spark, ours, rows, schema)
+        local_df(spark, rows, schema).coalesce(1).write.parquet(theirs)
+        assert read_sidecar(spark, ours) == read_sidecar(spark, theirs), name
+        ours_df, theirs_df = spark.read.parquet(ours), spark.read.parquet(theirs)
+        assert ours_df.schema == theirs_df.schema, name
+        assert ours_df.collect() == theirs_df.collect(), name
+    # a rewrite replaces the directory's one data file
+    write_sidecar(spark, str(tmp_path / "d_pq_spec"),
+                  [("pq-v1", 8, 4, 8, True)], _PQ_SPEC_SCHEMA)
+    assert read_sidecar(spark, str(tmp_path / "d_pq_spec")) == [
+        {"format": "pq-v1", "dim": 8, "m": 4, "ks": 8, "keep_vec": True}
+    ]
+
+
+def test_sidecar_over_64kb_reads_like_spark(spark, tmp_path):
+    """A sidecar file larger than 64 KB comes back over py4j in many
+    chunks and still reads the rows the Spark read does."""
+    import os
+
+    from cassandra_analytics_spark.fs import read_sidecar, write_sidecar
+
+    rng = random.Random(9)
+    rows = [
+        (i, j, [rng.gauss(0, 1) for _ in range(8)])
+        for i in range(16)
+        for j in range(256)
+    ]
+    path = str(tmp_path / "big_codebook")
+    write_sidecar(
+        spark, path, rows, "sub int, code int, centroid array<double>"
+    )
+    (data,) = [f for f in os.listdir(path) if not f.startswith(("_", "."))]
+    assert os.path.getsize(os.path.join(path, data)) > 64 * 1024
+    got = read_sidecar(spark, path)
+    assert len(got) == len(rows)
+    assert got == _spark_sidecar_rows(spark, path)
+
+
 def test_string_and_long_ids_rescore_identically(spark, tmp_path):
     """The survivor ``IN`` list is typed like the id column: a layout
     with STRING ids (holding a quote and a backslash) returns the same
